@@ -102,6 +102,28 @@ object Bench {
   private def jsonMap(m: Seq[(String, Double)]): String =
     m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
+  /** Length cap of the one-line summary: whoever parses a run reads only
+    * the tail of stdout, and the headline panel is fixed-size, so a longer
+    * line means a structural change. */
+  private[graft] val SummaryCap = 1500
+
+  /** The one-line JSON summary from (field, JSON value) pairs. Past
+    * [[SummaryCap]] it drops `heavy_cpu_s` (bench_details.json carries the
+    * same numbers) and warns on stderr: a finished multi-hour run must not
+    * abort while it writes its report. */
+  private[graft] def summaryLine(fields: Seq[(String, String)]): String = {
+    def join(fs: Seq[(String, String)]) =
+      fs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val full = join(fields)
+    if (full.length <= SummaryCap) full
+    else {
+      val short = join(fields.filterNot(_._1 == "heavy_cpu_s"))
+      System.err.println(s"[bench] WARNING: summary line is ${full.length} chars, over the " +
+        s"$SummaryCap cap; dropped heavy_cpu_s (see the details file), now ${short.length} chars")
+      short
+    }
+  }
+
   /** Fixed-work CPU calibration (r14 verdict item 4): a Spark-free,
     * allocation-light, CACHE-RESIDENT 64-bit mixing spin over a 64 KB
     * constant buffer, timed in THREAD-CPU seconds for a constant iteration
@@ -767,40 +789,36 @@ object Bench {
     val byName = results.toMap
     val headline = headlinePanel.filter(byName.contains).map(n => shortId(n) -> byName(n).sec)
     val heavyTotal = heavy.map(_._2.sec).filter(_ >= 0).sum
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
-        s""","queries":${jsonMap(headline)}""" +
-        // inventory size, NOT results.size — the zpanel_build line is a
-        // bench accounting line, not an inventory entry
-        s""","sf":"$sfDir","n_queries":${first.size}""" +
-        // failures are excluded from `value`, so they must be visible
-        // here; normally [] — a populated list IS the red flag
-        s""","failed":${failedIds.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-        s""","heavy_10x_total":${fmt(heavyTotal)}""" +
-        // the Σcpu_s the committed band is stated in (r13 verdict item 5);
-        // entries missing from those sums (attribution lost in every
-        // pass) are surfaced, not silently excluded — normally []
-        s""","total_cpu_s":${fmt(cpuTotal(results))}""" +
-        s""","heavy_total_cpu_s":${fmt(cpuTotal(heavy))}""" +
-        // the fixed-work hotness divisor the adjudicator normalizes by
-        s""","calib_cpu_s":${fmt(calibCpu)}""" +
-        s""","unattributed":${unattributedIds.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-        s""","lineage_plans_per_sec":${jsonMap(lineage)}""" +
-        // r21 (ADDITIONS-ONLY, verdict item 7): the driver's scaling block
-        // is wall-based, and at sf0.1 every headline wall is job-launch-
-        // floored (8-vs-32-core ratios ≈ 1 by construction) — the compute
-        // that actually parallelizes lives in the heavy tier's cpu_s,
-        // which only bench_details.json carried. Emitting the per-entry
-        // heavy cpu_s here puts compute scaling ON the machine-readable
-        // line at both core counts. Short ids; build lines excluded (they
-        // are bench accounting, not inventory entries).
-        s""","heavy_cpu_s":${jsonMap(
-          heavy.filter(h => h._2.cpuSec >= 0 && !h._1.endsWith("_build"))
-            .map { case (k, v) => shortId(k) -> v.cpuSec })}""" +
-        s""","details":"$detailsFile"}"""
-    require(line.length <= 1500,
-      s"bench line grew to ${line.length} chars — the headline panel is " +
-        "fixed-size, so this means a structural change; keep it short")
+    val line = summaryLine(Seq(
+      "metric" -> "\"total\"", "value" -> fmt(total), "unit" -> "\"sec\"",
+      "queries" -> jsonMap(headline),
+      // inventory size, NOT results.size — the zpanel_build line is a
+      // bench accounting line, not an inventory entry
+      "sf" -> s""""$sfDir"""", "n_queries" -> first.size.toString,
+      // failures are excluded from `value`, so they must be visible
+      // here; normally [] — a populated list IS the red flag
+      "failed" -> failedIds.map("\"" + _ + "\"").mkString("[", ",", "]"),
+      "heavy_10x_total" -> fmt(heavyTotal),
+      // the Σcpu_s the committed band is stated in; entries missing from
+      // those sums (attribution lost in every pass) are surfaced in
+      // `unattributed`, not silently excluded — normally []
+      "total_cpu_s" -> fmt(cpuTotal(results)),
+      "heavy_total_cpu_s" -> fmt(cpuTotal(heavy)),
+      // the fixed-work hotness divisor the adjudicator normalizes by
+      "calib_cpu_s" -> fmt(calibCpu),
+      "unattributed" -> unattributedIds.map("\"" + _ + "\"").mkString("[", ",", "]"),
+      "lineage_plans_per_sec" -> jsonMap(lineage),
+      // at sf0.1 every headline wall is job-launch-floored (8-vs-32-core
+      // ratios ≈ 1 by construction); the compute that parallelizes lives
+      // in the heavy tier's cpu_s, so the per-entry heavy cpu_s puts
+      // compute scaling on the machine-readable line at both core counts.
+      // Short ids; build lines excluded (they are bench accounting, not
+      // inventory entries). bench_details.json carries the same numbers,
+      // which is why summaryLine may drop this field.
+      "heavy_cpu_s" -> jsonMap(
+        heavy.filter(h => h._2.cpuSec >= 0 && !h._1.endsWith("_build"))
+          .map { case (k, v) => shortId(k) -> v.cpuSec }),
+      "details" -> s""""$detailsFile""""))
     spark.stop()
     // nothing may print AFTER the line — with the raw pass-through output
     // strategy (build.sbt) even the JVM-exit shutdown hooks' INFO lines

@@ -31,21 +31,26 @@ object FlowAnalysis {
   case class Binding(nodeId: String, idx: Int)
 
   /** Result of one analysis pass. `bridges` are equi-join column pairs used
-    * only by contracted mode (reference: SQLFlow.scala:638-657). */
+    * only by contracted mode (reference: SQLFlow.scala:638-657).
+    * `statLeaves` maps each node whose props were filled by [[stats]] to
+    * the leaf they were read from; no other node gets props. */
   case class Graph(
       nodes: Seq[FlowNode],
       edges: Seq[FlowEdge],
       rootId: String,
-      bridges: Seq[(Binding, Binding)])
+      bridges: Seq[(Binding, Binding)],
+      statLeaves: Map[String, LeafNode] = Map.empty)
 
   /** Shared across analyses that merge into one graph, so plan-node uids
-    * stay unique; deterministic (no random digests). */
-  class Counter { private var i = 0; def next(): Int = { i += 1; i } }
+    * stay unique; deterministic (no random digests). `value` is the last
+    * uid number handed out. */
+  class Counter { private[graft] var value = 0; def next(): Int = { value += 1; value } }
 
   private class Ctx(counter: Counter) {
     val nodes = mutable.ArrayBuffer[FlowNode]()
     val edges = mutable.ArrayBuffer[FlowEdge]()
     val bridges = mutable.ArrayBuffer[(Binding, Binding)]()
+    val statLeaves = mutable.Map[String, LeafNode]()
     def nextId(name: String): String = f"${name}_${counter.next()}%07x"
   }
 
@@ -67,7 +72,8 @@ object FlowAnalysis {
         case None => ctx.edges += FlowEdge(planNodeId, None, rootId, Some(i))
       }
     }
-    canonicalize(Graph(ctx.nodes.toSeq, ctx.edges.toSeq, rootId, ctx.bridges.toSeq))
+    canonicalize(Graph(ctx.nodes.toSeq, ctx.edges.toSeq, rootId, ctx.bridges.toSeq,
+      ctx.statLeaves.toMap))
   }
 
   /** Deterministic column order for PLAN-INTERNAL nodes (r17): the
@@ -124,7 +130,7 @@ object FlowAnalysis {
           remap.get(x.nodeId).map(inv => x.copy(idx = inv(x.idx))).getOrElse(x)
         (mb(a), mb(b))
       }
-      Graph(nodes, edges, g.rootId, bridges)
+      g.copy(nodes = nodes, edges = edges, bridges = bridges)
     }
   }
 
@@ -231,9 +237,8 @@ object FlowAnalysis {
         val attrs = fullSchema.getOrElse(leaf.output.map(_.name))
         // a stable-uid table scanned twice in one plan is ONE graph node
         if (!(stable && ctx.nodes.exists(_.uniqueId == id))) {
-          val node = FlowNode(id, ident, attrs, schemaDDL(leaf), tpe, isCached)
-          stats(leaf).foreach { case (k, v) => node.props(k) = v }
-          ctx.nodes += node
+          ctx.nodes += FlowNode(id, ident, attrs, schemaDDL(leaf), tpe, isCached, statProps(leaf))
+          ctx.statLeaves(id) = leaf
         } else if (isCached) {
           ctx.nodes.zipWithIndex.find(_._1.uniqueId == id).foreach { case (n, i) =>
             ctx.nodes(i) = n.copy(isCached = true)
@@ -298,6 +303,11 @@ object FlowAnalysis {
       case other => other.getClass.getSimpleName.stripSuffix("$")
     }
   }
+
+  /** A leaf node's props: its statistics, read when called (a refreshed
+    * table reports new sizes through the same leaf). */
+  private[graft] def statProps(leaf: LeafNode): mutable.Map[String, String] =
+    mutable.Map.empty[String, String] ++= stats(leaf)
 
   private def stats(leaf: LeafNode): Seq[(String, String)] =
     try {

@@ -5,7 +5,10 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession, Dataset => ClassicDataset}
+import org.apache.spark.sql.internal.SessionState
 
 /** Public lineage API — same surface as the reference
   * (SQLFlow.scala:946-966, 856-881): save/print for a whole catalog or a
@@ -29,13 +32,39 @@ object SQLFlow {
     if (contracted) FlowAnalysis.contract(g) else (g.nodes, g.edges)
   }
 
+  /** One temp view's uncontracted lineage graph, kept on the view's stored
+    * analyzed plan under [[ViewMemoTag]] and freed with it. Every field but
+    * `graph` is an input the graph is a function of; the cache manager's
+    * contents are one more, which is why an entry is only stored and only
+    * used while no data is cached. */
+  private[graft] final case class ViewMemo(
+      name: String,
+      input: LogicalPlan,
+      state: java.lang.ref.WeakReference[SessionState],
+      confs: Map[String, String],
+      extraRules: Seq[Rule[LogicalPlan]],
+      counterStart: Int,
+      counterEnd: Int,
+      graph: FlowAnalysis.Graph)
+
+  private[graft] val ViewMemoTag = TreeNodeTag[ViewMemo]("sqlflow.viewLineage")
+
   /** Lineage graph of every (temp) view in the session catalog
     * (reference EP1: SQLFlow.scala:61-189). View-on-view references are cut
-    * at view boundaries via [[ViewRef]] substitution by semantic hash. */
+    * at view boundaries via [[ViewRef]] substitution by semantic hash.
+    *
+    * A temp view whose stored plan is analyzed (DataFrame-created) keeps
+    * its per-view graph in a [[ViewMemo]]; a later call reuses it, without
+    * optimizing or walking the plan again, when every input of the graph is
+    * unchanged: the optimizer input, the view name, the session state, the
+    * set confs, the extra optimizer rules and the uid counter's start, with
+    * the cache manager empty. Persistent and SQL-text views are re-parsed
+    * on every call, so they never use one. */
   def catalogGraph(spark: SparkSession, contracted: Boolean = false)
       : (Seq[FlowNode], Seq[FlowEdge]) = {
     val session = spark.asInstanceOf[ClassicSession]
     val catalog = session.sessionState.catalog
+    val cacheManager = session.sharedState.cacheManager
 
     // 1. gather analyzed plans: persistent views (re-parsed from viewText)
     //    and temp views (pre-analyzed)
@@ -57,14 +86,16 @@ object SQLFlow {
       }.toOption.toSeq
       // qualify views outside the current database so same-named views in
       // different databases get distinct node uids
-    } yield (if (db == currentDb) ident.table else s"$db.${ident.table}", plan)
+    } yield (if (db == currentDb) ident.table else s"$db.${ident.table}", plan, false)
 
     // SQL-created temp views store the PARSED plan (viewText is re-resolved
     // on access since Spark 3.1); DataFrame-created ones store analyzed
-    // plans — normalize by analyzing when unresolved
-    def analyzed(p: LogicalPlan): Option[LogicalPlan] =
-      if (p.resolved) Some(p)
+    // plans — normalize by analyzing when unresolved. The flag marks the
+    // catalog's stored plan object, the only one a memo can live on.
+    def analyzed(name: String, p: LogicalPlan): Option[(String, LogicalPlan, Boolean)] =
+      if (p.resolved) Some((name, p, true))
       else scala.util.Try(session.sessionState.executePlan(p).analyzed).toOption
+        .map((name, _, false))
 
     // SORTED: getTempViewNames() iterates the catalog's hash map, whose
     // order depends on its insertion/rehash HISTORY (views created earlier
@@ -74,7 +105,7 @@ object SQLFlow {
     // on what the session did before (r16: surfaced as golden drift when
     // two new corpus files ran ahead of existing ones)
     val temps = catalog.getTempViewNames().sorted.flatMap { name =>
-      catalog.getTempView(name).flatMap(v => analyzed(v.child)).map(name -> _)
+      catalog.getTempView(name).flatMap(v => analyzed(name, v.child))
     }
     // global temp views too (the reference does NOT support these —
     // README.md:273); named with their database prefix
@@ -84,14 +115,14 @@ object SQLFlow {
     // global manager's hash map, so unsorted order is session-history-
     // dependent and would drift the shared-counter uids (r16 advice)
     val globals = catalog.globalTempViewManager.listViewNames("*").sorted.flatMap { name =>
-      catalog.getGlobalTempView(name).flatMap(v => analyzed(v.child)).map(s"$globalDb.$name" -> _)
+      catalog.getGlobalTempView(name).flatMap(v => analyzed(s"$globalDb.$name", v.child))
     }
-    val all: Seq[(String, LogicalPlan)] = persistent ++ temps ++ globals
+    val all: Seq[(String, LogicalPlan, Boolean)] = persistent ++ temps ++ globals
 
     // 2. semanticHash → view name, for subplan-to-view substitution
     //    (reference: SQLFlow.scala:94-96,150-154); sorted for determinism
     val hashToView: Map[Int, String] =
-      all.sortBy(_._1).map { case (n, p) => p.semanticHash() -> n }.toMap
+      all.sortBy(_._1).map { case (n, p, _) => p.semanticHash() -> n }.toMap
 
     // trivial subplans (bare scans / alias-only wrappers) are excluded from
     // substitution — two views that are both just "scan t" must not collapse
@@ -108,7 +139,9 @@ object SQLFlow {
     val viewNames = all.map(_._1).toSet
     val counter = new FlowAnalysis.Counter
     val cachedFn = isCachedFn(session)
-    val graphs = all.map { case (name, analyzed) =>
+    val confs = session.sessionState.conf.getAllConfs
+    val extraRules = session.experimental.extraOptimizations
+    val graphs = all.map { case (name, analyzed, stored) =>
       // cut at OTHER views' boundaries — BY NAME for explicit view
       // references (SubqueryAlias/View wrappers in analyzed plans), by
       // semantic hash only as the DataFrame-chain fallback (reference:
@@ -132,8 +165,33 @@ object SQLFlow {
         val mapped = p.mapChildren(markCached)
         if (isC) CachedMarker(mapped) else mapped
       }
-      val optimized = session.sessionState.optimizer.execute(markCached(substituted))
-      val g = FlowAnalysis.analyze(optimized, name, FlowNodeType.View, cachedFn, counter)
+      val emptyCache = cacheManager.isEmpty
+      val input = markCached(substituted)
+      val start = counter.value
+      val memo =
+        if (stored && emptyCache) analyzed.synchronized(analyzed.getTagValue(ViewMemoTag)) else None
+      val hit = memo.filter(m => m.name == name && m.counterStart == start &&
+        (m.state.get eq session.sessionState) && m.confs == confs &&
+        m.extraRules == extraRules && ((m.input eq input) || m.input == input))
+      val g = hit match {
+        case Some(m) =>
+          counter.value = m.counterEnd
+          // callers may mutate props: hand out fresh maps, with table
+          // statistics read now, as the miss below would
+          m.graph.copy(nodes = m.graph.nodes.map { n =>
+            n.copy(props = m.graph.statLeaves.get(n.uniqueId)
+              .map(FlowAnalysis.statProps).getOrElse(mutable.Map.empty))
+          })
+        case None =>
+          val optimized = session.sessionState.optimizer.execute(input)
+          val g = FlowAnalysis.analyze(optimized, name, FlowNodeType.View, cachedFn, counter)
+          if (stored && emptyCache && cacheManager.isEmpty) analyzed.synchronized {
+            analyzed.setTagValue(ViewMemoTag, ViewMemo(name, input,
+              new java.lang.ref.WeakReference(session.sessionState), confs, extraRules,
+              start, counter.value, g))
+          }
+          g
+      }
       if (contracted) { val (n, e) = FlowAnalysis.contract(g); FlowAnalysis.Graph(n, e, g.rootId, Nil) }
       else g
     }
@@ -154,10 +212,12 @@ object SQLFlow {
     (byId.values.toSeq, edges.toSeq)
   }
 
+  /** With nothing cached the answer is false for every plan; skipping the
+    * lookup then saves a plan normalization per plan node. */
   private def isCachedFn(session: ClassicSession): LogicalPlan => Boolean = { plan =>
-    scala.util.Try(
-      session.sharedState.cacheManager.lookupCachedData(session, plan).isDefined
-    ).getOrElse(false)
+    val cacheManager = session.sharedState.cacheManager
+    !cacheManager.isEmpty &&
+      scala.util.Try(cacheManager.lookupCachedData(session, plan).isDefined).getOrElse(false)
   }
 
   // -------------------------------------------------------------------

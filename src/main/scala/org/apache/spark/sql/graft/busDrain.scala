@@ -32,7 +32,8 @@ object ListenerBusDrain {
     * exists to manage: a dropped/stalled CollectMetrics event would hang
     * the whole bench run, and Bench.timed's Throwable catch cannot rescue
     * a hang, only an exception (r20 ADVICE). Bench polls this in a
-    * bounded loop instead. */
+    * bounded loop instead. Empty until the metrics arrive: `getOrEmpty`
+    * itself reads the schema of a row that is not there yet and throws. */
   def observed(obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    obs.getOrEmpty
+    obs.getRowOrEmpty.map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq)).getOrElse(Map.empty)
 }

@@ -47,6 +47,9 @@ class TPCDSFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.beforeAll()
     // drop leftovers from a crashed prior run, then create schema-only tables
     tableNames.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    // the catalog lineage memo is only used while nothing is cached, and
+    // suites sharing this session may leave data cached
+    spark.catalog.clearCache()
     schemaStatements.foreach(spark.sql(_))
   }
 
@@ -70,8 +73,12 @@ class TPCDSFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
         try {
           val query = Files.readString(input.toPath)
           spark.sql(query).createOrReplaceTempView("v")
+          // plain runs twice: the first call stores the view's lineage memo,
+          // the contracted call and the second plain call reuse it, so the
+          // goldens are checked on a miss and on a hit
           Seq(false -> s"results/$name.dot",
-              true -> s"results/$name.contracted.dot").foreach { case (contracted, rel) =>
+              true -> s"results/$name.contracted.dot",
+              false -> s"results/$name.dot").foreach { case (contracted, rel) =>
             val dot = SQLFlow.printAsSQLFlow(spark, contracted = contracted)
             val goldenFile = new File(base, rel)
             val normalized = dot.linesIterator.map(_.trim).filter(_.nonEmpty)
