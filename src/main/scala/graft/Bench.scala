@@ -5,6 +5,8 @@ import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.QueryDsl.readParquet
+
 /** Benchmark main. Emits ONE compact machine-parseable JSON line as the
   * LAST stdout line — the driver keeps only the last ~2000 chars of the
   * run's stdout (stderr interleaved), so the line is FIXED-SIZE: totals,
@@ -68,6 +70,8 @@ object Bench {
       gcMs: Long, peakMemMb: Long, recRead: Long, shufRec: Long, shufMb: Long,
       rows: Long, attrSec: Double)
   private val Failed = EntryStats(-1.0, 0.0, 0L, 0L, 0L, 0L, 0L, 0L, -1L, -1.0)
+  /** A build line's row count: it has no single result cardinality. */
+  private val NoRows: () => Long = () => -1L
 
   /** Accumulates stage-level CPU/spill/GC/peak-mem/record-counters between
     * reset() and snap(). Registered once; reset per timed entry after a
@@ -186,7 +190,7 @@ object Bench {
     // to one output file, changing every heavy entry's scan parallelism —
     // a corpus-layout change masquerading as a build speedup.)
     def writeDocs(): Unit = {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = readParquet(spark, s"$sfDir/documents.parquet")
       (0 until copies).map { i =>
         val text = if (i == 0) col("text") else regexp_replace(col("text"), lit(" "), lit(s" c$i"))
         docs.select((col("doc_id") + lit(i * 100000000L)).as("doc_id"), text.as("text"),
@@ -195,7 +199,7 @@ object Bench {
         .write.mode("overwrite").parquet(tmp.resolve("documents.parquet").toString)
     }
     def writeEmb(): Unit = {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb = readParquet(spark, s"$sfDir/embeddings.parquet")
       (0 until copies).map { i =>
         emb.select((col("vec_id") + lit(i * 100000000L)).as("vec_id"),
           col("embedding"), col("label"))
@@ -207,7 +211,7 @@ object Bench {
     // a real 10× corpus — shared key values would instead multiply join
     // multiplicity by `copies` and quadratically inflate the join tier.
     def scaled(table: String, keyCols: String*): Unit = {
-      val df = spark.read.parquet(s"$sfDir/$table.parquet")
+      val df = readParquet(spark, s"$sfDir/$table.parquet")
       (0 until copies).map { i =>
         keyCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(i * 100000000L)))
       }.reduce(_.unionAll(_))
@@ -220,10 +224,12 @@ object Bench {
       () => scaled("lineitem", "l_orderkey", "l_suppkey"),
       () => scaled("customer", "c_custkey"),
       () => scaled("events", "event_id", "user_id"))
-    import scala.concurrent.{Await, ExecutionContext, Future}
+    // blocking: each build waits on Spark jobs, so the global pool may add
+    // threads instead of starving other work queued on it
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(jobs)(j => Future(j())), Duration.Inf)
+    Await.result(Future.traverse(jobs)(j => Future(blocking(j()))), Duration.Inf)
     tmp.toString
   }
 
@@ -334,7 +340,7 @@ object Bench {
     // executor-pool startup, file-index listing, or first-job codegen costs
     spark.range(1000).selectExpr("sum(id)").collect() // bounded: 1 row by aggregation
     Seq("documents", "lineitem", "orders", "events", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
+      try readParquet(spark, s"$sfDir/$t.parquet").limit(1).count()
       catch { case _: Throwable => }
     }
     val names = SparkEntry.queries.keys.toSeq
@@ -369,9 +375,11 @@ object Bench {
     // timed-out PRE-drain would otherwise sum a prior entry's straggler
     // stages into this one — over-attribution, the exact misadjudication
     // this telemetry exists to prevent.
-    // body returns the entry's output row count (-1 for build lines that
-    // have no single result cardinality)
-    def timed(name: String)(body: => Long): EntryStats = {
+    // Only body is on the clock. It returns the entry's output row count
+    // as a thunk that runs AFTER the clock stops, so waiting for a metric
+    // to arrive is never timed (NoRows for build lines, which have no
+    // single result cardinality).
+    def timed(name: String)(body: => () => Long): EntryStats = {
       val pre = drainBus() // a prior entry's stragglers must not leak in
       telemetry.reset()
       val t0 = System.nanoTime()
@@ -379,15 +387,17 @@ object Bench {
       // (kept out of the total below) so a broken query reads as broken
       // in round-over-round compares instead of as a huge speedup
       val rowsOpt =
-        try Some(body)
-        catch { case e: Throwable =>
+        try {
+          val rows = body
+          val sec = (System.nanoTime() - t0) / 1e9
+          Some((sec, rows()))
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           None
         }
       rowsOpt match {
         case None => Failed
-        case Some(rows) =>
-          val sec = (System.nanoTime() - t0) / 1e9
+        case Some((sec, rows)) =>
           if (pre && drainBus()) telemetry.snap(sec, rows)
           else EntryStats(sec, -1.0, -1L, -1L, -1L, -1L, -1L, -1L, rows, -1.0)
       }
@@ -415,27 +425,29 @@ object Bench {
         val obs = org.apache.spark.sql.Observation()
         fn(spark, dir).observe(obs, count(lit(1)).as("rows"))
           .write.format("noop").mode("overwrite").save()
-        // The CollectMetrics result arrives via the async listener bus, so
-        // an unbounded obs.get would HANG the whole bench on a dropped or
-        // stalled event — and timed()'s Throwable catch cannot rescue a
-        // hang, only an exception (r20 ADVICE). save() has already
-        // returned, so the metric is normally available immediately;
-        // poll getOrEmpty briefly and surface a drop as rows = -1 (the
-        // same "don't trust this column" sentinel the build lines use)
-        // instead of blocking forever — the wall time stays trustworthy.
-        import org.apache.spark.sql.graft.ListenerBusDrain.observed
-        var waitedMs = 0
-        var m = observed(obs)
-        while (m.isEmpty && waitedMs < 10000) {
-          Thread.sleep(50)
-          waitedMs += 50
-          m = observed(obs)
-        }
-        m.get("rows") match {
-          case Some(n: Long) => n
-          case _ =>
-            System.err.println(s"[bench] $name: observe metric not delivered in 10 s")
-            -1L
+        // The clock stops here, when save() returns. The CollectMetrics
+        // result arrives via the async listener bus, so an unbounded
+        // obs.get would HANG the whole bench on a dropped or stalled event
+        // — and timed()'s Throwable catch cannot rescue a hang, only an
+        // exception (r20 ADVICE). The metric is normally available
+        // immediately; poll getOrEmpty briefly, outside the clock, and
+        // surface a drop as rows = -1 (the same "don't trust this column"
+        // sentinel the build lines use) instead of blocking forever.
+        () => {
+          import org.apache.spark.sql.graft.ListenerBusDrain.observed
+          var waitedMs = 0
+          var m = observed(obs)
+          while (m.isEmpty && waitedMs < 10000) {
+            Thread.sleep(50)
+            waitedMs += 50
+            m = observed(obs)
+          }
+          m.get("rows") match {
+            case Some(n: Long) => n
+            case _ =>
+              System.err.println(s"[bench] $name: observe metric not delivered in 10 s")
+              -1L
+          }
         }
       }
     // a transiently-failed pass must not poison the min (math.min(v, -1)
@@ -496,7 +508,7 @@ object Bench {
       if (!inScope("z01_lineage_extraction")) Seq.empty
       else Seq("zpanel_build" -> timed("zpanel_build") {
         SparkEntry.prewarmLineagePanel(spark, sfDir)
-        -1L // a build line has no single result cardinality
+        NoRows
       })
     // r15 (r14 verdict item 2): force-build the shared + cross-pass
     // memoized artifacts BEFORE each timed main pass, as an explicitly
@@ -527,7 +539,7 @@ object Bench {
         if (withLsh) DedupQueries.prewarmLshIndex(spark, sfDir)
         if (withSem) DedupQueries.prewarmSemdedup(spark, sfDir)
         SimilarityQueries.prewarmMemos(spark, sfDir, inScope)
-        -1L // a build line has no single result cardinality
+        NoRows
       })
     }
     // THREE passes, report the min per query (r15 — was two): pass 1
@@ -624,7 +636,7 @@ object Bench {
                 // main tier's r14 false positive came from
                 if (withSem) graft.queries.DedupQueries.prewarmSemdedup(spark, heavyDir)
                 SimilarityQueries.prewarmMemos(spark, heavyDir, inHeavy)
-                -1L // a build line has no single result cardinality
+                NoRows
               })
             }
           sharedBuild ++ rotateBy(ordered, third * ordered.size / 3)
@@ -750,9 +762,11 @@ object Bench {
           ",\"shuffle_mb\":" + v.shufMb + ",\"rows\":" + v.rows +
           ",\"attr_sec\":" + v.attrSec + "}"
       }.mkString("{", ",", "}")
+    // timed_action names the timing protocol: noop_observe timed the
+    // observe-metric wait after save(); noop_observe_v2 stops at save()
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",
-         |"timed_action":"noop_observe",
+         |"timed_action":"noop_observe_v2",
          |"total_cpu_s":${fmt(cpuTotal(results))},"heavy_total_cpu_s":${fmt(cpuTotal(heavy))},
          |"calib_cpu_s":${fmt(calibCpu)},"calib_cpu_samples":${calibSamples.map(fmt).mkString("[", ",", "]")},
          |"failed":${failedIds.map("\"" + _ + "\"").mkString("[", ",", "]")},

@@ -67,12 +67,13 @@ object SparkEntry {
     * 15.8-16.5 s → ~6 s at identical cpu_s (the work is the same; only
     * the idle gaps overlap). */
   private[graft] def prewarmLineagePanel(s: SparkSession, dir: String): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
+    // blocking: each build waits on Spark jobs (see Bench.buildHeavyDir)
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     Await.result(
       Future.traverse(CheckpointedPanel.toSeq.sorted) { n =>
-        Future { panelMember(n, s, dir); () }
+        Future(blocking { panelMember(n, s, dir); () })
       }, Duration.Inf)
     ()
   }
@@ -109,19 +110,19 @@ object SparkEntry {
         "q80_textrank", "q82_triangle_count", "d16_substring_dup")
       // per-plan analysis is embarrassingly parallel (SURVEY §4): build and
       // analyze the panel concurrently on the driver; results sorted by name
-      import scala.concurrent.{Await, Future, ExecutionContext}
+      import scala.concurrent.{Await, Future, ExecutionContext, blocking}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
       val rows = Await.result(
         Future.traverse(panel.sorted) { name =>
-          Future {
+          Future(blocking {
             // one QueryExecution: optimize once, analyze twice; the three
             // eager-checkpoint members come from the memo (see panelMember)
             val df = panelMember(name, s, dir)
             val (nodes, edges) = SQLFlow.datasetGraph(df)
             val (cn, ce) = SQLFlow.datasetGraph(df, contracted = true)
             (name, nodes.size, edges.size, cn.size, ce.size)
-          }
+          })
         }, Duration.Inf)
       import s.implicits._
       rows.toDF("query", "n_nodes", "n_edges", "n_contracted_nodes", "n_contracted_edges")

@@ -635,7 +635,7 @@ object DedupQueries {
       // that SQL.
       val boundary = IncrementalLshBoundary
       val sh = shingleTable(s, dir)
-      val idx = s.read.parquet(lshIndexPath(s, dir, boundary))
+      val idx = readParquet(s, lshIndexPath(s, dir, boundary))
         .withColumnsRenamed(Map("doc_id" -> "doc_b"))
       val probe = bandTable(
         sigTable(s, dir).filter(col("doc_id") >= boundary), bands = 8, rowsPerBand = 4)

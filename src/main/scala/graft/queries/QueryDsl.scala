@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Shared helpers for the query inventory.
   *
@@ -24,7 +25,65 @@ object QueryDsl {
   type Q = (SparkSession, String) => DataFrame
 
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    readParquet(s, s"$dir/$name.parquet")
+
+  /** Key of a memoized parquet schema: the path's leaf files as (path,
+    * length, modification time), and the session's SQL conf snapshot. */
+  private final case class SchemaKey(files: Seq[(String, Long, Long)], confs: Map[String, String])
+  private val parquetSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  /** `s.read.parquet(path)` without the schema-inference job on repeat
+    * reads: the ONE parquet read path of `src/main`. Spark infers a parquet
+    * schema by running a one-task job that reads a footer, on every call,
+    * even for files that never change. This helper keeps the inferred
+    * schema per path and, while the key still matches, reads with
+    * `s.read.schema(schema).parquet(path)`, which skips inference. Every
+    * call still builds a fresh relation (fresh file listing, fresh
+    * exprIds), so plans and results are those of the plain read; a miss is
+    * the plain read.
+    *
+    *   - Key: the path's leaf files from a Hadoop `FileSystem` listing
+    *     (directories listed recursively, so a partitioned directory's key
+    *     changes on overwrite and on append), each as (path, length,
+    *     modification time), plus `sessionState.conf.getAllConfs`, since
+    *     inference reads confs such as `nanosAsLong` and `binaryAsString`.
+    *   - Size: one entry per path, replaced on any mismatch.
+    *   - The one identity assumption: a file is taken as unchanged while
+    *     its length and millisecond mtime are unchanged. A rewrite to the
+    *     same length within one mtime tick is missed, and the next read
+    *     uses the old schema.
+    *
+    * A path that is not an existing file or directory (a glob, a missing
+    * table) takes the plain read, which reports it as Spark does. */
+  def readParquet(s: SparkSession, path: String): DataFrame = {
+    val key = leafFiles(s, path).map(SchemaKey(_, s.sessionState.conf.getAllConfs))
+    val hit = key.flatMap(k => Option(parquetSchemas.get(path)).filter(_._1 == k))
+    hit match {
+      case Some((_, schema)) => s.read.schema(schema).parquet(path)
+      case None =>
+        // listed BEFORE the read: a file changed in between leaves a stale
+        // key, which the next listing misses
+        val df = s.read.parquet(path)
+        key.foreach(k => parquetSchemas.put(path, (k, df.schema)))
+        df
+    }
+  }
+
+  private def leafFiles(s: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    if (!fs.exists(p)) None
+    else {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    }
+  }
 
   /** Register parquet tables as temp views for spark.sql-based queries. */
   def views(s: SparkSession, dir: String, names: String*): Unit =

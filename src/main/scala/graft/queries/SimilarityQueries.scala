@@ -393,7 +393,7 @@ object SimilarityQueries {
     import org.apache.spark.sql.graft.functions.{pq_adc_lut, pq_adc_score, top_k_struct}
     val cb = pqCodebook(s, dir)
     val pivots = ivfPivots(s, dir)
-    val idx = s.read.parquet(pqIndexPath(s, dir))
+    val idx = readParquet(s, pqIndexPath(s, dir))
     val emb = tbl(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -475,7 +475,7 @@ object SimilarityQueries {
       // at 100 TB a query reads nprobe/nlist of the corpus, and the
       // assignment cost is paid once at ingest, not per query batch.
       // QueriesSpec proves s06 ≡ s02 row-for-row.
-      val idx = s.read.parquet(ivfIndexPath(s, dir))
+      val idx = readParquet(s, ivfIndexPath(s, dir))
       val pivots = ivfPivots(s, dir)
       val probes = tbl(s, dir, "embeddings").filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -500,7 +500,7 @@ object SimilarityQueries {
       // s06 over the rebuilt index, and the oracle is s02's full-training
       // replay. d19 is the same build-once/append-many design for the LSH
       // band index; this is its vector sibling.
-      val idx = s.read.parquet(ivfUpsertIndexPath(s, dir))
+      val idx = readParquet(s, ivfUpsertIndexPath(s, dir))
       val pivots = ivfPivots(s, dir)
       val probes = tbl(s, dir, "embeddings").filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -525,7 +525,7 @@ object SimilarityQueries {
       // this query to s02 re-run over the corpus minus the deleted ids,
       // and the oracle replays the same filter inside s02's full
       // k-means-training replay.
-      val idx = s.read.parquet(ivfIndexPath(s, dir))
+      val idx = readParquet(s, ivfIndexPath(s, dir))
       val pivots = ivfPivots(s, dir)
       val tombstones = tbl(s, dir, "embeddings")
         .filter(col("vec_id") % 7 === 0).select("vec_id")
@@ -558,7 +558,7 @@ object SimilarityQueries {
       // (cheap column compare), never after top-k (which would starve k).
       // QueriesSpec pins soundness (every neighbor has label 3) and
       // recall vs the exact filtered brute force.
-      val idx = s.read.parquet(ivfIndexPath(s, dir)).filter(col("label") === 3)
+      val idx = readParquet(s, ivfIndexPath(s, dir)).filter(col("label") === 3)
       val pivots = ivfPivots(s, dir)
       val probes = tbl(s, dir, "embeddings").filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),

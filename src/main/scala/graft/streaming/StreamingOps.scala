@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.queries.QueryDsl.readParquet
+
 /** Structured Streaming operators over the `events` table shape.
   *
   * The reference has no stream processing (its "stream sink" is incremental
@@ -42,10 +44,12 @@ object StreamingOps {
     * A streaming source needs an explicit schema, and events.parquet's
     * physical `ts` type has varied across testdata generations
     * (TIMESTAMP(NANOS)→Long under nanosAsLong vs native
-    * TIMESTAMP(MICROS)), so peek at the file's batch-read schema once —
-    * a footer read, no data scan — and convert accordingly. */
+    * TIMESTAMP(MICROS)), so peek at the file's batch-read schema and
+    * convert accordingly. Inferring it runs a one-task footer-reading Spark
+    * job (no data scan); `QueryDsl.readParquet` runs it only on the first
+    * read of an unchanged file. */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType = readParquet(spark, s"$dir/events.parquet").schema("ts").dataType
     val raw = spark.readStream
       .schema(eventSchema(tsType))
       .option("pathGlobFilter", "events.parquet")
