@@ -664,26 +664,30 @@ object Bench {
     // lineage-engine throughput as a TRACKED number (plain + contracted
     // plans/sec): z01's wall-clock line also pays DataFrame construction
     // and a driver thread pool, so a graph-analysis regression hides in
-    // it; this times datasetGraph alone over already-optimized plans —
-    // the steady state of a listener session extracting lineage per query.
+    // it; this times FlowAnalysis.analyze (plus contract) alone over
+    // already-optimized plans — the audit listener's path, one analysis
+    // per query. SQLFlow.datasetGraph is not timed here: it keeps each
+    // Dataset's graph, so repeats would time the memo, not the analysis.
     val lineage: Seq[(String, Double)] = {
-      import org.apache.spark.sql.graft.SQLFlow
+      import org.apache.spark.sql.graft.{FlowAnalysis, FlowNodeType}
       val panel = Seq("q01_pricing_summary", "q05_local_supplier",
         "q07_window_topk", "q10_cube", "q12_union_all", "q16_scalar_subquery",
         "q19_anti_join", "q23_explode_tokens", "q38_asof_join",
         "d03_minhash_lsh", "s01_knn_brute", "m03_feature_extract")
-      val dfs = panel.map(n => SparkEntry.queries(n)(spark, sfDir))
-      // warm-up: force the one-time analyze+optimize of every plan out of
-      // the timed region, and give C2 real iteration counts on the
-      // analysis path — one rep was enough for a FRESH JVM but not for
-      // this point of a full run, where the inventory's thousands of
-      // Janino classes have churned the code cache and the lineage path
-      // may be recompiling as the first windows tick (r19)
+      val plans = panel.map(n => SparkEntry.queries(n)(spark, sfDir).queryExecution.optimizedPlan)
+      def extract(contracted: Boolean): Unit = plans.foreach { p =>
+        val g = FlowAnalysis.analyze(p, "query", FlowNodeType.Query)
+        if (contracted) FlowAnalysis.contract(g)
+      }
+      // warm-up (`plans` already paid the one-time analyze+optimize):
+      // give C2 real iteration counts on the analysis path — one rep was
+      // enough for a FRESH JVM but not for this point of a full run,
+      // where the inventory's thousands of Janino classes have churned the
+      // code cache and the lineage path may be recompiling as the first
+      // windows tick (r19)
       var warm = 0
       while (warm < 3) {
-        dfs.foreach { df =>
-          SQLFlow.datasetGraph(df); SQLFlow.datasetGraph(df, contracted = true)
-        }
+        extract(contracted = false); extract(contracted = true)
         warm += 1
       }
       // median-of-top-3 over five ~0.3 s windows per mode: a 5-rep window
@@ -710,10 +714,10 @@ object Bench {
         val t0 = System.nanoTime()
         var i = 0
         while (i < reps) {
-          dfs.foreach(df => SQLFlow.datasetGraph(df, contracted = contracted))
+          extract(contracted)
           i += 1
         }
-        reps * dfs.size / ((System.nanoTime() - t0) / 1e9)
+        reps * plans.size / ((System.nanoTime() - t0) / 1e9)
       }
       val samples = Seq.fill(5)((window(contracted = false), window(contracted = true)))
       def medianOfTop3(xs: Seq[Double]): Double = xs.sorted.takeRight(3).apply(1)

@@ -309,6 +309,14 @@ object FlowAnalysis {
   private[graft] def statProps(leaf: LeafNode): mutable.Map[String, String] =
     mutable.Map.empty[String, String] ++= stats(leaf)
 
+  /** A kept graph as a lineage memo hit hands it out: fresh `props` maps,
+    * since callers may mutate them, with table statistics read now from
+    * the leaves in `statLeaves`, as a new analysis would read them. */
+  private[graft] def withFreshProps(g: Graph): Graph =
+    g.copy(nodes = g.nodes.map { n =>
+      n.copy(props = g.statLeaves.get(n.uniqueId).map(statProps).getOrElse(mutable.Map.empty))
+    })
+
   private def stats(leaf: LeafNode): Seq[(String, String)] =
     try {
       val st = leaf.computeStats()

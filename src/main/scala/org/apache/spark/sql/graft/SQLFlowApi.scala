@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession, Dataset => ClassicDataset}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SessionState
 
 /** Public lineage API — same surface as the reference
@@ -21,16 +22,45 @@ import org.apache.spark.sql.internal.SessionState
   */
 object SQLFlow {
 
-  /** Lineage graph of a single Dataset's optimized plan. */
+  /** Lineage graph of a single Dataset's optimized plan.
+    *
+    * The uncontracted graph is kept in a [[DatasetMemo]] on that plan, so
+    * it is freed with the Dataset, and a later call reuses it without
+    * walking the plan again. A memo is only stored and only used while
+    * the cache manager is empty, and never for a plan that reads an RDD
+    * (its lineage depends on [[RddLineage]] registrations, which may come
+    * after the plan). */
   def datasetGraph(ds: Dataset[_], contracted: Boolean = false)
       : (Seq[FlowNode], Seq[FlowEdge]) = {
     val cds = ds.asInstanceOf[ClassicDataset[_]]
     val session = cds.sparkSession
+    val cacheManager = session.sharedState.cacheManager
     val plan = cds.queryExecution.optimizedPlan
-    val rootName = s"query_${math.abs(plan.semanticHash()).toString}"
-    val g = FlowAnalysis.analyze(plan, rootName, FlowNodeType.Query, isCachedFn(session))
+    val emptyCache = cacheManager.isEmpty
+    val memo = if (emptyCache) plan.synchronized(plan.getTagValue(DatasetMemoTag)) else None
+    val g = memo.filter(_.plan eq plan) match {
+      case Some(m) => FlowAnalysis.withFreshProps(m.graph)
+      case None =>
+        val rootName = s"query_${math.abs(plan.semanticHash()).toString}"
+        val g = FlowAnalysis.analyze(plan, rootName, FlowNodeType.Query, isCachedFn(session))
+        if (emptyCache && cacheManager.isEmpty && !readsRdd(plan)) plan.synchronized {
+          plan.setTagValue(DatasetMemoTag, DatasetMemo(plan, g))
+        }
+        g
+    }
     if (contracted) FlowAnalysis.contract(g) else (g.nodes, g.edges)
   }
+
+  /** A Dataset's uncontracted lineage graph, kept on its optimized plan
+    * under [[DatasetMemoTag]]. `plan` is that plan: Catalyst copies tags
+    * onto the plans it derives from a tagged one, so the memo is only
+    * used on the very object it was made from. */
+  private[graft] final case class DatasetMemo(plan: LogicalPlan, graph: FlowAnalysis.Graph)
+
+  private[graft] val DatasetMemoTag = TreeNodeTag[DatasetMemo]("sqlflow.datasetLineage")
+
+  private def readsRdd(plan: LogicalPlan): Boolean =
+    plan.collectFirstWithSubqueries { case _: LogicalRDD => true }.isDefined
 
   /** One temp view's uncontracted lineage graph, kept on the view's stored
     * analyzed plan under [[ViewMemoTag]] and freed with it. Every field but
@@ -71,7 +101,9 @@ object SQLFlow {
     val currentDb = catalog.getCurrentDatabase
     val persistent = for {
       db <- catalog.listDatabases()
-      ident <- catalog.listTables(db)
+      // listViews appends the local temp views, which carry no database;
+      // they are gathered below
+      ident <- catalog.listViews(db, "*") if ident.database.isDefined
       meta <- scala.util.Try(catalog.getTableMetadata(ident)).toOption.toSeq
       text <- meta.viewText.toSeq
       plan <- scala.util.Try {
@@ -176,12 +208,7 @@ object SQLFlow {
       val g = hit match {
         case Some(m) =>
           counter.value = m.counterEnd
-          // callers may mutate props: hand out fresh maps, with table
-          // statistics read now, as the miss below would
-          m.graph.copy(nodes = m.graph.nodes.map { n =>
-            n.copy(props = m.graph.statLeaves.get(n.uniqueId)
-              .map(FlowAnalysis.statProps).getOrElse(mutable.Map.empty))
-          })
+          FlowAnalysis.withFreshProps(m.graph)
         case None =>
           val optimized = session.sessionState.optimizer.execute(input)
           val g = FlowAnalysis.analyze(optimized, name, FlowNodeType.View, cachedFn, counter)

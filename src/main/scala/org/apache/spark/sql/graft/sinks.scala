@@ -88,8 +88,14 @@ private[graft] object SinkIO {
 case class GraphVizSink() extends FlowBatchSink with FlowStreamSink with FlowFormat {
   import SinkIO._
 
+  /** One pass over one builder; user text (idents, column names) is
+    * copied as given, escaped for the HTML-like labels only. */
   override def toGraphString(nodes: Seq[FlowNode], edges: Seq[FlowEdge]): String = {
-    val nodeStrs = nodes.map { n =>
+    val sb = new java.lang.StringBuilder(256 + 128 * nodes.size + 48 * edges.size)
+    sb.append("digraph {\n")
+      .append("  graph [pad=\"0.5\" nodesep=\"0.5\" ranksep=\"1\" fontname=\"Helvetica\" rankdir=LR];\n")
+      .append("  node [shape=plaintext]\n\n")
+    nodes.iterator.zipWithIndex.foreach { case (n, k) =>
       val color = if (n.isCached) "lightblue" else
         (n.tpe match {
           case FlowNodeType.Table => "black"
@@ -97,28 +103,27 @@ case class GraphVizSink() extends FlowBatchSink with FlowStreamSink with FlowFor
           case FlowNodeType.Query => "lightgray"
           case _ => "lightgray"
         })
-      val rows = n.attributes.zipWithIndex.map { case (a, i) =>
-        s"""<tr><td port="$i">${escape(a)}</td></tr>"""
-      }.mkString("\n")
-      s""""${n.uniqueId}" [color="$color" label=<
-         |<table>
-         |  <tr><td bgcolor="$color"><i>${escape(n.ident)}</i></td></tr>
-         |$rows
-         |</table>>];""".stripMargin
+      if (k > 0) sb.append('\n')
+      sb.append('"').append(n.uniqueId).append("\" [color=\"").append(color).append("\" label=<\n")
+        .append("<table>\n")
+        .append("  <tr><td bgcolor=\"").append(color).append("\"><i>").append(escape(n.ident))
+        .append("</i></td></tr>\n")
+      n.attributes.iterator.zipWithIndex.foreach { case (a, i) =>
+        if (i > 0) sb.append('\n')
+        sb.append("<tr><td port=\"").append(i).append("\">").append(escape(a)).append("</td></tr>")
+      }
+      sb.append("\n</table>>];")
     }
-    val edgeStrs = edges.map { e =>
-      val from = e.fromIdx.map(i => s""""${e.fromId}":$i""").getOrElse(s""""${e.fromId}"""")
-      val to = e.toIdx.map(i => s""""${e.toId}":$i""").getOrElse(s""""${e.toId}"""")
-      s"$from -> $to;"
+    sb.append('\n')
+    edges.iterator.zipWithIndex.foreach { case (e, k) =>
+      if (k > 0) sb.append('\n')
+      sb.append('"').append(e.fromId).append('"')
+      e.fromIdx.foreach(i => sb.append(':').append(i))
+      sb.append(" -> \"").append(e.toId).append('"')
+      e.toIdx.foreach(i => sb.append(':').append(i))
+      sb.append(';')
     }
-    s"""digraph {
-       |  graph [pad="0.5" nodesep="0.5" ranksep="1" fontname="Helvetica" rankdir=LR];
-       |  node [shape=plaintext]
-       |
-       |${nodeStrs.mkString("\n")}
-       |${edgeStrs.mkString("\n")}
-       |}
-       |""".stripMargin
+    sb.append("\n}\n").toString
   }
 
   override def write(nodes: Seq[FlowNode], edges: Seq[FlowEdge],

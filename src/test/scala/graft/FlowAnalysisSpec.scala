@@ -300,6 +300,44 @@ class FlowAnalysisSpec extends AnyFunSuite {
     assert(new java.io.File(s"$out/sqlflow.dot").exists())
   }
 
+  test("dot sink: exact output; column names keep newlines and margin characters") {
+    val nodes = Seq(
+      FlowNode("t", "db.t", Seq("a\n|b", "x<y"), "", FlowNodeType.Table),
+      FlowNode("v", "v", Nil, "", FlowNodeType.View, isCached = true),
+      FlowNode("q_1", "q", Seq("c"), "", FlowNodeType.Query))
+    val edges = Seq(FlowEdge("t", Some(0), "q_1", Some(0)), FlowEdge("v", None, "q_1", None))
+    val expected = Seq(
+      "digraph {",
+      """  graph [pad="0.5" nodesep="0.5" ranksep="1" fontname="Helvetica" rankdir=LR];""",
+      "  node [shape=plaintext]",
+      "",
+      """"t" [color="black" label=<""",
+      "<table>",
+      """  <tr><td bgcolor="black"><i>db.t</i></td></tr>""",
+      """<tr><td port="0">a""",
+      """|b</td></tr>""",
+      """<tr><td port="1">x&lt;y</td></tr>""",
+      "</table>>];",
+      """"v" [color="lightblue" label=<""",
+      "<table>",
+      """  <tr><td bgcolor="lightblue"><i>v</i></td></tr>""",
+      "",
+      "</table>>];",
+      """"q_1" [color="lightgray" label=<""",
+      "<table>",
+      """  <tr><td bgcolor="lightgray"><i>q</i></td></tr>""",
+      """<tr><td port="0">c</td></tr>""",
+      "</table>>];",
+      """"t":0 -> "q_1":0;""",
+      """"v" -> "q_1";""",
+      "}",
+      "").mkString("\n")
+    assert(GraphVizSink().toGraphString(nodes, edges) === expected)
+    // the same alias through a Dataset
+    val dot = spark.range(1).select(col("id").as("a\n|b")).printAsSQLFlow()
+    assert(dot.contains("<tr><td port=\"0\">a\n|b</td></tr>"), dot)
+  }
+
   test("listener appends lineage per successful query") {
     val tmp = java.nio.file.Files.createTempDirectory("flowlistener").toString
     val listener = SQLFlowListener(GraphVizSink(), options = Map("outputDirPath" -> tmp))
@@ -386,7 +424,15 @@ class FlowAnalysisSpec extends AnyFunSuite {
       // each keeps its own column list — no merged mixture
       assert(mine.find(_.ident == "dupname").get.attributes === Seq("r_regionkey"))
       assert(mine.find(_.ident == "flowdb2.dupname").get.attributes === Seq("n_nationkey", "n_name"))
+      // a temp view of the same name is no persistent view of flowdb2: the
+      // qualified view is fed by its own table only
+      spark.range(1).createOrReplaceTempView("dupname")
+      val (cNodes, cEdges) = SQLFlow.catalogGraph(spark, contracted = true)
+      val sources = cEdges.filter(_.toId == "flowdb2.dupname").map(_.fromId).toSet
+        .map((id: String) => cNodes.find(_.uniqueId == id).get.ident)
+      assert(sources === Set("nation.parquet"), cEdges.mkString("\n"))
     } finally {
+      spark.catalog.dropTempView("dupname")
       spark.sql("DROP VIEW IF EXISTS dupname")
       spark.sql("DROP VIEW IF EXISTS flowdb2.dupname")
       spark.sql("DROP DATABASE IF EXISTS flowdb2")

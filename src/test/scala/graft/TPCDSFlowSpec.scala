@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.SQLFlow
+import org.apache.spark.sql.graft.{SQLFlow, TestPlanBridge}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sorted line set. This is the main robustness net for the per-operator
   * lineage rules: the corpus exercises deep join trees, CTEs, rollup,
   * window functions, correlated subqueries, and set ops at realistic plan
-  * depth. Regenerate with
+  * depth. Each query's per-Dataset graph is also checked to be the same
+  * whether the lineage memo is reused or not. Regenerate with
   * `SPARK_GENERATE_GOLDEN_FILES=1 sbt "testOnly graft.TPCDSFlowSpec"`.
   */
 class TPCDSFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -72,7 +73,8 @@ class TPCDSFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
         dropAllTempViews()
         try {
           val query = Files.readString(input.toPath)
-          spark.sql(query).createOrReplaceTempView("v")
+          val df = spark.sql(query)
+          df.createOrReplaceTempView("v")
           // plain runs twice: the first call stores the view's lineage memo,
           // the contracted call and the second plain call reuse it, so the
           // goldens are checked on a miss and on a hit
@@ -92,6 +94,16 @@ class TPCDSFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
               assert(normalized === expected, s"lineage snapshot drifted for $rel")
             }
           }
+          // per-Dataset lineage: a call that reuses the memo returns what a
+          // call that walks the plan returns, plain and contracted
+          val missPlain = SQLFlow.datasetGraph(df)
+          assert(TestPlanBridge.keepsLineage(df), "the per-Dataset call kept no memo")
+          val hitPlain = SQLFlow.datasetGraph(df)
+          val hitContracted = SQLFlow.datasetGraph(df, contracted = true)
+          TestPlanBridge.forgetLineage(df)
+          val missContracted = SQLFlow.datasetGraph(df, contracted = true)
+          assert(hitPlain === missPlain)
+          assert(hitContracted === missContracted)
         } finally dropAllTempViews()
       }
     }

@@ -562,12 +562,12 @@ def main():
             print(desc + f" raw < {LINEAGE_REOPEN_RAW_FLOOR}x floor — "
                   "LINEAGE-REOPEN: raw collapse past what any measured "
                   "common-mode hotness explains; probe driver-side "
-                  "(graft.tools.LineageRateProbe)")
+                  "(FlowAnalysis.analyze/contract over the Bench lineage panel)")
         elif rn < LINEAGE_REOPEN_RATIO:
             bad += 1
             print(desc + f" < {LINEAGE_REOPEN_RATIO}x — LINEAGE-REOPEN: the "
                   "product's own analysis loop regressed past the band; "
-                  "probe driver-side (graft.tools.LineageRateProbe)")
+                  "probe driver-side (FlowAnalysis.analyze/contract over the Bench lineage panel)")
         elif rn < LINEAGE_SLOW_RATIO:
             print(desc + f" < {LINEAGE_SLOW_RATIO}x — LINEAGE-SLOW advisory "
                   "(inside the multimodal estimator band; compare the other "
