@@ -151,8 +151,8 @@ def impacted_by(name: str, column: str = "", contracted: bool = False) -> List[s
 def register_sql_functions(spark: SparkSession = None) -> None:
     """Expose the engine's native SQL functions (``zorder_key``,
     ``winnow_fingerprints``, ``vec_cosine``, ``token_shingle_hashes``,
-    ``minhash_signature``, ``simhash64``, ``normalize_text``,
-    ``cdc_chunk_hashes``, ``vec_srp``) as session temp functions, so
+    ``minhash_signature``, ``simhash_md5``, ``normalize_text``,
+    ``cdc_chunk_hashes_md5``, ``vec_srp_md5``) as session temp functions, so
     pyspark SQL can call them without the
     ``spark.sql.extensions=...GraftExtensions`` driver conf.  The
     expressions are codegen'd Catalyst natives — NOT Python UDFs — so

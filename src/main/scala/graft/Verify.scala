@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,28 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // match Bench: bounded top-k aggregates carry O(k)-per-group state,
-      // so hash aggregation over large group counts is the intended path
-      // (see the Bench session builder for the s11 fallback-spill story).
-      // CAVEAT (r12 advice): this session-wide override also defers the
-      // sort-based safety net for UNBOUNDED-per-group-state aggregates
-      // (collect_set/collect_list — e.g. q17's baskets); at the
-      // inventory's scales their total state is small, but if a
-      // collect_*-heavy entry ever shows memory pressure, scope the
-      // override around the top-k entries instead
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // match Bench (r15): the default 100-entry generated-class cache is
-      // smaller than the 188-entry inventory's codegen-source count, so
-      // the dump was re-compiling evicted classes mid-run; purely a
-      // wall-time saving — correctness is cache-independent
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = LocalSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name-prefix filter for focused local runs

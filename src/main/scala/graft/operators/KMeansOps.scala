@@ -38,7 +38,7 @@ object KMeansOps {
     // LiteralPivotMax (√-scaled nlist at big corpora — 5e8 vectors want
     // ~16k clusters) the same blowup the query path dodges would hit
     // TRAINING, so dense cluster ids switch to the reference-object
-    // NearestPivots expression (bit-identical sims — same cosine
+    // nearest_pivots kernel (bit-identical sims — same cosine
     // accumulation order).
     def assignTo(cents: Seq[(Int, Seq[Float])]): DataFrame = {
       val sorted = cents.sortBy(_._1)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Write-path layout optimization — the OPTIMIZE ZORDER BY step as a
   * utility: compute the Morton key of two scan-predicate columns
-  * (native [[org.apache.spark.sql.graft.ZOrderKey]]), range-partition
+  * (the native `zorder_key` kernel), range-partition
   * into the target file count, sort within each partition, and write.
   * Each parquet file then covers a small tile of the (x, y) plane, so
   * row-group/zone-map statistics prune scans filtered on EITHER column —

@@ -1204,7 +1204,7 @@ object CoreQueries {
       // multi-dimensional layout keys (the lakehouse OPTIMIZE ZORDER BY
       // step): each row gets the Morton-interleaved key of its two
       // scan-predicate columns, computed by the native codegen'd
-      // [[org.apache.spark.sql.graft.ZOrderKey]] — a pure map-side
+      // `zorder_key` kernel (ZOrderOps) — a pure map-side
       // projection at ingest. Writing range-partitioned + sorted by this
       // key clusters rows close in BOTH dimensions into the same files,
       // so parquet min/max zone maps prune scans filtered on EITHER
@@ -2158,7 +2158,7 @@ $steps
   }
 
   /** DuckDB-side Morton interleave of the low `bits` bits of two integer
-    * columns — the explicit shift/mask expansion of what ZOrderKey's
+    * columns — the explicit shift/mask expansion of what ZOrderOps'
     * spread-mask rounds compute (bit i of x → 2i, bit i of y → 2i+1). */
   private def zorderOracleExpr(x: String, y: String, bits: Int): String =
     (0 until bits).flatMap(i => Seq(

@@ -140,8 +140,8 @@ object DedupQueries {
   /** doc_id + sorted distinct shingle-HASH set, materialized once — both LSH
     * banding and Jaccard verification reuse it (at 100 TB this is the
     * "signature table" you would checkpoint rather than recompute per
-    * consumer). A native Catalyst expression ([[org.apache.spark.sql.graft
-    * .TokenShingleHashes]]) hashes 3-token shingles to int64 in one
+    * consumer). A native Catalyst kernel (`token_shingle_hashes`, see
+    * [[org.apache.spark.sql.graft.ShingleOps]]) hashes 3-token shingles to int64 in one
     * codegen'd pass, so downstream set-intersections are long-compares and
     * the shuffled payload is fixed-width. */
   private def shingleTable(s: SparkSession, dir: String): DataFrame =
@@ -457,7 +457,7 @@ object DedupQueries {
 
     "d02_dedup_norm" -> ((s, dir) => {
       // normalization: lowercase, strip non-alphanumerics, collapse spaces —
-      // one codegen'd byte loop (NormalizeText) instead of two regex passes
+      // one codegen'd byte loop (normalize_text) instead of two regex passes
       // per document (ExpressionsSpec proves equivalence to the regex form)
       val norm = org.apache.spark.sql.graft.functions.normalize_text(col("text"))
       tbl(s, dir, "documents")
@@ -497,8 +497,8 @@ object DedupQueries {
       // bit-for-bit, and since the 4-band candidate join is COMPLETE for
       // hamming ≤ 3 (pigeonhole: ≤3 differing bits leave one band
       // identical) and no fixture bucket hits the cap (DedupCapSpec), the
-      // banded pair set hash-matches a brute-force oracle. Production
-      // swaps xxh64 token hashes (simhash64, same selection logic).
+      // banded pair set hash-matches a brute-force oracle. The selection
+      // logic is hash-agnostic: xxh64 token hashes would work the same.
       val d = sharedDf(s, s"simhash|$dir") { // reused by both join sides
         tbl(s, dir, "documents")
           .select(col("doc_id"), simhash_md5(col("text")).as("simhash"))
@@ -1161,8 +1161,8 @@ object DedupQueries {
     // Sketches use the md5-plane variant so the WHOLE pipeline — planes,
     // signs, bands, bucket cap, ascending-double cosine — replays
     // bit-for-bit in DuckDB (the d04/d16 oracle-parity trick; see
-    // [[org.apache.spark.sql.graft.SrpMd5Ops]]); production swaps back to
-    // FloatVecSrp's xxh64 planes, the banding geometry is hash-agnostic.
+    // [[org.apache.spark.sql.graft.SrpMd5Ops]]); the banding geometry is
+    // hash-agnostic.
     val emb = tbl(s, dir, "embeddings")
     val sk = sharedDf(s, s"srp|$dir") {
       emb.select(col("vec_id"), col("embedding"), vec_srp_md5(col("embedding"), 32).as("sk"))
@@ -1187,7 +1187,7 @@ object DedupQueries {
   /** Shared DuckDB-oracle CTE scaffolding: the whitespace token split and
     * the 3-token shingle SET (CHR(1) sentinel for empty docs, whole-doc
     * shingle under 3 tokens) — the oracle replay of the Spark side's
-    * TokenShingleHashes preprocessing. ONE definition interpolated by
+    * token_shingle_hashes preprocessing. ONE definition interpolated by
     * every d-family oracle (13 copies before r11): the p01/t26/p03
     * cross-claims depend on all consumers shingling identically, so the
     * scaffolding must be impossible to drift per-entry. */

@@ -189,13 +189,11 @@ object MultimodalQueries {
       // content-defined chunking: shared-chunk pairs across media SURVIVE
       // byte insertions because boundaries re-align — the production dedup
       // primitive for crawl snapshots / media archives. Runs the
-      // md5-DOMAIN kernel (native CdcChunkHashesMd5: md5-derived gear
+      // md5-DOMAIN kernel (native cdc_chunk_hashes_md5: md5-derived gear
       // table, mod-2^55 rolling hash, md5 chunk digests — the d07
-      // FloatVecSrpMd5 precedent), so a DuckDB recursive CTE replays the
-      // entire state machine byte for byte and the oracle is hash-exact;
-      // production at scale swaps in the xxh64/gear CdcChunkHashes kernel
-      // (same cut rule, same re-alignment guarantee — ExpressionsSpec pins
-      // both kernels' determinism and re-alignment).
+      // vec_srp_md5 precedent), so a DuckDB recursive CTE replays the
+      // entire state machine byte for byte and the oracle is hash-exact
+      // (PropertySpec pins the kernel's determinism and re-alignment).
       import org.apache.spark.sql.graft.functions.cdc_chunk_hashes_md5
       val chunks = tbl(s, dir, "documents")
         .select(col("doc_id").as("media_id"),
@@ -269,7 +267,7 @@ object MultimodalQueries {
       // stats in a speech-data pipeline: frame-level energy, then
       // gaps-and-islands to merge consecutive loud frames into segments.
       // The frame pass COMPOSES existing pieces — binary substring
-      // slicing + the native PcmI16leStats parser per 64-sample slice
+      // slicing + the native pcm_i16le_stats parser per 64-sample slice
       // (no new expression; substring clamps the final short frame) —
       // and segmentation is one media-keyed window, so the whole op is
       // a scan plus one bounded shuffle. The 16384 mean-|x| threshold

@@ -43,8 +43,8 @@ object SimilarityQueries {
     * table (nlist·dim floats) both sub-linear: 500 fixture vectors → 16,
     * the 10× bench tier → 100, 5e8 vectors → 15,812. Past
     * [[LiteralPivotMax]] centroids the scoring projection switches from
-    * literal structs to the reference-object [[org.apache.spark.sql.graft
-    * .NearestPivots]] expression — the plan stays O(1) expressions at any
+    * literal structs to the reference-object `nearest_pivots` kernel
+    * ([[org.apache.spark.sql.graft.PivotOps]]) — the plan stays O(1) expressions at any
     * nlist (QueriesSpec pins literal ≡ native at nlist 1024). */
   private[graft] def ivfNlistFor(n: Long): Int =
     math.max(IvfNlist, math.ceil(math.sqrt(n / 2.0)).toInt)
@@ -156,8 +156,8 @@ object SimilarityQueries {
 
   /** Pivot ids of the `k` nearest centroids (cosine desc, ties to the
     * lowest id) — literal structs up to [[LiteralPivotMax]] centroids, the
-    * [[org.apache.spark.sql.graft.NearestPivots]] reference-object
-    * expression beyond. Both paths share VecOps.cosine's accumulation
+    * reference-object `nearest_pivots` kernel
+    * ([[org.apache.spark.sql.graft.PivotOps]]) beyond. Both paths share VecOps.cosine's accumulation
     * order, so they rank identically (QueriesSpec pins it). */
   private[graft] def topPivotIds(pivots: Seq[Seq[Float]], vec: Column, k: Int): Column =
     if (pivots.length <= LiteralPivotMax) {

@@ -277,8 +277,10 @@ object SQLFlow {
     * conservative), through intermediate plan nodes' per-column slots.
     * Unlike the cypher sink's dst walk, impact propagates THROUGH views —
     * a view over a view over the table is impacted too. Returns affected
-    * node idents, distinct and sorted; same 128-depth guard as every
-    * other traversal (reference SQLFlow.scala:804-822). Name and column
+    * node idents, distinct and sorted. The walk has no depth cap: the
+    * visited set over (node, column) slots already guarantees it ends,
+    * and a cap would silently truncate a long view chain's answer into
+    * "no downstream impact". Name and column
     * match with the session resolver (case-insensitive by default), so
     * only a genuinely unknown ident returns the empty list. */
   def impactedBy(spark: SparkSession, name: String, column: Option[String] = None,
@@ -304,8 +306,7 @@ object SQLFlow {
     val visited = mutable.HashSet[Slot](startSlots: _*)
     val impacted = mutable.SortedSet[String]()
     var frontier: Seq[Slot] = startSlots
-    var depth = 0
-    while (frontier.nonEmpty && depth < 128) {
+    while (frontier.nonEmpty) {
       frontier = frontier.flatMap { case (id, idx) =>
         bySrc.getOrElse(id, Nil).collect {
           // a node-level start (or slot) follows every outgoing edge; a
@@ -322,7 +323,6 @@ object SQLFlow {
             !starts.exists(_.uniqueId == n.uniqueId)) impacted += n.ident
         }
       }
-      depth += 1
     }
     impacted.toSeq
   }

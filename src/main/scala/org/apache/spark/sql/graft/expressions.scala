@@ -1,11 +1,14 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{
+  BinaryExpression, Expression, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Native Catalyst expressions for the text-dedup hot path.
   *
@@ -102,35 +105,14 @@ object ShingleOps {
     new GenericArrayData(sig)
   }
 
-  /** 64-bit SimHash over whitespace tokens: bit j of the result is set iff
-    * the count of token hashes with bit j set exceeds those without. */
-  def simhash(s: UTF8String): Long = {
-    val tokenHashes = hashTokens(s)
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < tokenHashes.length) {
-      val h = tokenHashes(i)
-      var j = 0
-      while (j < 64) {
-        if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
-        j += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
-    out
-  }
-
   /** 60-bit SimHash over whitespace tokens in the MD5 domain: the
     * per-token hash is the top 60 bits of md5(token) — the first 15 hex
     * chars, the one hash digest both engines share, so a DuckDB oracle
     * reproduces the signature bit-for-bit (the WinnowOps parity trick;
     * 60 bits keeps every derived value positive where the only 64-bit
-    * integer is signed). Production at 100 TB would swap back to xxh64
-    * token hashes ([[simhash]]) — the sign-counting selection logic is
-    * hash-agnostic; only the verifiability changes. */
+    * integer is signed). The sign-counting selection logic is
+    * hash-agnostic: swapping in xxh64 token hashes changes only the
+    * verifiability. */
   def simhashMd5(s: UTF8String): Long = {
     val bytes = s.getBytes
     val md = Md5Local.get()
@@ -326,84 +308,6 @@ object VecOps {
   }
 }
 
-case class FloatVecCosine(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(
-      ExprChecks.isFloatArray(left.dataType) && ExprChecks.isFloatArray(right.dataType),
-      "ARRAY<FLOAT> on both sides", left.dataType)
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.VecOps.cosine($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd dot product — see [[VecOps.dot]] for the cosine bit-identity
-  * contract that makes `vec_dot / (vec_norm · vec_norm)` a drop-in for
-  * `vec_cosine` on hot candidate-scoring paths. */
-case class FloatVecDot(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(
-      ExprChecks.isFloatArray(left.dataType) && ExprChecks.isFloatArray(right.dataType),
-      "ARRAY<FLOAT> on both sides", left.dataType)
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.VecOps.dot($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd L2 norm (see [[VecOps.norm]]). */
-case class FloatVecNorm(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(ExprChecks.isFloatArray(child.dataType),
-      "ARRAY<FLOAT>", child.dataType)
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any): Any =
-    VecOps.norm(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"org.apache.spark.sql.graft.VecOps.norm($a)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Sign-random-projection (SRP) sketch of a float vector: bit p of the
-  * result is the sign of dot(v, r_p), where plane r_p's components are
-  * pseudo-random in [-1, 1) derived from xxh64(p, dim-index) — fully
-  * deterministic, no stored plane matrix, O(planes·dim) per row. Hamming
-  * distance between sketches estimates angular distance, so banding the
-  * sketch gives LSH buckets for cosine near-duplicate detection. */
-object SrpOps {
-  def srp(v: ArrayData, planes: Int): Long = {
-    val n = v.numElements()
-    var out = 0L
-    var p = 0
-    while (p < planes) {
-      var dot = 0.0
-      var i = 0
-      while (i < n) {
-        // map xxh64(plane, i) to [-1, 1)
-        val h = XXH64.hashLong((p.toLong << 32) | i, ShingleOps.Seed)
-        val r = (h >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
-        dot += v.getFloat(i).toDouble * r
-        i += 1
-      }
-      if (dot > 0) out |= (1L << p)
-      p += 1
-    }
-    out
-  }
-}
-
 /** One-pass text normalization for dedup keys: ASCII-lowercase, drop every
   * byte outside [a-z0-9 ], collapse space runs, trim. Equivalent (on any
   * input whose case-folding stays 1:1, e.g. ASCII) to the regex pipeline
@@ -433,42 +337,20 @@ object NormalizeOps {
   }
 }
 
-case class NormalizeText(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    NormalizeOps.normalize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.NormalizeOps.normalize($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class FloatVecSrp(child: Expression, planes: Int = 32) extends UnaryExpression {
-  require(planes > 0 && planes <= 64, "planes must be in [1, 64]")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(ExprChecks.isFloatArray(child.dataType), "ARRAY<FLOAT>", child.dataType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    SrpOps.srp(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.SrpOps.srp($c, $planes)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** md5-domain SRP sketch — identical banding geometry to [[FloatVecSrp]],
-  * but hyperplane entries derive from md5("p|i") instead of xxh64 so a SQL
-  * oracle reproduces the sketch bit-for-bit (the SimHashMd5/
-  * WinnowFingerprints oracle-parity trick): r(p,i) = ((md5_60("p|i") >> 7)
-  * / 2^53) · 2 − 1 — 53 bits convert to double EXACTLY, so both engines
-  * hold the same hyperplane value, and the per-plane dot accumulates
-  * ascending in double (DuckDB's LIST_REDUCE is the same left fold). The
+/** Sign-random-projection (SRP) sketch of a float vector: bit p of the
+  * result is the sign of dot(v, r_p). Hamming distance between sketches
+  * estimates angular distance, so banding the sketch gives LSH buckets for
+  * cosine near-duplicate detection. Hyperplane entries derive from
+  * md5("p|i") so a SQL oracle reproduces the sketch bit-for-bit (the
+  * simhash_md5 / winnow_fingerprints oracle-parity trick):
+  * r(p,i) = ((md5_60("p|i") >> 7) / 2^53) · 2 − 1 — 53 bits convert to
+  * double EXACTLY, so both engines hold the same hyperplane value, and the
+  * per-plane dot accumulates ascending in double (DuckDB's LIST_REDUCE is
+  * the same left fold). The
   * matrix is a pure function of (planes, dims): computed once per JVM and
-  * memoized — never shipped with the plan, never md5'd per row. Production
-  * at 100 TB keeps FloatVecSrp's xxh64 planes; the sign-projection
-  * geometry is hash-agnostic — only oracle verifiability changes. */
+  * memoized — never shipped with the plan, never md5'd per row. The
+  * sign-projection geometry is hash-agnostic: xxh64 planes would change
+  * only the oracle verifiability. */
 object SrpMd5Ops {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
@@ -502,73 +384,20 @@ object SrpMd5Ops {
   }
 }
 
-case class FloatVecSrpMd5(child: Expression, planes: Int = 32) extends UnaryExpression {
-  require(planes > 0 && planes <= 64, "planes must be in [1, 64]")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(ExprChecks.isFloatArray(child.dataType), "ARRAY<FLOAT>", child.dataType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    SrpMd5Ops.srp(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.SrpMd5Ops.srp($c, $planes)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Content-defined chunking (CDC) over binary payloads — the storage-dedup
+/** Content-defined chunking (CDC) over TEXT — the storage-dedup
   * primitive: boundaries are set where a gear rolling hash meets a mask, so
-  * an insertion near the front of a blob shifts only the chunks up to the
+  * an insertion near the front of a text shifts only the chunks up to the
   * next boundary, and everything after re-aligns (fixed-size chunking loses
-  * ALL alignment after one shifted byte). */
-object ChunkOps {
-  /** Deterministic gear table (no RNG): per-byte constants from xxh64. */
-  private val Gear: Array[Long] =
-    Array.tabulate(256)(i => XXH64.hashLong(i.toLong, 0x9E3779B97F4A7C15L))
-
-  /** xxh64 of every content-defined chunk. A boundary closes a chunk when
-    * it is at least `minSize` bytes and the rolling hash's low `maskBits`
-    * bits are zero (expected chunk size ~ minSize + 2^maskBits); the hash
-    * state resets per chunk, which is what makes later chunks re-align
-    * after an edit. A chunk is force-cut at `minSize + 4·2^maskBits` bytes
-    * (FastCDC's max-size rule) — periodic content can cycle without ever
-    * meeting the mask, and without the cap a pathological blob would
-    * produce one giant chunk. The tail (if any) is always a chunk. */
-  def cdcChunkHashes(bytes: Array[Byte], minSize: Int, maskBits: Int): ArrayData = {
-    val mask = (1L << maskBits) - 1L
-    // Long arithmetic: an Int shift is mod 32, so maskBits >= 29 would
-    // overflow into a negative cap and force-cut every byte.
-    val maxSize = minSize.toLong + 4L * (1L << maskBits)
-    val out = new java.util.ArrayList[java.lang.Long]()
-    var start = 0
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) {
-      h = (h << 1) + Gear(bytes(i) & 0xff)
-      val size = i - start + 1
-      if ((size >= minSize && (h & mask) == 0L) || size >= maxSize) {
-        out.add(XXH64.hashUnsafeBytes(
-          bytes, Platform.BYTE_ARRAY_OFFSET + start, size, ShingleOps.Seed))
-        start = i + 1
-        h = 0L
-      }
-      i += 1
-    }
-    if (start < bytes.length) {
-      out.add(XXH64.hashUnsafeBytes(
-        bytes, Platform.BYTE_ARRAY_OFFSET + start, bytes.length - start, ShingleOps.Seed))
-    }
-    val arr = new Array[Long](out.size())
-    var k = 0
-    while (k < arr.length) { arr(k) = out.get(k); k += 1 }
-    new GenericArrayData(arr)
-  }
-}
-
-/** md5-domain CDC over TEXT — the SQL-replayable sibling of
-  * [[CdcChunkHashes]] (the d07 FloatVecSrpMd5 precedent: derivation in the
-  * md5 domain so a DuckDB oracle rebuilds every internal value; production
-  * keeps the xxh64/gear-table kernel). Three substitutions make the whole
-  * state machine replayable:
+  * ALL alignment after one shifted character). A boundary closes a chunk
+  * when it is at least `minSize` characters and the rolling hash's low
+  * `maskBits` bits are zero (expected chunk size ~ minSize + 2^maskBits);
+  * the hash state resets per chunk. A chunk is force-cut at
+  * `minSize + 4·2^maskBits` characters (FastCDC's max-size rule) —
+  * periodic content can cycle without ever meeting the mask. The tail (if
+  * any) is always a chunk.
+  *
+  * Every internal value is derived in the md5 domain, so a DuckDB oracle
+  * rebuilds it (the d07 vec_srp_md5 precedent):
   *   - the gear table is md5("g|code") truncated to 56 bits — any engine
   *     with md5 rebuilds it from nothing;
   *   - the rolling hash is h' = (h·2 + gear) mod 2^55 — every intermediate
@@ -577,8 +406,7 @@ object ChunkOps {
   *   - chunk digests are md5(chunk substring) truncated to 56 bits.
   * Operates on STRING characters (the fixture is ASCII, where char
   * positions = byte positions — stated here because a byte-level oracle
-  * via ENCODE would diverge on multi-byte text). Cut rule and max-size cap
-  * are CdcChunkHashes' exactly. */
+  * via ENCODE would diverge on multi-byte text). */
 object ChunkMd5Ops {
   private val Md5 = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
@@ -598,6 +426,8 @@ object ChunkMd5Ops {
   def cdcChunkHashes(s: UTF8String, minSize: Int, maskBits: Int): ArrayData = {
     val str = s.toString
     val mask = (1L << maskBits) - 1L
+    // Long arithmetic: an Int shift is mod 32, so maskBits >= 29 would
+    // overflow into a negative cap and force-cut every character.
     val maxSize = minSize.toLong + 4L * (1L << maskBits)
     val out = new java.util.ArrayList[java.lang.Long]()
     var start = 0
@@ -619,39 +449,6 @@ object ChunkMd5Ops {
     while (k < arr.length) { arr(k) = out.get(k); k += 1 }
     new GenericArrayData(arr)
   }
-}
-
-case class CdcChunkHashesMd5(child: Expression, minSize: Int = 16, maskBits: Int = 6)
-  extends UnaryExpression {
-  require(minSize > 0 && maskBits > 0 && maskBits <= 54,
-    "minSize must be positive and maskBits in [1, 54]")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    ChunkMd5Ops.cdcChunkHashes(input.asInstanceOf[UTF8String], minSize, maskBits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.ChunkMd5Ops.cdcChunkHashes($c, $minSize, $maskBits)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "cdc_chunk_hashes_md5"
-}
-
-case class CdcChunkHashes(child: Expression, minSize: Int = 16, maskBits: Int = 6)
-  extends UnaryExpression {
-  require(minSize > 0 && maskBits > 0 && maskBits <= 60,
-    "minSize must be positive and maskBits in [1, 60]")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == BinaryType, "BINARY", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    ChunkOps.cdcChunkHashes(input.asInstanceOf[Array[Byte]], minSize, maskBits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.ChunkOps.cdcChunkHashes($c, $minSize, $maskBits)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken 2003 —
@@ -783,41 +580,6 @@ object WinnowOps {
   }
 }
 
-/** `winnow_fingerprints_rolling(text, k, w)` — the O(1)-per-position
-  * Karp-Rabin production kernel; see [[WinnowOps.fingerprintsRolling]]. */
-case class WinnowFingerprintsRolling(child: Expression, k: Int = 32, w: Int = 8)
-  extends UnaryExpression {
-  require(k > 0 && w > 0, "k and w must be positive")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowOps.fingerprintsRolling(input.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.WinnowOps.fingerprintsRolling($c, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "winnow_fingerprints_rolling"
-}
-
-/** `winnow_fingerprints(text[, k, w])` — the winnowed fingerprint SET of a
-  * document (sorted distinct); see [[WinnowOps]] for the guarantee. */
-case class WinnowFingerprints(child: Expression, k: Int = 32, w: Int = 8)
-  extends UnaryExpression {
-  require(k > 0 && w > 0, s"k and w must be positive, got k=$k w=$w")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowOps.fingerprints(input.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.WinnowOps.fingerprints($c, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Deletion-neighborhood hashing for edit-distance blocking (FastSS /
   * SymSpell): the sorted distinct xxhash64 set of {s} ∪ {s minus char i}.
   * Two strings within edit distance 1 always share a member (substitution
@@ -872,20 +634,6 @@ object DeletionOps {
   }
 }
 
-/** `deletion_variant_hashes(s)` — see [[DeletionOps]]. */
-case class DeletionVariantHashes(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    DeletionOps.variantHashes(input.asInstanceOf[UTF8String], ShingleOps.Seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.DeletionOps.variantHashes($c, ${ShingleOps.Seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Morton (Z-order) curve keys for multi-dimensional data layout.
   *
   * Writing 100 TB sorted by ONE column gives min/max file pruning on that
@@ -916,35 +664,11 @@ object ZOrderOps {
   }
 }
 
-/** `zorder_key(x, y[, bits])` — Morton-interleaved layout key of two
-  * integer columns (low `bits` of each; callers quantize wider domains
-  * first). Range-partitioning + sorting writes by this key clusters rows
-  * that are close in BOTH dimensions into the same files, so min/max
-  * zone maps prune scans filtered on either column (LayoutSpec measures
-  * the bounding-box shrink vs a single-column sort). */
-case class ZOrderKey(left: Expression, right: Expression, bits: Int = 16)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(bits > 0 && bits <= 31, s"bits must be in [1, 31], got $bits")
-  private def isIntegral(dt: DataType): Boolean =
-    dt == IntegerType || dt == LongType || dt == ShortType || dt == ByteType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(isIntegral(left.dataType) && isIntegral(right.dataType),
-      "integral types on both sides",
-      if (isIntegral(left.dataType)) right.dataType else left.dataType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ZOrderOps.interleave2(
-      a.asInstanceOf[Number].longValue(), b.asInstanceOf[Number].longValue(), bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // int/short/byte operands widen to long implicitly in the generated Java
-    defineCodeGen(ctx, ev,
-      (a, b) => s"org.apache.spark.sql.graft.ZOrderOps.interleave2($a, $b, $bits)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Membership testing against a driver-built Bloom filter digest. */
+/** Membership testing against a Bloom filter built elsewhere (e.g.
+  * `df.stat.bloomFilter`, a distributed treeAggregate). The filter rides
+  * into codegen as a referenced object, so the whole digest ships once per
+  * task — the broadcast-a-sketch pattern that lets incoming data probe an
+  * already-ingested corpus map-side, with zero join against it. */
 object BloomOps {
   /** Count of array elements that might be members of `bf` — one tight
     * loop per row over the long-hash array, no per-element lambda. */
@@ -960,121 +684,27 @@ object BloomOps {
   }
 }
 
-/** `bloom_count_hits(arr)` — how many of an ARRAY<BIGINT>'s elements might
-  * be in a Bloom filter built elsewhere (e.g. `df.stat.bloomFilter`, a
-  * distributed treeAggregate). The filter rides into codegen as a
-  * referenced object, so the whole digest ships once per task — the
-  * broadcast-a-sketch pattern that lets 100 TB of incoming data probe an
-  * already-ingested corpus map-side, with zero join against it. */
-case class BloomCountHits(
-    child: Expression,
-    bloom: org.apache.spark.util.sketch.BloomFilter) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }, "ARRAY<BIGINT>", child.dataType)
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    BloomOps.countHits(input.asInstanceOf[ArrayData], bloom)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom,
-      classOf[org.apache.spark.util.sketch.BloomFilter].getName)
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.BloomOps.countHits($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Input type validation shared by the native expressions: the default
   * UnaryExpression/BinaryExpression accept anything, and e.g. an
   * ARRAY<DOUBLE> read through ArrayData.getFloat would be silently-garbage
   * rather than an analysis error. */
 object ExprChecks {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   def expect(ok: Boolean, what: String, got: DataType): TypeCheckResult =
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(s"expected $what, got ${got.sql}")
+  /** Every input satisfies `ok`; a failure names the first one that does not. */
+  def all(ok: DataType => Boolean, what: String): Seq[DataType] => TypeCheckResult =
+    ins => expect(ins.forall(ok), what, ins.find(!ok(_)).getOrElse(ins.head))
   def isFloatArray(dt: DataType): Boolean = dt match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
-}
-
-case class TokenShingleHashes(child: Expression, n: Int = 3)
-  extends UnaryExpression {
-  require(n > 0, "shingle size must be positive")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleOps.shingleHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.ShingleOps.shingleHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `token_window_hashes(text, n)` — ordered non-distinct n-token window
-  * hashes; see [[ShingleOps.windowHashes]]. */
-case class TokenWindowHashes(child: Expression, n: Int = 10)
-  extends UnaryExpression {
-  require(n > 0, "window size must be positive")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleOps.windowHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.ShingleOps.windowHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "token_window_hashes"
-}
-
-case class MinHashSignature(child: Expression, perms: Int = 32)
-  extends UnaryExpression {
-  require(perms > 0 && perms <= 1024, "perms must be in [1, 1024]")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_signature expects ARRAY<BIGINT>, got ${other.sql}")
-    }
+  def isLongArray(dt: DataType): Boolean = dt match {
+    case ArrayType(LongType, _) => true
+    case _ => false
   }
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleOps.minhash(input.asInstanceOf[ArrayData], perms)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.ShingleOps.minhash($c, $perms)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleOps.simhash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.ShingleOps.simhash($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `simhash_md5(text)` — the oracle-verifiable 60-bit SimHash; see
-  * [[ShingleOps.simhashMd5]]. */
-case class SimHashMd5(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleOps.simhashMd5(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.ShingleOps.simhashMd5($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def isIntegral(dt: DataType): Boolean =
+    dt == IntegerType || dt == LongType || dt == ShortType || dt == ByteType
 }
 
 /** Exact integer dot product of two ARRAY<BIGINT> vectors — the verify
@@ -1117,26 +747,6 @@ object LongVecOps {
     }
     acc
   }
-}
-
-/** `long_vec_dot(a, b)` — see [[LongVecOps]]. */
-case class LongVecDot(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  private def isLongArray(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(isLongArray(left.dataType) && isLongArray(right.dataType),
-      "ARRAY<BIGINT> on both sides", left.dataType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    LongVecOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.LongVecOps.dot($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object SortedIntersectOps {
@@ -1193,73 +803,6 @@ object SortedIntersectOps {
   }
 }
 
-/** `sorted_intersect_count(a, b)` — see [[SortedIntersectOps]]. INT result
-  * (matches `size(array_intersect(...))`'s type so downstream integer
-  * arithmetic is shape-identical at the swapped call sites).
-  *
-  * containsNull arrays are REJECTED at analysis (r17 advice): the merge
-  * scan reads `getLong` per slot, so a null element would be read as
-  * garbage — and a null also breaks the sortedness precondition itself
-  * (`array_sort` places nulls LAST, after the ascending run). Every
-  * internal producer (ShingleOps, the PrefixFilterOps enforcement pass)
-  * already emits `containsNull = false`; an external SQL user passing a
-  * nullable-element array now gets an analysis error instead of a
-  * silently wrong count. */
-case class SortedIntersectCount(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  private def isLongArray(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, false) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(isLongArray(left.dataType) && isLongArray(right.dataType),
-      "ARRAY<BIGINT> with containsNull = false on both sides (a null element " +
-        "would break the sorted-merge count; array_compact first)",
-      left.dataType)
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectOps.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.SortedIntersectOps.count($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Schema-only narrowing of an array column to `containsNull = false` —
-  * the array-element analogue of Catalyst's `KnownNotNull`: eval and
-  * codegen are the identity (zero cost, no copy, no per-row scan), only
-  * `dataType` changes. A plain `cast` cannot do this (Catalyst's
-  * resolvable-nullability rule rejects nullable → non-null), and
-  * `array_compact` — the untrusted-caller path — pays a runtime scan per
-  * row to prove what a TRUSTED caller already knows by construction.
-  *
-  * This is an ASSERTION with the same trust contract as
-  * `assumeDistinct`-style preconditions: the caller guarantees no element
-  * IS null at runtime; on a false promise downstream consumers that read
-  * primitive slots (e.g. [[SortedIntersectOps]]) see garbage, exactly as
-  * they would for a false sortedness promise. Motivating case (r18
-  * advice): an Option-encoded but null-free-by-construction input to
-  * `PrefixFilterOps.jaccardSelfJoin(assumeDistinct = true)` carries
-  * `containsNull = true` in its SCHEMA only, and r18's containsNull
-  * rejection in `sorted_intersect_count` would otherwise fail it at
-  * analysis where it computed correctly before. */
-case class KnownElementsNotNull(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType.isInstanceOf[ArrayType],
-      "an ARRAY column", child.dataType)
-  override def dataType: DataType = child.dataType match {
-    case ArrayType(et, _) => ArrayType(et, containsNull = false)
-    case dt => dt
-  }
-  override protected def nullSafeEval(v: Any): Any = v
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => c)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "known_elements_not_null"
-}
-
 /** Symmetric int8 SCALAR QUANTIZATION of float vectors — the 4× memory
   * lever every large ANN deployment pulls first (FAISS SQ8, Lucene/HNSW
   * int8): per-dimension scale s_d (the max |x_d| over a training sample),
@@ -1297,41 +840,6 @@ object SqOps {
     }
     acc
   }
-}
-
-/** `int8_quantize(vec)` — BINARY int8 codes of an ARRAY<FLOAT> vector
-  * against a reference-object per-dimension scale table; see [[SqOps]]. */
-case class Int8Quantize(child: Expression, scales: Array[Float])
-  extends UnaryExpression {
-  require(scales.nonEmpty, "the scale table must be non-empty")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(ExprChecks.isFloatArray(child.dataType), "ARRAY<FLOAT>", child.dataType)
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    SqOps.quantize(input.asInstanceOf[ArrayData], scales)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("scales", scales, "float[]")
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.SqOps.quantize($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `int8_vec_dot(a, b)` — exact integer dot of two int8 code columns. */
-case class Int8VecDot(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(left.dataType == BinaryType && right.dataType == BinaryType,
-      "BINARY on both sides", left.dataType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SqOps.dot(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.SqOps.dot($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Greedy Maximal Marginal Relevance (Carbonell & Goldstein 1998) over a
@@ -1400,30 +908,6 @@ object MmrOps {
   }
 }
 
-/** `mmr_select(candidates, k, lambdaMilli)` — ARRAY<BIGINT> of the k MMR
-  * picks in order; see [[MmrOps]]. Candidates: ARRAY<STRUCT<id BIGINT,
-  * score DOUBLE, emb ARRAY<FLOAT>>>. */
-case class MmrSelect(child: Expression, k: Int, lambdaMilli: Int)
-  extends UnaryExpression {
-  require(k > 0 && lambdaMilli >= 0 && lambdaMilli <= 1000,
-    s"k must be positive and lambdaMilli in [0, 1000], got k=$k lambda=$lambdaMilli")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType match {
-      case ArrayType(StructType(Array(a, b, c)), _) =>
-        a.dataType == LongType && b.dataType == DoubleType &&
-          ExprChecks.isFloatArray(c.dataType)
-      case _ => false
-    }, "ARRAY<STRUCT<BIGINT, DOUBLE, ARRAY<FLOAT>>>", child.dataType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    MmrOps.select(input.asInstanceOf[ArrayData], k, lambdaMilli)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.MmrOps.select($c, $k, $lambdaMilli)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Waveform feature extraction over raw PCM payloads — the audio analogue
   * of the image feature pass: one tight loop per row over 16-bit
   * little-endian samples, no codec, no per-sample lambda. */
@@ -1454,8 +938,6 @@ object PcmOps {
   }
 }
 
-/** `pcm_i16le_stats(payload)` — STRUCT(n_samples, sum_abs, max_abs,
-  * zero_crossings) of a 16-bit little-endian PCM blob; see [[PcmOps]]. */
 /** 2:1 PCM decimation with pair averaging — the transform half of the
   * audio pipeline (m08/m09 analyze; this RESAMPLES and re-encodes): output
   * sample j = (x[2j] + x[2j+1]) >> 1 (arithmetic shift = floor of the
@@ -1482,39 +964,8 @@ object PcmResampleOps {
   }
 }
 
-/** `pcm_downsample2(payload)` — BINARY → BINARY; see [[PcmResampleOps]]. */
-case class PcmDownsample2(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == BinaryType, "BINARY", child.dataType)
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    PcmResampleOps.downsample2(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.PcmResampleOps.downsample2($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "pcm_downsample2"
-}
-
-case class PcmI16leStats(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == BinaryType, "BINARY", child.dataType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_samples", IntegerType, nullable = false),
-    StructField("sum_abs", LongType, nullable = false),
-    StructField("max_abs", IntegerType, nullable = false),
-    StructField("zero_crossings", IntegerType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    PcmOps.statsI16le(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.PcmOps.statsI16le($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Coarse-quantizer assignment against a centroid table that rides into
-  * codegen as ONE referenced object (the BloomCountHits/PqEncode pattern)
+  * codegen as ONE referenced object (the bloom_count_hits/pq_encode pattern)
   * instead of nlist literal structs. The literal-pivot projection is fine
   * up to a few hundred centroids, but past that the plan itself becomes
   * the problem — O(nlist·dim) literal expressions blow up analysis and
@@ -1574,33 +1025,6 @@ object PivotOps {
     }
     new GenericArrayData(rows)
   }
-}
-
-/** `nearest_pivots(vec)` — ARRAY<STRUCT<pivot INT, sim DOUBLE>> of the k
-  * nearest centroids (cosine desc, ties to the lowest id) against a
-  * reference-object centroid table; see [[PivotOps]] for why this replaces
-  * literal pivots past a few hundred clusters. The sim field is what lets
-  * k-means training reuse this path (its assignment needs the winning
-  * similarity, not just the id). */
-case class NearestPivots(child: Expression, centroids: Array[Float], dim: Int, k: Int)
-  extends UnaryExpression {
-  require(dim > 0 && k > 0, s"dim and k must be positive, got dim=$dim k=$k")
-  require(centroids.nonEmpty && centroids.length % dim == 0,
-    s"centroid table length ${centroids.length} must be a positive multiple of dim=$dim")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(ExprChecks.isFloatArray(child.dataType), "ARRAY<FLOAT>", child.dataType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pivot", IntegerType, nullable = false),
-    StructField("sim", DoubleType, nullable = false))), containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    PivotOps.topPivots(input.asInstanceOf[ArrayData], centroids, dim, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "float[]")
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.PivotOps.topPivots($c, $ref, $dim, $k)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** One-pass Gopher/MassiveText repetition statistics — t17's kernel.
@@ -1841,26 +1265,6 @@ object DupSpanOps {
   }
 }
 
-/** `dup_span_rewrite(text, n)` —
-  * STRUCT<n_tokens INT, n_removed INT, clean_text STRING>;
-  * see [[DupSpanOps.rewrite]]. */
-case class DupSpanRewrite(child: Expression, n: Int = 5) extends UnaryExpression {
-  require(n > 0, "span size must be positive")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("n_removed", IntegerType, nullable = false),
-    StructField("clean_text", StringType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    DupSpanOps.rewrite(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.DupSpanOps.rewrite($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "dup_span_rewrite"
-}
-
 /** Count-Sketch hash family, one digest pass per (key, row) — the native
   * kernel behind [[graft.queries.CountSketch.pairs]]. BIT-IDENTICAL to
   * the md5-hex column pipeline it replaces (r21, guide §4):
@@ -1894,162 +1298,377 @@ object CountSketchOps {
   }
 }
 
-/** `count_sketch_pairs(k, d, w)` — ARRAY<STRUCT<b BIGINT, g BIGINT>> of
-  * the d (bucket, sign) pairs for a BIGINT key; see [[CountSketchOps]]. */
-case class CountSketchPairs(child: Expression, d: Int, w: Int)
-  extends UnaryExpression {
-  require(d >= 1 && w >= 2, s"need d >= 1 rows and w >= 2 buckets, got d=$d w=$w")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == LongType, "BIGINT", child.dataType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("b", LongType, nullable = false),
-    StructField("g", LongType, nullable = false))), containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    CountSketchOps.pairs(input.asInstanceOf[Long], d, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.CountSketchOps.pairs($c, $d, $w)")
+/** One native scalar kernel — everything Catalyst needs to know about it,
+  * as one row of [[Kernels.table]]. [[NativeUnary]] / [[NativeBinary]]
+  * carry only the row's `name`, their children and the parameter values
+  * (int literals or reference objects such as a Bloom filter or a
+  * codebook), so equality, hashing, canonicalization and task
+  * serialization behave as for any case-class expression. The row holds:
+  *  - `name`: the SQL / Column function name;
+  *  - `prettyName`: the explain name;
+  *  - `arity`: the number of input columns, 1 or 2;
+  *  - `sqlDefaults`: `Some(defaults)` registers the kernel in SQL with one
+  *    integer-literal argument per parameter, defaulting to `defaults`;
+  *    `None` keeps it Column-only (trained reference objects, or
+  *    internal helpers);
+  *  - `checkInputs`: the analysis-time input type check;
+  *  - `resultType`: the result type, given the input types;
+  *  - `eval`: interpreted evaluation over (non-null inputs ++ params);
+  *  - `gen`: codegen — registers any reference objects first, then maps
+  *    the inputs' Java values to the one-line static call into `*Ops`;
+  *  - `checkParams`: the parameter `require`s, run at construction.
+  * Adding a kernel takes one `*Ops` method plus one row (and, for the
+  * Column API, a one-line wrapper in [[functions]]). */
+private[graft] final case class Kernel(
+    name: String,
+    prettyName: String,
+    arity: Int,
+    sqlDefaults: Option[Seq[Int]],
+    checkInputs: Seq[DataType] => TypeCheckResult,
+    resultType: Seq[DataType] => DataType,
+    eval: Seq[Any] => Any,
+    gen: (CodegenContext, Seq[Any]) => Seq[String] => String,
+    checkParams: Seq[Any] => Unit = _ => ())
+
+/** A native scalar kernel over one input column; see [[Kernel]]. */
+case class NativeUnary(name: String, child: Expression, params: Seq[Any])
+    extends UnaryExpression {
+  Kernels.check(name, 1, params)
+  @transient private lazy val kernel = Kernels.byName(name)
+  override def prettyName: String = kernel.prettyName
+  // explain prints the input, then the parameters
+  override protected def stringArgs: Iterator[Any] = Iterator(child) ++ params
+  override def checkInputDataTypes(): TypeCheckResult = kernel.checkInputs(Seq(child.dataType))
+  override def dataType: DataType = kernel.resultType(Seq(child.dataType))
+  override protected def nullSafeEval(input: Any): Any = kernel.eval(input +: params)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val call = kernel.gen(ctx, params)
+    defineCodeGen(ctx, ev, c => call(Seq(c)))
+  }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-  override def prettyName: String = "count_sketch_pairs"
 }
 
-/** `gopher_repetition_stats(text)` —
-  * STRUCT<n_tokens INT, tok_chars BIGINT, top2_chars BIGINT, cov5 BIGINT>;
-  * see [[GopherOps.repetitionStats]]. */
-case class GopherRepetitionStats(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(child.dataType == StringType, "STRING", child.dataType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("tok_chars", LongType, nullable = false),
-    StructField("top2_chars", LongType, nullable = false),
-    StructField("cov5", LongType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    GopherOps.repetitionStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.GopherOps.repetitionStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "gopher_repetition_stats"
+/** A native scalar kernel over two input columns; see [[Kernel]]. */
+case class NativeBinary(name: String, left: Expression, right: Expression, params: Seq[Any])
+    extends BinaryExpression {
+  Kernels.check(name, 2, params)
+  @transient private lazy val kernel = Kernels.byName(name)
+  override def prettyName: String = kernel.prettyName
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right) ++ params
+  override def checkInputDataTypes(): TypeCheckResult =
+    kernel.checkInputs(Seq(left.dataType, right.dataType))
+  override def dataType: DataType = kernel.resultType(Seq(left.dataType, right.dataType))
+  override protected def nullSafeEval(a: Any, b: Any): Any = kernel.eval(a +: b +: params)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val call = kernel.gen(ctx, params)
+    defineCodeGen(ctx, ev, (a, b) => call(Seq(a, b)))
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 }
 
-/** Column-facing API + SQL registration for the native expressions. */
+/** The native scalar kernel table: one [[Kernel]] row per kernel. */
+private[graft] object Kernels {
+  import ExprChecks.{all, isFloatArray, isIntegral, isLongArray}
+
+  private type Gen = (CodegenContext, Seq[Any]) => Seq[String] => String
+  private val Pkg = "org.apache.spark.sql.graft"
+
+  /** Codegen of `Pkg.method(inputs..., params...)` for int parameters. */
+  private def call(method: String): Gen =
+    (_, params) => args => s"$Pkg.$method(${(args ++ params).mkString(", ")})"
+
+  /** [[call]] whose first parameter is a reference object: it rides into
+    * codegen once per task, not per row. */
+  private def callRef(method: String, ref: String, javaType: String): Gen = (ctx, params) => {
+    val r = ctx.addReferenceObj(ref, params.head, javaType)
+    args => s"$Pkg.$method(${(args ++ (r +: params.tail)).mkString(", ")})"
+  }
+
+  private def const(dt: DataType): Seq[DataType] => DataType = _ => dt
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  private val LongArr = ArrayType(LongType, containsNull = false)
+  private val Str = all(_ == StringType, "STRING")
+  private val Bin = all(_ == BinaryType, "BINARY")
+  private val FloatVec = all(isFloatArray, "ARRAY<FLOAT>")
+
+  private def checkPq(codebook: Array[Float], m: Int, k: Int, rangeMsg: String): Unit = {
+    require(m > 0 && k > 0 && k <= 256, rangeMsg)
+    require(codebook.length % (m * k) == 0, "codebook length must be m·k·subDim")
+  }
+
+  // name, prettyName, arity, sqlDefaults, checkInputs, resultType, eval,
+  // gen[, checkParams]
+  val table: Seq[Kernel] = Seq(
+    // ---- text ----
+    Kernel("token_shingle_hashes", "tokenshinglehashes", 1, Some(Seq(3)), Str, const(LongArr),
+      { case Seq(s: UTF8String, n: Int) => ShingleOps.shingleHashes(s, n) },
+      call("ShingleOps.shingleHashes"),
+      { case Seq(n: Int) => require(n > 0, "shingle size must be positive") }),
+    Kernel("token_window_hashes", "token_window_hashes", 1, Some(Seq(10)), Str, const(LongArr),
+      { case Seq(s: UTF8String, n: Int) => ShingleOps.windowHashes(s, n) },
+      call("ShingleOps.windowHashes"),
+      { case Seq(n: Int) => require(n > 0, "window size must be positive") }),
+    Kernel("minhash_signature", "minhashsignature", 1, Some(Seq(32)),
+      all(isLongArray, "ARRAY<BIGINT>"), const(LongArr),
+      { case Seq(a: ArrayData, perms: Int) => ShingleOps.minhash(a, perms) },
+      call("ShingleOps.minhash"),
+      { case Seq(perms: Int) => require(perms > 0 && perms <= 1024, "perms must be in [1, 1024]") }),
+    Kernel("simhash_md5", "simhashmd5", 1, Some(Nil), Str, const(LongType),
+      { case Seq(s: UTF8String) => ShingleOps.simhashMd5(s) },
+      call("ShingleOps.simhashMd5")),
+    Kernel("normalize_text", "normalizetext", 1, Some(Nil), Str, const(StringType),
+      { case Seq(s: UTF8String) => NormalizeOps.normalize(s) },
+      call("NormalizeOps.normalize")),
+    Kernel("winnow_fingerprints", "winnowfingerprints", 1, Some(Seq(32, 8)), Str, const(LongArr),
+      { case Seq(s: UTF8String, k: Int, w: Int) => WinnowOps.fingerprints(s, k, w) },
+      call("WinnowOps.fingerprints"),
+      { case Seq(k: Int, w: Int) => require(k > 0 && w > 0, s"k and w must be positive, got k=$k w=$w") }),
+    Kernel("winnow_fingerprints_rolling", "winnow_fingerprints_rolling", 1, Some(Seq(32, 8)),
+      Str, const(LongArr),
+      { case Seq(s: UTF8String, k: Int, w: Int) => WinnowOps.fingerprintsRolling(s, k, w) },
+      call("WinnowOps.fingerprintsRolling"),
+      { case Seq(k: Int, w: Int) => require(k > 0 && w > 0, "k and w must be positive") }),
+    Kernel("deletion_variant_hashes", "deletionvarianthashes", 1, Some(Nil), Str, const(LongArr),
+      { case Seq(s: UTF8String) => DeletionOps.variantHashes(s, ShingleOps.Seed) },
+      (_, _) => args => s"$Pkg.DeletionOps.variantHashes(${args.head}, ${ShingleOps.Seed}L)"),
+    Kernel("gopher_repetition_stats", "gopher_repetition_stats", 1, Some(Nil), Str,
+      const(struct("n_tokens" -> IntegerType, "tok_chars" -> LongType,
+        "top2_chars" -> LongType, "cov5" -> LongType)),
+      { case Seq(s: UTF8String) => GopherOps.repetitionStats(s) },
+      call("GopherOps.repetitionStats")),
+    Kernel("dup_span_rewrite", "dup_span_rewrite", 1, Some(Seq(5)), Str,
+      const(struct("n_tokens" -> IntegerType, "n_removed" -> IntegerType,
+        "clean_text" -> StringType)),
+      { case Seq(s: UTF8String, n: Int) => DupSpanOps.rewrite(s, n) },
+      call("DupSpanOps.rewrite"),
+      { case Seq(n: Int) => require(n > 0, "span size must be positive") }),
+    Kernel("cdc_chunk_hashes_md5", "cdc_chunk_hashes_md5", 1, Some(Seq(16, 6)), Str, const(LongArr),
+      { case Seq(s: UTF8String, minSize: Int, maskBits: Int) =>
+        ChunkMd5Ops.cdcChunkHashes(s, minSize, maskBits) },
+      call("ChunkMd5Ops.cdcChunkHashes"),
+      { case Seq(minSize: Int, maskBits: Int) => require(minSize > 0 && maskBits > 0 && maskBits <= 54,
+        "minSize must be positive and maskBits in [1, 54]") }),
+    // ---- sketches ----
+    Kernel("bloom_count_hits", "bloomcounthits", 1, None,
+      all(isLongArray, "ARRAY<BIGINT>"), const(IntegerType),
+      { case Seq(a: ArrayData, bf: BloomFilter) => BloomOps.countHits(a, bf) },
+      callRef("BloomOps.countHits", "bloom", classOf[BloomFilter].getName)),
+    Kernel("count_sketch_pairs", "count_sketch_pairs", 1, None, all(_ == LongType, "BIGINT"),
+      const(ArrayType(struct("b" -> LongType, "g" -> LongType), containsNull = false)),
+      { case Seq(k: Long, d: Int, w: Int) => CountSketchOps.pairs(k, d, w) },
+      call("CountSketchOps.pairs"),
+      { case Seq(d: Int, w: Int) =>
+        require(d >= 1 && w >= 2, s"need d >= 1 rows and w >= 2 buckets, got d=$d w=$w") }),
+    // ---- vectors ----
+    Kernel("vec_cosine", "floatveccosine", 2, Some(Nil),
+      all(isFloatArray, "ARRAY<FLOAT> on both sides"), const(DoubleType),
+      { case Seq(a: ArrayData, b: ArrayData) => VecOps.cosine(a, b) },
+      call("VecOps.cosine")),
+    // vec_dot / (vec_norm · vec_norm) is bit-identical to vec_cosine (see VecOps.dot)
+    Kernel("vec_dot", "floatvecdot", 2, Some(Nil),
+      all(isFloatArray, "ARRAY<FLOAT> on both sides"), const(DoubleType),
+      { case Seq(a: ArrayData, b: ArrayData) => VecOps.dot(a, b) },
+      call("VecOps.dot")),
+    Kernel("vec_norm", "floatvecnorm", 1, Some(Nil), FloatVec, const(DoubleType),
+      { case Seq(a: ArrayData) => VecOps.norm(a) },
+      call("VecOps.norm")),
+    Kernel("vec_srp_md5", "floatvecsrpmd5", 1, Some(Seq(32)), FloatVec, const(LongType),
+      { case Seq(v: ArrayData, planes: Int) => SrpMd5Ops.srp(v, planes) },
+      call("SrpMd5Ops.srp"),
+      { case Seq(planes: Int) => require(planes > 0 && planes <= 64, "planes must be in [1, 64]") }),
+    Kernel("long_vec_dot", "longvecdot", 2, None,
+      all(isLongArray, "ARRAY<BIGINT> on both sides"), const(LongType),
+      { case Seq(a: ArrayData, b: ArrayData) => LongVecOps.dot(a, b) },
+      call("LongVecOps.dot")),
+    // INT result, like size(array_intersect(...)). containsNull arrays are
+    // rejected at analysis: the merge scan reads getLong per slot, and a
+    // null also breaks the sortedness precondition (array_sort puts nulls
+    // last), so a nullable-element array would give a silently wrong count
+    Kernel("sorted_intersect_count", "sortedintersectcount", 2, Some(Nil),
+      all({ case ArrayType(LongType, false) => true; case _ => false },
+        "ARRAY<BIGINT> with containsNull = false on both sides (a null element " +
+          "would break the sorted-merge count; array_compact first)"),
+      const(IntegerType),
+      { case Seq(a: ArrayData, b: ArrayData) => SortedIntersectOps.count(a, b) },
+      call("SortedIntersectOps.count")),
+    // schema-only narrowing to containsNull = false, the array-element
+    // analogue of KnownNotNull: eval and codegen are the identity. A cast
+    // cannot narrow nullability and array_compact pays a per-row scan; this
+    // is an ASSERTION by a trusted caller that no element is null — on a
+    // false promise, primitive-slot readers downstream see garbage
+    Kernel("known_elements_not_null", "known_elements_not_null", 1, None,
+      all(_.isInstanceOf[ArrayType], "an ARRAY column"),
+      ins => ins.head match {
+        case ArrayType(et, _) => ArrayType(et, containsNull = false)
+        case dt => dt
+      },
+      { case Seq(v) => v },
+      (_, _) => args => args.head),
+    Kernel("int8_quantize", "int8quantize", 1, None, FloatVec, const(BinaryType),
+      { case Seq(v: ArrayData, scales: Array[Float]) => SqOps.quantize(v, scales) },
+      callRef("SqOps.quantize", "scales", "float[]"),
+      { case Seq(scales: Array[Float]) => require(scales.nonEmpty, "the scale table must be non-empty") }),
+    Kernel("int8_vec_dot", "int8vecdot", 2, Some(Nil), all(_ == BinaryType, "BINARY on both sides"),
+      const(LongType),
+      { case Seq(a: Array[Byte], b: Array[Byte]) => SqOps.dot(a, b) },
+      call("SqOps.dot")),
+    // the sim field lets k-means training reuse this path: its assignment
+    // needs the winning similarity, not just the id
+    Kernel("nearest_pivots", "nearestpivots", 1, None, FloatVec,
+      const(ArrayType(struct("pivot" -> IntegerType, "sim" -> DoubleType), containsNull = false)),
+      { case Seq(v: ArrayData, centroids: Array[Float], dim: Int, k: Int) =>
+        PivotOps.topPivots(v, centroids, dim, k) },
+      callRef("PivotOps.topPivots", "centroids", "float[]"),
+      { case Seq(centroids: Array[Float], dim: Int, k: Int) =>
+        require(dim > 0 && k > 0, s"dim and k must be positive, got dim=$dim k=$k")
+        require(centroids.nonEmpty && centroids.length % dim == 0,
+          s"centroid table length ${centroids.length} must be a positive multiple of dim=$dim") }),
+    // candidates: ARRAY<STRUCT<id BIGINT, score DOUBLE, emb ARRAY<FLOAT>>>
+    Kernel("mmr_select", "mmrselect", 1, None,
+      all({
+        case ArrayType(StructType(Array(a, b, c)), _) =>
+          a.dataType == LongType && b.dataType == DoubleType && isFloatArray(c.dataType)
+        case _ => false
+      }, "ARRAY<STRUCT<BIGINT, DOUBLE, ARRAY<FLOAT>>>"),
+      const(LongArr),
+      { case Seq(a: ArrayData, k: Int, lambdaMilli: Int) => MmrOps.select(a, k, lambdaMilli) },
+      call("MmrOps.select"),
+      { case Seq(k: Int, lambdaMilli: Int) => require(k > 0 && lambdaMilli >= 0 && lambdaMilli <= 1000,
+        s"k must be positive and lambdaMilli in [0, 1000], got k=$k lambda=$lambdaMilli") }),
+    Kernel("pq_encode", "pqencode", 1, None, FloatVec, const(BinaryType),
+      { case Seq(v: ArrayData, cb: Array[Float], m: Int, k: Int) => PqOps.encode(v, cb, m, k) },
+      callRef("PqOps.encode", "pqCodebook", "float[]"),
+      { case Seq(cb: Array[Float], m: Int, k: Int) =>
+        checkPq(cb, m, k, "m must be positive and k in [1, 256] (one byte per code)") }),
+    Kernel("pq_adc_lut", "pqadclut", 1, None, FloatVec,
+      const(ArrayType(DoubleType, containsNull = false)),
+      { case Seq(q: ArrayData, cb: Array[Float], m: Int, k: Int) => PqOps.adcLut(q, cb, m, k) },
+      callRef("PqOps.adcLut", "pqCodebook", "float[]"),
+      { case Seq(cb: Array[Float], m: Int, k: Int) =>
+        checkPq(cb, m, k, "m must be positive and k in [1, 256]") }),
+    Kernel("pq_adc_score", "pqadcscore", 2, None,
+      ins => ExprChecks.expect(ins(0) == BinaryType && (ins(1) match {
+        case ArrayType(DoubleType, _) => true
+        case _ => false
+      }), "(BINARY, ARRAY<DOUBLE>)", ins(0)),
+      const(DoubleType),
+      { case Seq(code: Array[Byte], lut: ArrayData) => PqOps.adcScore(code, lut) },
+      call("PqOps.adcScore")),
+    // ---- layout ----
+    // int/short/byte operands widen to long implicitly in the generated Java
+    Kernel("zorder_key", "zorderkey", 2, Some(Seq(16)),
+      all(isIntegral, "integral types on both sides"), const(LongType),
+      { case Seq(x: Number, y: Number, bits: Int) => ZOrderOps.interleave2(x.longValue, y.longValue, bits) },
+      call("ZOrderOps.interleave2"),
+      { case Seq(bits: Int) => require(bits > 0 && bits <= 31, s"bits must be in [1, 31], got $bits") }),
+    // ---- audio ----
+    Kernel("pcm_i16le_stats", "pcmi16lestats", 1, Some(Nil), Bin,
+      const(struct("n_samples" -> IntegerType, "sum_abs" -> LongType,
+        "max_abs" -> IntegerType, "zero_crossings" -> IntegerType)),
+      { case Seq(b: Array[Byte]) => PcmOps.statsI16le(b) },
+      call("PcmOps.statsI16le")),
+    Kernel("pcm_downsample2", "pcm_downsample2", 1, Some(Nil), Bin, const(BinaryType),
+      { case Seq(b: Array[Byte]) => PcmResampleOps.downsample2(b) },
+      call("PcmResampleOps.downsample2")))
+
+  val byName: Map[String, Kernel] = table.map(k => k.name -> k).toMap
+
+  /** The construction-time checks: a known kernel, the right number of
+    * inputs, and the row's parameter `require`s. */
+  def check(name: String, arity: Int, params: Seq[Any]): Unit = {
+    val k = byName.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown native kernel: $name"))
+    require(k.arity == arity, s"$name takes ${k.arity} input column(s), got $arity")
+    k.checkParams(params)
+  }
+
+  def expression(name: String, inputs: Seq[Expression], params: Seq[Any]): Expression =
+    inputs match {
+      case Seq(c) => NativeUnary(name, c, params.toList)
+      case Seq(l, r) => NativeBinary(name, l, r, params.toList)
+      case _ => throw new IllegalArgumentException(
+        s"$name: a native kernel takes 1 or 2 input columns, got ${inputs.length}")
+    }
+
+  def intArg(exprs: Seq[Expression], i: Int, default: Int): Int =
+    if (exprs.length > i) exprs(i) match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"argument ${i + 1} must be an integer literal, got $other")
+    } else default
+
+  /** SQL builder of a registered row: the first `arity` arguments are the
+    * inputs, the rest integer literals (omitted ones take `defaults`). */
+  def sqlBuilder(k: Kernel, defaults: Seq[Int]): Seq[Expression] => Expression = exprs => {
+    require(exprs.length >= k.arity && exprs.length <= k.arity + defaults.length,
+      s"${k.name} takes ${k.arity} input(s) and up to ${defaults.length} integer " +
+        s"literal(s), got ${exprs.length} arguments")
+    expression(k.name, exprs.take(k.arity),
+      defaults.indices.map(i => intArg(exprs, k.arity + i, defaults(i))))
+  }
+}
+
+/** Column-facing API + SQL registration for the native expressions. Each
+  * scalar wrapper is one call into the [[Kernels]] table. */
 object functions {
   import org.apache.spark.sql.{Column, SparkSession}
   import org.apache.spark.sql.classic.ExpressionUtils
 
-  def token_shingle_hashes(c: Column, n: Int = 3): Column =
-    ExpressionUtils.column(TokenShingleHashes(ExpressionUtils.expression(c), n))
+  private def kernel(name: String, inputs: Column*)(params: Any*): Column =
+    ExpressionUtils.column(
+      Kernels.expression(name, inputs.map(ExpressionUtils.expression), params))
 
-  def token_window_hashes(c: Column, n: Int = 10): Column =
-    ExpressionUtils.column(TokenWindowHashes(ExpressionUtils.expression(c), n))
-
+  def token_shingle_hashes(c: Column, n: Int = 3): Column = kernel("token_shingle_hashes", c)(n)
+  def token_window_hashes(c: Column, n: Int = 10): Column = kernel("token_window_hashes", c)(n)
   def minhash_signature(c: Column, perms: Int = 32): Column =
-    ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(c), perms))
-
-  def simhash64(c: Column): Column =
-    ExpressionUtils.column(SimHash64(ExpressionUtils.expression(c)))
-
-  def simhash_md5(c: Column): Column =
-    ExpressionUtils.column(SimHashMd5(ExpressionUtils.expression(c)))
-
-  def vec_cosine(a: Column, b: Column): Column =
-    ExpressionUtils.column(FloatVecCosine(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  def vec_dot(a: Column, b: Column): Column =
-    ExpressionUtils.column(FloatVecDot(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  def vec_norm(a: Column): Column =
-    ExpressionUtils.column(FloatVecNorm(ExpressionUtils.expression(a)))
-
-  def int8_quantize(c: Column, scales: Array[Float]): Column =
-    ExpressionUtils.column(Int8Quantize(ExpressionUtils.expression(c), scales))
-
-  def int8_vec_dot(a: Column, b: Column): Column =
-    ExpressionUtils.column(Int8VecDot(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  def vec_srp(c: Column, planes: Int = 32): Column =
-    ExpressionUtils.column(FloatVecSrp(ExpressionUtils.expression(c), planes))
-
-  def vec_srp_md5(c: Column, planes: Int = 32): Column =
-    ExpressionUtils.column(FloatVecSrpMd5(ExpressionUtils.expression(c), planes))
-
-  def normalize_text(c: Column): Column =
-    ExpressionUtils.column(NormalizeText(ExpressionUtils.expression(c)))
-
-  def gopher_repetition_stats(c: Column): Column =
-    ExpressionUtils.column(GopherRepetitionStats(ExpressionUtils.expression(c)))
-
-  def dup_span_rewrite(c: Column, n: Int = 5): Column =
-    ExpressionUtils.column(DupSpanRewrite(ExpressionUtils.expression(c), n))
-
-  def count_sketch_pairs(c: Column, d: Int, w: Int): Column =
-    ExpressionUtils.column(CountSketchPairs(ExpressionUtils.expression(c), d, w))
-
-  def bloom_count_hits(c: Column, bf: org.apache.spark.util.sketch.BloomFilter): Column =
-    ExpressionUtils.column(BloomCountHits(ExpressionUtils.expression(c), bf))
-
-  def cdc_chunk_hashes(c: Column, minSize: Int = 16, maskBits: Int = 6): Column =
-    ExpressionUtils.column(CdcChunkHashes(ExpressionUtils.expression(c), minSize, maskBits))
-
+    kernel("minhash_signature", c)(perms)
+  def simhash_md5(c: Column): Column = kernel("simhash_md5", c)()
+  def vec_cosine(a: Column, b: Column): Column = kernel("vec_cosine", a, b)()
+  def vec_dot(a: Column, b: Column): Column = kernel("vec_dot", a, b)()
+  def vec_norm(a: Column): Column = kernel("vec_norm", a)()
+  def int8_quantize(c: Column, scales: Array[Float]): Column = kernel("int8_quantize", c)(scales)
+  def int8_vec_dot(a: Column, b: Column): Column = kernel("int8_vec_dot", a, b)()
+  def vec_srp_md5(c: Column, planes: Int = 32): Column = kernel("vec_srp_md5", c)(planes)
+  def normalize_text(c: Column): Column = kernel("normalize_text", c)()
+  def gopher_repetition_stats(c: Column): Column = kernel("gopher_repetition_stats", c)()
+  def dup_span_rewrite(c: Column, n: Int = 5): Column = kernel("dup_span_rewrite", c)(n)
+  def count_sketch_pairs(c: Column, d: Int, w: Int): Column = kernel("count_sketch_pairs", c)(d, w)
+  def bloom_count_hits(c: Column, bf: BloomFilter): Column = kernel("bloom_count_hits", c)(bf)
   def cdc_chunk_hashes_md5(c: Column, minSize: Int = 16, maskBits: Int = 6): Column =
-    ExpressionUtils.column(CdcChunkHashesMd5(ExpressionUtils.expression(c), minSize, maskBits))
-
-  def pcm_downsample2(c: Column): Column =
-    ExpressionUtils.column(PcmDownsample2(ExpressionUtils.expression(c)))
-
+    kernel("cdc_chunk_hashes_md5", c)(minSize, maskBits)
+  def pcm_downsample2(c: Column): Column = kernel("pcm_downsample2", c)()
   def winnow_fingerprints_rolling(c: Column, k: Int = 32, w: Int = 8): Column =
-    ExpressionUtils.column(WinnowFingerprintsRolling(ExpressionUtils.expression(c), k, w))
-
-  def zorder_key(x: Column, y: Column, bits: Int = 16): Column =
-    ExpressionUtils.column(ZOrderKey(
-      ExpressionUtils.expression(x), ExpressionUtils.expression(y), bits))
-
+    kernel("winnow_fingerprints_rolling", c)(k, w)
+  def zorder_key(x: Column, y: Column, bits: Int = 16): Column = kernel("zorder_key", x, y)(bits)
   def winnow_fingerprints(c: Column, k: Int = 32, w: Int = 8): Column =
-    ExpressionUtils.column(WinnowFingerprints(ExpressionUtils.expression(c), k, w))
-
-  def deletion_variant_hashes(c: Column): Column =
-    ExpressionUtils.column(DeletionVariantHashes(ExpressionUtils.expression(c)))
-
+    kernel("winnow_fingerprints", c)(k, w)
+  def deletion_variant_hashes(c: Column): Column = kernel("deletion_variant_hashes", c)()
   def nearest_pivots(c: Column, centroids: Array[Float], dim: Int, k: Int): Column =
-    ExpressionUtils.column(NearestPivots(ExpressionUtils.expression(c), centroids, dim, k))
-
-  def pcm_i16le_stats(c: Column): Column =
-    ExpressionUtils.column(PcmI16leStats(ExpressionUtils.expression(c)))
-
+    kernel("nearest_pivots", c)(centroids, dim, k)
+  def pcm_i16le_stats(c: Column): Column = kernel("pcm_i16le_stats", c)()
   def mmr_select(c: Column, k: Int, lambdaMilli: Int): Column =
-    ExpressionUtils.column(MmrSelect(ExpressionUtils.expression(c), k, lambdaMilli))
-
-  def long_vec_dot(a: Column, b: Column): Column =
-    ExpressionUtils.column(LongVecDot(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    kernel("mmr_select", c)(k, lambdaMilli)
+  def long_vec_dot(a: Column, b: Column): Column = kernel("long_vec_dot", a, b)()
 
   /** |a ∩ b| of ascending-sorted distinct ARRAY<BIGINT>s, zero-allocation
     * (see [[SortedIntersectOps]] — caller must guarantee sortedness). */
   def sorted_intersect_count(a: Column, b: Column): Column =
-    ExpressionUtils.column(SortedIntersectCount(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    kernel("sorted_intersect_count", a, b)()
 
   /** Zero-cost schema narrowing to `containsNull = false` for a TRUSTED
-    * null-free array column (see [[KnownElementsNotNull]] — a false
-    * promise yields garbage downstream, like a false sortedness promise). */
-  def known_elements_not_null(a: Column): Column =
-    ExpressionUtils.column(KnownElementsNotNull(ExpressionUtils.expression(a)))
+    * null-free array column — a false promise yields garbage downstream,
+    * like a false sortedness promise. */
+  def known_elements_not_null(a: Column): Column = kernel("known_elements_not_null", a)()
 
   def pq_encode(c: Column, codebook: Array[Float], m: Int, k: Int): Column =
-    ExpressionUtils.column(PqEncode(ExpressionUtils.expression(c), codebook, m, k))
-
+    kernel("pq_encode", c)(codebook, m, k)
   def pq_adc_lut(c: Column, codebook: Array[Float], m: Int, k: Int): Column =
-    ExpressionUtils.column(PqAdcLut(ExpressionUtils.expression(c), codebook, m, k))
-
-  def pq_adc_score(code: Column, lut: Column): Column =
-    ExpressionUtils.column(PqAdcScore(
-      ExpressionUtils.expression(code), ExpressionUtils.expression(lut)))
+    kernel("pq_adc_lut", c)(codebook, m, k)
+  def pq_adc_score(code: Column, lut: Column): Column = kernel("pq_adc_score", code, lut)()
 
   /** Bounded top-k aggregate over a struct column (k smallest under the
     * struct's lexicographic order; lead with a negated field for "top by x
@@ -2082,67 +1701,25 @@ object functions {
     ExpressionUtils.column(TopKPair(ExpressionUtils.expression(negScore),
       ExpressionUtils.expression(id), k, distinct = true).toAggregateExpression())
 
-  /** SQL builders for every native expression — ONE list consumed by both
-    * registration paths: [[registerAll]] (session temp functions) and
-    * [[GraftExtensions]] (`spark.sql.extensions` cluster conf). */
-  private[graft] def sqlBuilders: Seq[
-      (String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = {
-    def intArg(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-        i: Int, default: Int): Int =
-      if (exprs.length > i) exprs(i) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"argument ${i + 1} must be an integer literal, got $other")
-      } else default
-    Seq(
-      "token_shingle_hashes" ->
-        (exprs => TokenShingleHashes(exprs.head, intArg(exprs, 1, 3))),
-      "token_window_hashes" ->
-        (exprs => TokenWindowHashes(exprs.head, intArg(exprs, 1, 10))),
-      "minhash_signature" ->
-        (exprs => MinHashSignature(exprs.head, intArg(exprs, 1, 32))),
-      "simhash64" -> (exprs => SimHash64(exprs.head)),
-      "simhash_md5" -> (exprs => SimHashMd5(exprs.head)),
-      "vec_cosine" -> (exprs => FloatVecCosine(exprs(0), exprs(1))),
-      "vec_dot" -> (exprs => FloatVecDot(exprs(0), exprs(1))),
-      "vec_norm" -> (exprs => FloatVecNorm(exprs.head)),
-      // int8_quantize is NOT SQL-registered: its scale table is a trained
-      // reference object (the NearestPivots/BloomCountHits precedent)
-      "int8_vec_dot" -> (exprs => Int8VecDot(exprs(0), exprs(1))),
-      "sorted_intersect_count" -> (exprs => SortedIntersectCount(exprs(0), exprs(1))),
-      "vec_srp" -> (exprs => FloatVecSrp(exprs.head, intArg(exprs, 1, 32))),
-      "vec_srp_md5" -> (exprs => FloatVecSrpMd5(exprs.head, intArg(exprs, 1, 32))),
-      "normalize_text" -> (exprs => NormalizeText(exprs.head)),
-      "gopher_repetition_stats" -> (exprs => GopherRepetitionStats(exprs.head)),
-      "dup_span_rewrite" ->
-        (exprs => DupSpanRewrite(exprs.head, intArg(exprs, 1, 5))),
-      "cdc_chunk_hashes" ->
-        (exprs => CdcChunkHashes(exprs.head, intArg(exprs, 1, 16), intArg(exprs, 2, 6))),
-      "cdc_chunk_hashes_md5" ->
-        (exprs => CdcChunkHashesMd5(exprs.head, intArg(exprs, 1, 16), intArg(exprs, 2, 6))),
-      "zorder_key" -> (exprs => ZOrderKey(exprs(0), exprs(1), intArg(exprs, 2, 16))),
-      "winnow_fingerprints" ->
-        (exprs => WinnowFingerprints(exprs.head, intArg(exprs, 1, 32), intArg(exprs, 2, 8))),
-      "winnow_fingerprints_rolling" ->
-        (exprs => WinnowFingerprintsRolling(exprs.head, intArg(exprs, 1, 32), intArg(exprs, 2, 8))),
-      "deletion_variant_hashes" -> (exprs => DeletionVariantHashes(exprs.head)),
-      "pcm_i16le_stats" -> (exprs => PcmI16leStats(exprs.head)),
-      "pcm_downsample2" -> (exprs => PcmDownsample2(exprs.head)),
+  /** SQL builders — ONE list consumed by both registration paths:
+    * [[registerAll]] (session temp functions) and [[GraftExtensions]]
+    * (`spark.sql.extensions` cluster conf). The scalar kernels come from
+    * the rows of [[Kernels.table]] that register in SQL. */
+  private[graft] def sqlBuilders: Seq[(String, Seq[Expression] => Expression)] =
+    Kernels.table.flatMap(k => k.sqlDefaults.map(d => k.name -> Kernels.sqlBuilder(k, d))) ++ Seq(
       // aggregates register like any expression: the builder returns the
       // AggregateExpression wrapper, so SQL GROUP BY picks them up
       "top_k_struct" ->
-        (exprs => TopKStruct(exprs.head, intArg(exprs, 1, 10)).toAggregateExpression()),
+        (exprs => TopKStruct(exprs.head, Kernels.intArg(exprs, 1, 10)).toAggregateExpression()),
       "top_k_struct_distinct" ->
-        (exprs => TopKStruct(exprs.head, intArg(exprs, 1, 10), distinct = true)
+        (exprs => TopKStruct(exprs.head, Kernels.intArg(exprs, 1, 10), distinct = true)
           .toAggregateExpression()),
       "top_k_pair" ->
-        (exprs => TopKPair(exprs(0), exprs(1), intArg(exprs, 2, 10))
+        (exprs => TopKPair(exprs(0), exprs(1), Kernels.intArg(exprs, 2, 10))
           .toAggregateExpression()),
       "top_k_pair_distinct" ->
-        (exprs => TopKPair(exprs(0), exprs(1), intArg(exprs, 2, 10), distinct = true)
+        (exprs => TopKPair(exprs(0), exprs(1), Kernels.intArg(exprs, 2, 10), distinct = true)
           .toAggregateExpression()))
-  }
 
   /** Make the expressions callable from SQL (temp functions). */
   def registerAll(spark: SparkSession): Unit = {

@@ -1,9 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /** Product quantization (PQ) — the vector-compression half of the classic
   * IVF-PQ ANN design (Jégou et al., "Product Quantization for Nearest
@@ -187,64 +184,4 @@ object PqOps {
     }
     if (n2 == 0.0) 0.0 else dot / math.sqrt(n2)
   }
-}
-
-/** `pq_encode(vec)` — PQ-compress a float vector to its m-byte code. The
-  * trained codebook rides into codegen as a referenced object (the
-  * BloomCountHits pattern): it ships once per task, not per row. */
-case class PqEncode(child: Expression, codebook: Array[Float], m: Int, k: Int)
-  extends UnaryExpression {
-  require(m > 0 && k > 0 && k <= 256, "m must be positive and k in [1, 256] (one byte per code)")
-  require(codebook.length % (m * k) == 0, "codebook length must be m·k·subDim")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(ExprChecks.isFloatArray(child.dataType), "ARRAY<FLOAT>", child.dataType)
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    PqOps.encode(input.asInstanceOf[ArrayData], codebook, m, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodebook", codebook, "float[]")
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.PqOps.encode($c, $ref, $m, $k)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `pq_adc_lut(query_vec)` — the query-side ADC lookup table (2·m·k
-  * doubles). Computed once per query row; the scoring join broadcasts it
-  * alongside the query id. */
-case class PqAdcLut(child: Expression, codebook: Array[Float], m: Int, k: Int)
-  extends UnaryExpression {
-  require(m > 0 && k > 0 && k <= 256, "m must be positive and k in [1, 256]")
-  require(codebook.length % (m * k) == 0, "codebook length must be m·k·subDim")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(ExprChecks.isFloatArray(child.dataType), "ARRAY<FLOAT>", child.dataType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    PqOps.adcLut(input.asInstanceOf[ArrayData], codebook, m, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodebook", codebook, "float[]")
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.PqOps.adcLut($c, $ref, $m, $k)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `pq_adc_score(code, lut)` — approximate cosine of a compressed corpus
-  * vector against a query's ADC table: m table lookups per pair inside
-  * whole-stage codegen. */
-case class PqAdcScore(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprChecks.expect(
-      left.dataType == BinaryType && (right.dataType match {
-        case ArrayType(DoubleType, _) => true
-        case _ => false
-      }), "(BINARY, ARRAY<DOUBLE>)", left.dataType)
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(code: Any, lut: Any): Any =
-    PqOps.adcScore(code.asInstanceOf[Array[Byte]], lut.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, l) => s"org.apache.spark.sql.graft.PqOps.adcScore($c, $l)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -22,7 +22,7 @@ class DedupCapSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  import org.apache.spark.sql.graft.functions.{minhash_signature, simhash64, simhash_md5, token_shingle_hashes}
+  import org.apache.spark.sql.graft.functions.{minhash_signature, simhash_md5, token_shingle_hashes}
 
   private def shingles(docs: DataFrame) =
     docs.select(col("doc_id"), token_shingle_hashes(col("text"), 3).as("sh"))
@@ -65,9 +65,10 @@ class DedupCapSpec extends AnyFunSuite {
   }
 
   test("capped SRP candidates equal uncapped on the fixture (d07)") {
-    import org.apache.spark.sql.graft.functions.vec_srp
+    // d07's own sketch domain (md5 hyperplanes), as for d04 above
+    import org.apache.spark.sql.graft.functions.vec_srp_md5
     val sk = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), vec_srp(col("embedding"), 32).as("sk"))
+      .select(col("vec_id"), vec_srp_md5(col("embedding"), 32).as("sk"))
     def vecPairs(df: DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val capped = vecPairs(DedupQueries.srpCandidates(sk))
@@ -104,7 +105,7 @@ class DedupCapSpec extends AnyFunSuite {
   }
 
   test("the cap collapses a degenerate SimHash bucket (d04 shape)") {
-    val d = boilerplate.select(col("doc_id"), simhash64(col("text")).as("simhash"))
+    val d = boilerplate.select(col("doc_id"), simhash_md5(col("text")).as("simhash"))
     assert(DedupQueries.simhashPairs(d, Long.MaxValue).count() === 19900L)
     assert(DedupQueries.simhashPairs(d, bucketCap = 20L).count() === 0L)
   }

@@ -48,17 +48,6 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(agree(m("a"), m("b")) > agree(m("a"), m("c")))
   }
 
-  test("simhash64: identical texts collide; token order does not matter; disjoint texts differ") {
-    val df = Seq(
-      ("a", "alpha beta gamma delta"),
-      ("b", "delta gamma beta alpha"), // bag-of-words -> same simhash
-      ("c", "epsilon zeta eta theta iota kappa")
-    ).toDF("id", "t").select($"id", simhash64($"t").as("h"))
-    val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(m("a") === m("b"))
-    assert(m("a") !== m("c"))
-  }
-
   test("simhash_md5: 60-bit domain, bag-of-words, bit-replicable from per-token md5") {
     val df = Seq(
       ("a", "alpha beta gamma delta"),
@@ -137,20 +126,6 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(bad === 0)
   }
 
-  test("vec_srp: deterministic; similar vectors have closer sketches than dissimilar") {
-    val base = Array.tabulate(64)(i => math.sin(i).toFloat)
-    val near = base.clone(); near(0) = near(0) + 0.01f
-    val far = Array.tabulate(64)(i => math.cos(i * 3 + 1).toFloat)
-    val df = Seq(("base", base), ("near", near), ("far", far))
-      .toDF("id", "v").select($"id", vec_srp($"v", 32).as("s"))
-    val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(hamming(m("base"), m("near")) < hamming(m("base"), m("far")))
-    // rerun gives identical sketches
-    val m2 = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(m === m2)
-  }
-
   test("vec_srp_md5: equals an independent md5-hyperplane recompute; " +
     "same banding geometry as vec_srp") {
     // independent recompute: own MessageDigest, own fold — any drift in
@@ -183,49 +158,19 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(got(2) === 0L)
   }
 
-  test("cdc_chunk_hashes: deterministic, covers the payload, re-aligns after a prefix edit") {
-    // non-periodic payload (java.util.Random's LCG is specified, so the
-    // fixture is stable); periodic content would exercise only the
-    // max-size forced-cut path, where re-alignment cannot hold
-    val rnd = new java.util.Random(42)
-    val base = new Array[Byte](2000)
-    rnd.nextBytes(base)
-    val prefixed = "XY".getBytes("UTF-8") ++ base
-    val df = Seq(base, prefixed).toDF("b")
-      .select(cdc_chunk_hashes($"b").as("chunks"))
-    val Array(cBase, cPref) = df.collect().map(_.getSeq[Long](0))
-    // deterministic across runs
-    assert(df.collect().map(_.getSeq[Long](0)).toSeq === Seq(cBase, cPref))
-    assert(cBase.nonEmpty && cBase.size > 5, s"expected several chunks, got ${cBase.size}")
-    // CONTENT-DEFINED re-alignment: a 2-byte prefix insertion disturbs only
-    // the chunks before the first boundary after the edit; everything later
-    // re-aligns, so almost all chunks are shared
-    val shared = cBase.toSet.intersect(cPref.toSet).size
-    assert(shared >= cBase.size - 3,
-      s"CDC must re-align after a prefix edit: shared $shared of ${cBase.size}")
-    // fixed-size chunking loses ALL alignment on the same edit — the
-    // property that justifies CDC's existence
-    def fixedChunks(bytes: Array[Byte]) =
-      bytes.grouped(64).map(_.toSeq).toSet
-    val fixedShared = fixedChunks(base).intersect(fixedChunks(prefixed)).size
-    assert(shared > fixedShared,
-      s"CDC ($shared shared) must beat fixed chunking ($fixedShared shared)")
-  }
-
-  test("cdc_chunk_hashes: a mask the payload can't meet yields one tail chunk; range enforced") {
-    // maskBits >= 29 used to overflow the Int-shift max-size cap into a
-    // negative bound that force-cut on every byte; with the Long cap, a
-    // 40-bit mask over 4 KiB (P(boundary) ~ 2^-28 and max-size ~ 4 TiB)
-    // must produce exactly the single tail chunk
+  test("cdc_chunk_hashes_md5: a mask the text can't meet yields one tail chunk; range enforced") {
+    // maskBits >= 29 would overflow an Int-shift max-size cap into a
+    // negative bound that force-cuts on every character; with the Long
+    // cap, a 40-bit mask over 4096 chars (P(boundary) ~ 2^-28 and
+    // max-size ~ 4e12) must produce exactly the single tail chunk
     val rnd = new java.util.Random(7)
-    val payload = new Array[Byte](4096)
-    rnd.nextBytes(payload)
-    val chunks = Seq(payload).toDF("b")
-      .select(cdc_chunk_hashes($"b", 16, 40).as("c"))
+    val text = Seq.fill(4096)(('a' + rnd.nextInt(26)).toChar).mkString
+    val chunks = Seq(text).toDF("t")
+      .select(cdc_chunk_hashes_md5($"t", 16, 40).as("c"))
       .collect().head.getSeq[Long](0)
-    assert(chunks.size === 1, s"expected one whole-payload chunk, got ${chunks.size}")
-    val e = intercept[IllegalArgumentException](cdc_chunk_hashes($"b", 16, 61))
-    assert(e.getMessage.contains("[1, 60]"))
+    assert(chunks.size === 1, s"expected one whole-text chunk, got ${chunks.size}")
+    val e = intercept[IllegalArgumentException](cdc_chunk_hashes_md5($"t", 16, 55))
+    assert(e.getMessage.contains("[1, 54]"))
   }
 
   test("registerAll exposes the native expressions to SQL with literal int args") {
@@ -234,9 +179,9 @@ class ExpressionsSpec extends AnyFunSuite {
     val row = spark.sql("""
       SELECT size(token_shingle_hashes(t, 3)) AS n_sh,
              size(minhash_signature(token_shingle_hashes(t, 3), 16)) AS n_sig,
-             simhash64(t) AS sh64,
+             simhash_md5(t) AS sh,
              normalize_text('  A  b!! ') AS norm,
-             size(cdc_chunk_hashes(encode(t, 'UTF-8'), 4, 3)) AS n_chunks
+             size(cdc_chunk_hashes_md5(t, 4, 3)) AS n_chunks
       FROM reg_probe""").collect().head
     assert(row.getInt(0) === 4)        // 6 tokens -> 4 distinct 3-shingles
     assert(row.getInt(1) === 16)

@@ -47,8 +47,8 @@ class ExtensionsSpec extends AnyFunSuite {
     withExtensionSession { s =>
       assert(s ne base, "builder must create a NEW session for the extension conf")
       assert(s.sql("SELECT zorder_key(5, 3)").head().getLong(0) === 27L)
-      assert(s.sql("SELECT simhash64('alpha beta gamma')").head().getLong(0) ===
-        org.apache.spark.sql.graft.ShingleOps.simhash(
+      assert(s.sql("SELECT simhash_md5('alpha beta gamma')").head().getLong(0) ===
+        org.apache.spark.sql.graft.ShingleOps.simhashMd5(
           org.apache.spark.unsafe.types.UTF8String.fromString("alpha beta gamma")))
       assert(s.sql("SELECT size(winnow_fingerprints('tiny', 32, 8))").head().getInt(0) === 1)
       assert(s.sql(

@@ -237,6 +237,26 @@ class FlowAnalysisSpec extends AnyFunSuite {
     }
   }
 
+  test("impactedBy: a 150-view chain reaches its last view, plain and contracted " +
+      "(no depth cap truncates the walk)") {
+    // deeper than any fixed hop cap in both modes: the contracted graph
+    // has one hop per view, the plain graph several
+    val n = 150
+    spark.read.parquet(s"$sf/nation.parquet").createOrReplaceTempView("chain_0")
+    (1 to n).foreach { i =>
+      spark.sql(s"SELECT n_nationkey, n_name FROM chain_${i - 1} WHERE n_nationkey >= 0")
+        .createOrReplaceTempView(s"chain_$i")
+    }
+    try {
+      for (contracted <- Seq(false, true)) {
+        val hits = SQLFlow.impactedBy(spark, "chain_0", contracted = contracted)
+        assert(hits.contains(s"chain_$n"),
+          s"contracted=$contracted: the walk stopped after ${hits.size} views")
+        assert(hits.toSet === (1 to n).map(i => s"chain_$i").toSet, s"contracted=$contracted")
+      }
+    } finally (0 to n).foreach(i => spark.catalog.dropTempView(s"chain_$i"))
+  }
+
   test("track() chains DataFrames through catalog lineage like @auto_tracking") {
     import org.apache.spark.sql.graft.implicits._
     // first stage must be non-trivial: bare scans are blacklisted from

@@ -216,11 +216,15 @@ class OptimizationSpec extends AnyFunSuite {
   test("d12: bloom prefilter evaluates below every exchange; no shuffle carries text/shingles") {
     import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.graft.{BloomCountHits, PlanIntrospection}
+    import org.apache.spark.sql.graft.{NativeUnary, PlanIntrospection}
     val plan = PlanIntrospection.physicalPlan(
       SparkEntry.queries("d12_bloom_incremental")(spark, sf))
+    val isBloom: org.apache.spark.sql.catalyst.expressions.Expression => Boolean = {
+      case e: NativeUnary => e.name == "bloom_count_hits"
+      case _ => false
+    }
     val pre = plan.collect {
-      case f: FilterExec if f.condition.find(_.isInstanceOf[BloomCountHits]).isDefined => f
+      case f: FilterExec if f.condition.find(isBloom).isDefined => f
     }
     assert(pre.nonEmpty, s"bloom prefilter missing from plan:\n$plan")
     pre.foreach { f =>

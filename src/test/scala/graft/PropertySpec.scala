@@ -144,27 +144,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("cdc_chunk_hashes: edits anywhere in random blobs leave distant chunks aligned") {
-    // for random payloads with a random single-byte insertion, CDC must
-    // keep a large majority of chunks shared (re-alignment), and chunk
-    // counts must track payload size (no degenerate single-chunk outputs)
-    for (trial <- 0 until 5) {
-      val base = new Array[Byte](1500 + rnd.nextInt(1500))
-      rnd.nextBytes(base)
-      val pos = rnd.nextInt(base.length)
-      val edited = (base.take(pos) :+ rnd.nextInt(256).toByte) ++ base.drop(pos)
-      val Array(cBase, cEdit) = Seq(base, edited).toDF("b")
-        .select(cdc_chunk_hashes($"b").as("c")).collect().map(_.getSeq[Long](0))
-      assert(cBase.size >= base.length / 300,
-        s"trial=$trial: too few chunks (${cBase.size}) for ${base.length} bytes")
-      val shared = cBase.toSet.intersect(cEdit.toSet).size
-      // the edit can disturb the chunk containing it plus a bounded number
-      // of neighbors before boundaries re-align
-      assert(shared >= cBase.size - 4,
-        s"trial=$trial: only $shared of ${cBase.size} chunks survived an edit at $pos")
-    }
-  }
-
   test("bloom_count_hits has no false negatives across random digests and probes") {
     for (trial <- 0 until 5) {
       val members = Seq.fill(500)(rnd.nextLong()).distinct

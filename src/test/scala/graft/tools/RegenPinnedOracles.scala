@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regeneration helper for the PINNED-LITERAL oracles (r12 advice: the
   * documented "regenerate the table" step for z01/q35 was hand-editing —
   * this makes it one command). Prints, in paste-ready oracle-VALUES form:
@@ -19,14 +17,7 @@ object RegenPinnedOracles {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("regen-pinned-oracles")
-      .getOrCreate()
+    val spark = graft.LocalSession(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     println(s"-- z01 pinned VALUES (plan-structural, scale-independent; from ${dirs.head}):")
