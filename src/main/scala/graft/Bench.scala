@@ -33,10 +33,32 @@ object Bench {
 
   private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
 
+  /** One completed stage, in the listener's raw units (ns, ms, bytes), so
+    * the entry totals derived from it round exactly as the sums did. */
+  private[graft] case class StageRecord(id: Int, name: String, wallMs: Long, cpuNs: Long,
+      gcMs: Long, shufReadBytes: Long, shufWriteBytes: Long, spillBytes: Long,
+      peakBytes: Long, tasks: Int, recRead: Long, shufRec: Long)
+
+  private[graft] object StageRecord {
+    def apply(si: org.apache.spark.scheduler.StageInfo): StageRecord = {
+      val m = si.taskMetrics
+      StageRecord(si.stageId, si.name.takeWhile(_ != '\n').take(70),
+        si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
+        m.executorCpuTime, m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled + m.diskBytesSpilled,
+        m.peakExecutionMemory, si.numTasks, m.inputMetrics.recordsRead,
+        m.shuffleWriteMetrics.recordsWritten)
+    }
+  }
+
+  /** How many of an entry's stages, longest wall first, its details carry. */
+  private[graft] val TopStages = 6
+
   /** One measured sample of an entry: wall seconds plus the telemetry that
     * makes a cross-environment swing ADJUDICABLE from the artifact (r12
     * verdict item 2 — ten rounds of "burst or structure?" on s11/d22 were
-    * the cost of recording wall time alone).
+    * the cost of recording wall time alone). Every attribution column is
+    * an aggregation of the entry's [[StageRecord]]s (see `fromStages`):
     *   - cpuSec: Σ executor CPU over the entry's stages — the decisive
     *     discriminator for a cross-environment wall swing: same cpu_s at
     *     2-3× the wall = the container was CPU-throttled/contended (the
@@ -62,46 +84,65 @@ object Bench {
     *   - attrSec: the wall seconds of the PASS the attribution columns
     *     were measured in. Equal to `sec` when the min pass itself was
     *     attributed; the fastest attributed pass's wall when the min pass
-    *     had a drain failure (see minOk); -1 when no pass was attributed.
-    * The attribution columns (cpuSec..shufMb) are -1 when a listener-bus
-    * drain failed around the measurement (see `timed`): the wall time
-    * stays trustworthy, the attribution does not. */
-  private case class EntryStats(sec: Double, cpuSec: Double, spillMb: Long,
+    *     had a drain failure (see minOk); -1 when no pass was attributed;
+    *   - stages: the [[TopStages]] stages of that pass with the longest
+    *     wall, longest first — where the entry's time went.
+    * The attribution columns (cpuSec..shufMb) are -1 and `stages` is empty
+    * when a listener-bus drain failed around the measurement (see
+    * `timed`): the wall time stays trustworthy, the attribution does not. */
+  private[graft] case class EntryStats(sec: Double, cpuSec: Double, spillMb: Long,
       gcMs: Long, peakMemMb: Long, recRead: Long, shufRec: Long, shufMb: Long,
-      rows: Long, attrSec: Double)
+      rows: Long, attrSec: Double, stages: Seq[StageRecord] = Nil)
+
+  private[graft] object EntryStats {
+    def fromStages(sec: Double, rows: Long, recs: Seq[StageRecord]): EntryStats =
+      EntryStats(sec, math.round(recs.map(_.cpuNs).sum / 1e6) / 1e3,
+        recs.map(_.spillBytes).sum >> 20, recs.map(_.gcMs).sum,
+        recs.map(_.peakBytes).foldLeft(0L)(math.max) >> 20, recs.map(_.recRead).sum,
+        recs.map(_.shufRec).sum, recs.map(_.shufWriteBytes).sum >> 20, rows, sec,
+        recs.sortBy(-_.wallMs).take(TopStages))
+  }
   private val Failed = EntryStats(-1.0, 0.0, 0L, 0L, 0L, 0L, 0L, 0L, -1L, -1.0)
   /** A build line's row count: it has no single result cardinality. */
   private val NoRows: () => Long = () => -1L
 
-  /** Accumulates stage-level CPU/spill/GC/peak-mem/record-counters between
-    * reset() and snap(). Registered once; reset per timed entry after a
-    * listener-bus drain, so attribution follows entry boundaries. */
-  private final class Telemetry extends org.apache.spark.scheduler.SparkListener {
-    private var cpuNs = 0L; private var spill = 0L; private var gc = 0L; private var peak = 0L
-    private var rec = 0L; private var sRec = 0L; private var sBytes = 0L
+  /** Keeps one [[StageRecord]] per stage completed between reset() and
+    * snap(). Registered once; reset per timed entry after a listener-bus
+    * drain, so attribution follows entry boundaries. */
+  private[graft] final class Telemetry extends org.apache.spark.scheduler.SparkListener {
+    private val done = scala.collection.mutable.ArrayBuffer[StageRecord]()
     override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = synchronized {
-      val m = sc.stageInfo.taskMetrics
-      cpuNs += m.executorCpuTime
-      spill += m.memoryBytesSpilled + m.diskBytesSpilled
-      gc += m.jvmGCTime
-      peak = math.max(peak, m.peakExecutionMemory)
-      rec += m.inputMetrics.recordsRead
-      sRec += m.shuffleWriteMetrics.recordsWritten
-      sBytes += m.shuffleWriteMetrics.bytesWritten
+        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      val r = StageRecord(sc.stageInfo)
+      synchronized { done += r }
     }
-    def reset(): Unit = synchronized {
-      cpuNs = 0L; spill = 0L; gc = 0L; peak = 0L; rec = 0L; sRec = 0L; sBytes = 0L
-    }
-    def snap(sec: Double, rows: Long): EntryStats = synchronized {
-      EntryStats(sec, math.round(cpuNs / 1e6) / 1e3, spill >> 20, gc, peak >> 20,
-        rec, sRec, sBytes >> 20, rows, sec)
-    }
+    def reset(): Unit = synchronized { done.clear() }
+    def records: Seq[StageRecord] = synchronized { done.toList }
+    /** `drained` false = a bus drain around the interval failed: wall
+      * and rows are kept, the attribution columns read -1. */
+    def snap(sec: Double, rows: Long, drained: Boolean): EntryStats =
+      if (drained) EntryStats.fromStages(sec, rows, records)
+      else EntryStats(sec, -1.0, -1L, -1L, -1L, -1L, -1L, -1L, rows, -1.0)
   }
 
   /** "q01_pricing_summary" -> "q01" — unique across the inventory (asserted
     * below), and the id scheme CORRECTNESS/COVERAGE already key on. */
   private def shortId(name: String): String = name.takeWhile(_ != '_')
+
+  /** A stage record in the units a reader compares: ms and MB. */
+  private[graft] def stageJson(r: StageRecord): String = {
+    val name = r.name.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    }
+    s"""{"stage":${r.id},"name":"$name","wall_ms":${r.wallMs},""" +
+      s""""cpu_ms":${r.cpuNs / 1000000},"gc_ms":${r.gcMs},""" +
+      s""""shuffle_read_mb":${r.shufReadBytes >> 20},"shuffle_write_mb":${r.shufWriteBytes >> 20},""" +
+      s""""spill_mb":${r.spillBytes >> 20},"peak_mem_mb":${r.peakBytes >> 20},""" +
+      s""""tasks":${r.tasks},"records_read":${r.recRead},"shuffle_records":${r.shufRec}}"""
+  }
 
   private def jsonMap(m: Seq[(String, Double)]): String =
     m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
@@ -166,10 +207,7 @@ object Bench {
   /** Synthetic 10× documents+embeddings under a temp dir (removed on JVM
     * exit). Copy i shifts ids by i·10^8 and prefixes every non-leading
     * token with "c{i}" so cross-copy docs share no shingles. */
-  // private[graft] so the test-scope stage probes (graft.tools.S11StageProbe)
-  // measure the EXACT corpus the heavy tier benches — an inline re-creation
-  // would silently drift when this recipe changes (r12 review)
-  private[graft] def buildHeavyDir(spark: SparkSession, sfDir: String, copies: Int): String = {
+  private def buildHeavyDir(spark: SparkSession, sfDir: String, copies: Int): String = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-bench-10x")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       import java.nio.file.Files
@@ -347,8 +385,7 @@ object Bench {
       rowsOpt match {
         case None => Failed
         case Some((sec, rows)) =>
-          if (pre && drainBus()) telemetry.snap(sec, rows)
-          else EntryStats(sec, -1.0, -1L, -1L, -1L, -1L, -1L, -1L, rows, -1.0)
+          telemetry.snap(sec, rows, drained = pre && drainBus())
       }
     }
     // The timed ACTION is a noop-sink write, not count() (r20 measurement
@@ -418,7 +455,7 @@ object Bench {
         else ok.filter(_.cpuSec >= 0).minByOption(_.sec) match {
           case Some(a) => best.copy(cpuSec = a.cpuSec, spillMb = a.spillMb,
             gcMs = a.gcMs, peakMemMb = a.peakMemMb, recRead = a.recRead,
-            shufRec = a.shufRec, shufMb = a.shufMb, attrSec = a.sec)
+            shufRec = a.shufRec, shufMb = a.shufMb, attrSec = a.sec, stages = a.stages)
           case None => best
         }
       }
@@ -705,7 +742,7 @@ object Bench {
     // r14 also the environment-INVARIANT work counters (records_read /
     // shuffle_records / shuffle_mb / rows) and attr_sec, the wall of the
     // pass the attribution columns were measured in (== sec unless the
-    // min pass had a drain failure).
+    // min pass had a drain failure); and the entry's longest stages.
     def statsJson(xs: Seq[(String, EntryStats)]): String =
       xs.map { case (k, v) =>
         "\"" + k + "\":{\"sec\":" + v.sec + ",\"cpu_s\":" + v.cpuSec +
@@ -713,7 +750,8 @@ object Bench {
           ",\"gc_ms\":" + v.gcMs + ",\"peak_mem_mb\":" + v.peakMemMb +
           ",\"records_read\":" + v.recRead + ",\"shuffle_records\":" + v.shufRec +
           ",\"shuffle_mb\":" + v.shufMb + ",\"rows\":" + v.rows +
-          ",\"attr_sec\":" + v.attrSec + "}"
+          ",\"attr_sec\":" + v.attrSec +
+          ",\"stages\":" + v.stages.map(stageJson).mkString("[", ",", "]") + "}"
       }.mkString("{", ",", "}")
     // timed_action names the timing protocol: noop_observe timed the
     // observe-metric wait after save(); noop_observe_v2 stops at save()

@@ -62,7 +62,7 @@ object FlowAnalysis {
       cached: LogicalPlan => Boolean = _ => false,
       counter: Counter = new Counter): Graph = {
     val ctx = new Ctx(counter)
-    val (planNodeId, bindings) = collect(plan, ctx, cached, depth = 0)
+    val (planNodeId, bindings) = collect(plan, ctx, cached)
     val rootId = if (rootType == FlowNodeType.View) rootName else ctx.nextId(rootName)
     ctx.nodes += FlowNode(rootId, rootName, plan.output.map(_.name),
       schemaDDL(plan), rootType)
@@ -140,9 +140,7 @@ object FlowAnalysis {
   /** Recursive pass: returns (nodeId of the subplan's graph node, bindings
     * from the subplan's output attributes to graph columns). */
   private def collect(plan: LogicalPlan, ctx: Ctx,
-      cached: LogicalPlan => Boolean, depth: Int): (String, AttributeMap[Binding]) = {
-    require(depth <= 128, "plan too deep for lineage analysis")
-
+      cached: LogicalPlan => Boolean): (String, AttributeMap[Binding]) = {
     plan match {
       // an RDD-backed leaf whose producing operator registered its
       // derivation (GlobalOrderOps' imperative prefix pass): resume the
@@ -153,7 +151,7 @@ object FlowAnalysis {
       case l: org.apache.spark.sql.execution.LogicalRDD
           if RddLineage.lookup(l.rdd).isDefined =>
         val d = RddLineage.lookup(l.rdd).get
-        val (childId, childBindings) = collect(d.source, ctx, cached, depth + 1)
+        val (childId, childBindings) = collect(d.source, ctx, cached)
         val id = ctx.nextId(d.opName)
         ctx.nodes += FlowNode(id, d.opName, l.output.map(_.name),
           schemaDDL(l), FlowNodeType.Plan, cached(l))
@@ -195,7 +193,7 @@ object FlowAnalysis {
             schemaDDL(l), FlowNodeType.Plan, cached(l))
           val seen = mutable.Set[String]()
           s.leaves.foreach { leafPlan =>
-            val (leafId, _) = collect(leafPlan, ctx, cached, depth + 1)
+            val (leafId, _) = collect(leafPlan, ctx, cached)
             // two scans of the same stable table dedupe to one edge
             if (seen.add(leafId)) ctx.edges += FlowEdge(leafId, None, id, None)
           }
@@ -265,21 +263,21 @@ object FlowAnalysis {
 
       case CachedMarker(child) =>
         // transparent: flags the child subtree's node as cached
-        val (id, bindings) = collect(child, ctx, cached, depth + 1)
+        val (id, bindings) = collect(child, ctx, cached)
         ctx.nodes.zipWithIndex.find(_._1.uniqueId == id).foreach { case (n, i) =>
           ctx.nodes(i) = n.copy(isCached = true)
         }
         (id, bindings)
 
       case _ =>
-        val childResults = plan.children.map(c => collect(c, ctx, cached, depth + 1))
+        val childResults = plan.children.map(c => collect(c, ctx, cached))
         val inputBindings = AttributeMap(childResults.flatMap(_._2))
         val id = ctx.nextId(plan.nodeName)
         ctx.nodes += FlowNode(id, plan.nodeName, plan.output.map(_.name),
           schemaDDL(plan), FlowNodeType.Plan, cached(plan))
 
         val before = ctx.edges.size
-        emitOperatorEdges(plan, id, inputBindings, childResults, ctx, cached, depth)
+        emitOperatorEdges(plan, id, inputBindings, childResults, ctx, cached)
 
         if (ctx.edges.size == before) {
           // fallback (reference: SQLFlow.scala:466-478,593-602): no
@@ -336,13 +334,13 @@ object FlowAnalysis {
   private def emitOperatorEdges(plan: LogicalPlan, id: String,
       in: AttributeMap[Binding],
       childResults: Seq[(String, AttributeMap[Binding])],
-      ctx: Ctx, cached: LogicalPlan => Boolean, depth: Int): Unit = {
+      ctx: Ctx, cached: LogicalPlan => Boolean): Unit = {
 
     def edgeFromRefs(e: Expression, outIdx: Int): Unit = {
       e.references.toSeq.sortBy(_.exprId.id).foreach { a =>
         in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(outIdx)))
       }
-      subqueryEdges(e, id, Some(outIdx), ctx, cached, depth)
+      subqueryEdges(e, id, Some(outIdx), ctx, cached)
     }
 
     plan match {
@@ -432,14 +430,14 @@ object FlowAnalysis {
             val subqueries = cmp.collect { case s: SubqueryExpression => s }
             val compared = cmp.references.toSeq.flatMap(a => outIdx.get(a))
             subqueries.foreach { s =>
-              val sub = collectSubquery(s, ctx, cached, depth)
+              val sub = collectSubquery(s, ctx, cached)
               compared.foreach { i =>
                 sub.outCols.foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
               }
             }
           case e if containsSubquery(e) =>
             e.collect { case s: SubqueryExpression => s }.foreach { s =>
-              val sub = collectSubquery(s, ctx, cached, depth)
+              val sub = collectSubquery(s, ctx, cached)
               ctx.edges += FlowEdge(sub.rootId, None, id, None)
             }
           case _ =>
@@ -491,23 +489,23 @@ object FlowAnalysis {
           in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
         }
         // subqueries anywhere else: node-level
-        plan.expressions.foreach(e => subqueryEdges(e, id, None, ctx, cached, depth))
+        plan.expressions.foreach(e => subqueryEdges(e, id, None, ctx, cached))
     }
   }
 
   private case class SubResult(rootId: String, outCols: Seq[Binding])
 
   private def collectSubquery(s: SubqueryExpression, ctx: Ctx,
-      cached: LogicalPlan => Boolean, depth: Int): SubResult = {
-    val (subId, subBindings) = collect(s.plan, ctx, cached, depth + 1)
+      cached: LogicalPlan => Boolean): SubResult = {
+    val (subId, subBindings) = collect(s.plan, ctx, cached)
     SubResult(subId, s.plan.output.flatMap(a => subBindings.get(a)))
   }
 
   private def subqueryEdges(e: Expression, id: String, outIdx: Option[Int],
-      ctx: Ctx, cached: LogicalPlan => Boolean, depth: Int): Unit = {
+      ctx: Ctx, cached: LogicalPlan => Boolean): Unit = {
     if (containsSubquery(e)) {
       e.collect { case s: SubqueryExpression => s }.foreach { s =>
-        val sub = collectSubquery(s, ctx, cached, depth)
+        val sub = collectSubquery(s, ctx, cached)
         outIdx match {
           case Some(i) if sub.outCols.nonEmpty =>
             sub.outCols.foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))

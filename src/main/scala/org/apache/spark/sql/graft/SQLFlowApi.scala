@@ -152,9 +152,10 @@ object SQLFlow {
     val all: Seq[(String, LogicalPlan, Boolean)] = persistent ++ temps ++ globals
 
     // 2. semanticHash → view name, for subplan-to-view substitution
-    //    (reference: SQLFlow.scala:94-96,150-154); sorted for determinism
+    //    (reference: SQLFlow.scala:94-96,150-154). A hash two views share
+    //    names neither: cutting to either one would be a guess
     val hashToView: Map[Int, String] =
-      all.sortBy(_._1).map { case (n, p, _) => p.semanticHash() -> n }.toMap
+      all.groupBy(_._2.semanticHash()).collect { case (h, Seq((n, _, _))) => h -> n }
 
     // trivial subplans (bare scans / alias-only wrappers) are excluded from
     // substitution — two views that are both just "scan t" must not collapse
@@ -177,7 +178,10 @@ object SQLFlow {
       // cut at OTHER views' boundaries — BY NAME for explicit view
       // references (SubqueryAlias/View wrappers in analyzed plans), by
       // semantic hash only as the DataFrame-chain fallback (reference:
-      // SQLFlow.scala:133-154) — then wrap cached subtrees and optimize
+      // SQLFlow.scala:133-154) — then wrap cached subtrees and optimize.
+      // The hash fallback cuts strict subplans only: a view's own root
+      // hashing like another view (a projection-only chain) is the view
+      // itself, not a reference to the other one
       import org.apache.spark.sql.catalyst.plans.logical.View
       val substituted = analyzed.transformDown {
         case s @ SubqueryAlias(ident, _)
@@ -186,7 +190,8 @@ object SQLFlow {
         case v: View
             if viewNames.contains(v.desc.identifier.table) && v.desc.identifier.table != name =>
           ViewRef(v.desc.identifier.table, v.output, isTemp = v.isTempView)
-        case p if !trivial(p) && hashToView.get(p.semanticHash()).exists(_ != name) =>
+        case p if (p ne analyzed) && !trivial(p) &&
+            hashToView.get(p.semanticHash()).exists(_ != name) =>
           ViewRef(hashToView(p.semanticHash()), p.output, isTemp = true)
       }
       // cached-subtree wrap as a MANUAL one-shot recursion: a transformDown

@@ -3,15 +3,16 @@ package org.apache.spark.sql.graft
 import org.apache.spark.SparkContext
 
 /** Synchronous listener-bus drain for Bench's per-entry telemetry
-  * (spill/GC/peak-mem attribution — r12 verdict item 2).
+  * (per-stage records and the spill/GC/peak-mem attribution derived
+  * from them — r12 verdict item 2).
   *
   * Stage-completed events are posted asynchronously, so metrics read
   * right after an action may miss the job's trailing stages.
   * `SparkContext.listenerBus` is `private[spark]`; this one-liner lives
   * under the org.apache.spark package solely to reach
   * `waitUntilEmpty` — the only public alternative is a fixed sleep,
-  * which at 188 entries × 2 passes would add over a minute per bench
-  * run (the EntryStageProbe dev tool pays exactly that 500 ms/rep).
+  * which at 188 entries × 3 passes would add minutes per bench run and
+  * still not be a barrier.
   */
 object ListenerBusDrain {
 

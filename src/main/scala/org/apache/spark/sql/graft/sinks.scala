@@ -248,11 +248,11 @@ private[graft] object CypherStatements {
       edgeMap: Map[String, Seq[String]]): Seq[String] = {
     val buf = mutable.ArrayBuffer[String]()
     // visited set: without it the frontier counts PATHS, not nodes, and a
-    // chain of diamonds (shared subplans) makes the walk exponential
+    // chain of diamonds (shared subplans) makes the walk exponential; it
+    // also bounds the walk, so no hop cap truncates a long plan chain
     val visited = mutable.HashSet[String](fromId)
     var frontier: Seq[String] = Seq(fromId)
-    var depth = 0
-    while (frontier.nonEmpty && depth < 128) {
+    while (frontier.nonEmpty) {
       frontier = frontier.flatMap(edgeMap.getOrElse(_, Nil)).distinct
         .filterNot(visited.contains).flatMap(nodeById.get).flatMap { n =>
           visited += n.uniqueId
@@ -261,7 +261,6 @@ private[graft] object CypherStatements {
             case _ => Some(n.uniqueId)
           }
         }
-      depth += 1
     }
     buf.distinct.toSeq
   }

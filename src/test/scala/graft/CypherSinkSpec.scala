@@ -93,6 +93,16 @@ class CypherSinkSpec extends AnyFunSuite {
     up.foreach(st => assert(st.contains("r.dstNodeIds = ['view_a']"), st))
     val fromView = statements(v).filter(_.contains("(a:Node {uid: 'view_a'})"))
     fromView.foreach(st => assert(st.contains("r.dstNodeIds = ['query_1']"), st))
+
+    // t1 -> 150 plan nodes -> query_1: no hop cap may cut the consumer list
+    val longIds = "t1" +: (1 to 150).map(i => s"Project_$i") :+ "query_1"
+    val longNodes = node("t1", FlowNodeType.Table) +:
+      longIds.tail.init.map(node(_, FlowNodeType.Plan)) :+ node("query_1", FlowNodeType.Query)
+    val longEdges = longIds.sliding(2).map(p => FlowEdge(p(0), Some(0), p(1), Some(0))).toSeq
+    val first = statements(CypherFileSink().toGraphString(longNodes, longEdges))
+      .filter(st => st.contains("(a:Node {uid: 't1'})") && st.contains("transformInto"))
+    assert(first.nonEmpty)
+    first.foreach(st => assert(st.contains("r.dstNodeIds = ['query_1']"), st))
   }
 
   test("mermaid imgFormat degrades to .mmd when mmdc is absent") {

@@ -257,6 +257,78 @@ class FlowAnalysisSpec extends AnyFunSuite {
     } finally (0 to n).foreach(i => spark.catalog.dropTempView(s"chain_$i"))
   }
 
+  /** (view, view) pairs where the first feeds the second with no other
+    * view in between, over the views whose ident starts with `prefix`. */
+  private def viewHops(nodes: Seq[FlowNode], edges: Seq[FlowEdge],
+      prefix: String): Set[(String, String)] = {
+    val byId = nodes.map(n => n.uniqueId -> n).toMap
+    val out = edges.groupBy(_.fromId).map { case (k, es) => k -> es.map(_.toId).distinct }
+    nodes.filter(n => n.tpe == FlowNodeType.View && n.ident.startsWith(prefix)).flatMap { v =>
+      val seen = scala.collection.mutable.Set(v.uniqueId)
+      var frontier = Seq(v.uniqueId)
+      val hits = scala.collection.mutable.Set[String]()
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(out.getOrElse(_, Nil)).filterNot(seen).distinct.flatMap { id =>
+          seen += id
+          if (byId(id).tpe == FlowNodeType.View) { hits += byId(id).ident; None } else Some(id)
+        }
+      }
+      hits.map(v.ident -> _)
+    }.toSet
+  }
+
+  test("catalog mode: a chain of projection-only views stays a chain, plain and contracted " +
+      "(the semantic-hash fallback never replaces a view's own root)") {
+    spark.read.parquet(s"$sf/nation.parquet").createOrReplaceTempView("chain_0")
+    (1 to 3).foreach { i =>
+      spark.sql(s"SELECT n_nationkey, n_name FROM chain_${i - 1}").createOrReplaceTempView(s"chain_$i")
+    }
+    try {
+      for (contracted <- Seq(false, true)) {
+        val (nodes, edges) = SQLFlow.catalogGraph(spark, contracted)
+        assert(viewHops(nodes, edges, "chain_") ===
+          Set("chain_0" -> "chain_1", "chain_1" -> "chain_2", "chain_2" -> "chain_3"),
+          s"contracted=$contracted")
+        assert(SQLFlow.impactedBy(spark, "chain_0", contracted = contracted) ===
+          Seq("chain_1", "chain_2", "chain_3"), s"contracted=$contracted")
+      }
+    } finally (0 to 3).foreach(i => spark.catalog.dropTempView(s"chain_$i"))
+  }
+
+  test("a plan deeper than 128 gets a per-Dataset graph, an audit record and a catalog graph") {
+    import spark.implicits._
+    val df = (1 to 150).foldLeft(spark.range(10).as[Long])((d, _) => d.map(_ + 1)).toDF("v")
+    def depth(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+      1 + p.children.map(depth).foldLeft(0)(math.max)
+    assert(depth(df.queryExecution.optimizedPlan) > 128)
+    for (contracted <- Seq(false, true)) {
+      val (nodes, edges) = SQLFlow.datasetGraph(df, contracted)
+      val query = nodes.filter(_.tpe == FlowNodeType.Query)
+      assert(query.map(_.attributes) === Seq(Seq("v")), s"contracted=$contracted")
+      assert(edges.exists(_.toId == query.head.uniqueId), s"contracted=$contracted")
+    }
+    val recorded = new java.util.concurrent.ConcurrentLinkedQueue[Seq[FlowNode]]()
+    val listener = SQLFlowListener(new FlowStreamSink {
+      def append(nodes: Seq[FlowNode], edges: Seq[FlowEdge], options: Map[String, String]): Unit =
+        recorded.add(nodes)
+    })
+    spark.listenerManager.register(listener)
+    try {
+      assert(df.collect().map(_.getLong(0)).toSeq === (150L until 160L))
+      assert(ListenerBusDrain.drain(spark.sparkContext))
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(recorded.asScala.exists(_.exists(n =>
+      n.tpe == FlowNodeType.Query && n.attributes == Seq("v") && n.props.contains("durationMs"))))
+    df.createOrReplaceTempView("deep_v")
+    try {
+      val (nodes, edges) = SQLFlow.catalogGraph(spark)
+      val view = nodes.find(_.ident == "deep_v")
+      assert(view.exists(_.tpe == FlowNodeType.View))
+      assert(edges.exists(_.toId == view.get.uniqueId))
+    } finally spark.catalog.dropTempView("deep_v")
+  }
+
   test("track() chains DataFrames through catalog lineage like @auto_tracking") {
     import org.apache.spark.sql.graft.implicits._
     // first stage must be non-trivial: bare scans are blacklisted from

@@ -1,16 +1,46 @@
 package graft.tools
+
+import scala.util.matching.Regex
+
+import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, SimpleMode}
+
+/** Explain dumps of inventory entries. Output is reproducible: two runs on
+  * one tree print the same bytes (see [[stable]]). */
 object Plans {
+  /** Rewrites the run-dependent tokens of one entry's plan text: exprIds,
+    * `plan_id=`s, RDD ids, codegen ids and adaptive query-stage ids are
+    * renumbered in order of first appearance, so the cross-references
+    * within the plan survive (the last two follow which of two concurrent
+    * stages finished first); lambda class names, object identity hashes
+    * and temp-dir suffixes are masked. */
+  def stable(plan: String): String = {
+    def renumber(s: String, re: Regex): String = {
+      val ids = scala.collection.mutable.HashMap[String, Int]()
+      re.replaceAllIn(s, m => Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
+    val masked = Seq(
+      """\$\$Lambda[$/0-9a-fx]*@[0-9a-f]+""" -> "\\$\\$Lambda",
+      """(?<=[\w$])@[0-9a-f]{1,8}\b""" -> "@hash",
+      """(graft-[a-z-]*[a-z])\d{6,}""" -> "$1N")
+      .foldLeft(plan) { case (s, (re, to)) => re.r.replaceAllIn(s, to) }
+    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(RDD\[)(\d+)""", """(codegen id : )(\d+)""",
+        """(QueryStage\n(?:Output [^\n]*\n)?Arguments: )(\d+)""")
+      .foldLeft(masked)((s, re) => renumber(s, re.r))
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = graft.LocalSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
+    def explain(n: String, mode: ExplainMode): String =
+      stable(graft.SparkEntry.queries(n)(spark, dir).queryExecution.explainString(mode))
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q01_pricing_summary", "q02_filter_project", "q03_shipping_priority",
       "q05_local_supplier", "q20_left_join_agg", "s01_knn_brute")
     names.foreach { n =>
       println(s"########## $n ##########")
-      println(graft.SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode))
+      println(explain(n, SimpleMode))
     }
     // SPARK_GRAFT_PLANS_DIR=plans/r20 SPARK_GRAFT_PLANS_SUFFIX=_before:
     // write <dir>/<name><suffix>.txt with the FORMATTED plan per named
@@ -20,8 +50,7 @@ object Plans {
       val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
       names.foreach { n =>
-        val txt = graft.SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = explain(n, FormattedMode)
         val p = java.nio.file.Paths.get(d, s"$n$suffix.txt")
         java.nio.file.Files.writeString(p, txt)
         println(s"wrote $p")
@@ -66,8 +95,7 @@ object Plans {
       md ++= "bounded top-k, and WholeStageCodegen spans covering the hot path.\n"
       headline.foreach { n =>
         md ++= s"\n## $n\n\n```\n"
-        md ++= graft.SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        md ++= explain(n, FormattedMode)
         md ++= "```\n"
       }
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out), md.toString)
