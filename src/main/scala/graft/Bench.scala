@@ -255,19 +255,21 @@ object Bench {
       }.reduce(_.unionAll(_))
         .write.mode("overwrite").parquet(tmp.resolve(s"$table.parquet").toString)
     }
-    val jobs: Seq[() => Unit] = Seq(
-      () => writeDocs(),
-      () => writeEmb(),
-      () => scaled("orders", "o_orderkey", "o_custkey"),
-      () => scaled("lineitem", "l_orderkey", "l_suppkey"),
-      () => scaled("customer", "c_custkey"),
-      () => scaled("events", "event_id", "user_id"))
+    val jobs: Seq[(String, () => Unit)] = Seq(
+      "documents" -> (() => writeDocs()),
+      "embeddings" -> (() => writeEmb()),
+      "orders" -> (() => scaled("orders", "o_orderkey", "o_custkey")),
+      "lineitem" -> (() => scaled("lineitem", "l_orderkey", "l_suppkey")),
+      "customer" -> (() => scaled("customer", "c_custkey")),
+      "events" -> (() => scaled("events", "event_id", "user_id")))
     // blocking: each build waits on Spark jobs, so the global pool may add
     // threads instead of starving other work queued on it
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(jobs)(j => Future(blocking(j()))), Duration.Inf)
+    Await.result(Future.traverse(jobs) { case (table, j) =>
+      Future(blocking(SparkEntry.withCallSite(spark, s"heavy_corpus $table")(j())))
+    }, Duration.Inf)
     tmp.toString
   }
 

@@ -73,9 +73,18 @@ object SparkEntry {
     implicit val ec: ExecutionContext = ExecutionContext.global
     Await.result(
       Future.traverse(CheckpointedPanel.toSeq.sorted) { n =>
-        Future(blocking { panelMember(n, s, dir); () })
+        Future(blocking { withCallSite(s, s"zpanel_build $n")(panelMember(n, s, dir)); () })
       }, Duration.Inf)
     ()
+  }
+
+  /** Runs `body` with `site` as the call site of the Spark jobs it starts
+    * from this thread, so their stages are named after it. A pooled build
+    * sets one: without it, its stages carry frames of the pool. */
+  private[graft] def withCallSite[T](s: SparkSession, site: String)(body: => T): T = {
+    val sc = s.sparkContext
+    sc.setCallSite(site)
+    try body finally sc.clearCallSite()
   }
 
   /** The lineage engine itself, exercised over every query plan in the
@@ -115,14 +124,14 @@ object SparkEntry {
       implicit val ec: ExecutionContext = ExecutionContext.global
       val rows = Await.result(
         Future.traverse(panel.sorted) { name =>
-          Future(blocking {
+          Future(blocking(withCallSite(s, s"z01_lineage_extraction $name") {
             // one QueryExecution: optimize once, analyze twice; the three
             // eager-checkpoint members come from the memo (see panelMember)
             val df = panelMember(name, s, dir)
             val (nodes, edges) = SQLFlow.datasetGraph(df)
             val (cn, ce) = SQLFlow.datasetGraph(df, contracted = true)
             (name, nodes.size, edges.size, cn.size, ce.size)
-          })
+          }))
         }, Duration.Inf)
       import s.implicits._
       rows.toDF("query", "n_nodes", "n_edges", "n_contracted_nodes", "n_contracted_edges")

@@ -1,11 +1,14 @@
 package org.apache.spark.sql.graft
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.catalog.HiveTableRelation
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftExistence
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
@@ -17,7 +20,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * architecture:
   *
   *   - ONE recursive pass builds the full (uncontracted) graph, tracking for
-  *     every live attribute the (nodeId, columnIndex) it was last produced
+  *     every live attribute the (node, columnIndex) it was last produced
   *     at ([[FlowAnalysis.Binding]]);
   *   - contracted mode is a graph CONTRACTION of that result (reachability
   *     from leaf columns to root columns, plus equi-join bridge pairs
@@ -28,30 +31,118 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   */
 object FlowAnalysis {
 
-  case class Binding(nodeId: String, idx: Int)
+  /** Column `idx` of the node at index `node` of the graph being built. */
+  case class Binding(node: Int, idx: Int)
 
-  /** Result of one analysis pass. `bridges` are equi-join column pairs used
-    * only by contracted mode (reference: SQLFlow.scala:638-657).
-    * `statLeaves` maps each node whose props were filled by [[stats]] to
-    * the leaf they were read from; no other node gets props. */
-  case class Graph(
-      nodes: Seq[FlowNode],
-      edges: Seq[FlowEdge],
-      rootId: String,
-      bridges: Seq[(Binding, Binding)],
-      statLeaves: Map[String, LeafNode] = Map.empty)
+  /** Result of one analysis pass, stored packed: one array slot per node,
+    * four Ints per edge (from node, from column, to node, to column, with
+    * -1 for a node-level end) and per equi-join bridge pair (used only by
+    * contracted mode, reference: SQLFlow.scala:638-657). Uids, idents and
+    * DDL strings are interned, so graphs share them. No `props` map is
+    * stored: [[nodes]] builds fresh ones, with statistics read when called
+    * from the leaf a node was made of (a refreshed table reports new sizes
+    * through the same leaf), as a new analysis would read them; callers may
+    * mutate them. `FlowNode` and `FlowEdge` objects are built by [[nodes]]
+    * and [[edges]] only. */
+  final class Graph private[FlowAnalysis] (
+      private[FlowAnalysis] val uids: Array[String],
+      private[FlowAnalysis] val idents: Array[String],
+      private[FlowAnalysis] val attrs: Array[Seq[String]],
+      private[FlowAnalysis] val ddls: Array[String],
+      private[FlowAnalysis] val types: Array[FlowNodeType],
+      private[FlowAnalysis] val cached: Array[Boolean],
+      private[FlowAnalysis] val statLeaves: Array[LeafNode],
+      private[FlowAnalysis] val leafHashes: Array[Int],
+      private[FlowAnalysis] val edgeData: Array[Int],
+      private[FlowAnalysis] val bridgeData: Array[Int],
+      private[FlowAnalysis] val root: Int) {
+
+    def rootId: String = uids(root)
+
+    def nodes: Seq[FlowNode] = ArraySeq.unsafeWrapArray(Array.tabulate(uids.length) { i =>
+      FlowNode(uids(i), idents(i), attrs(i), ddls(i), types(i), cached(i),
+        statProps(statLeaves(i), leafHashes(i)))
+    })
+
+    def edges: Seq[FlowEdge] = ArraySeq.unsafeWrapArray(Array.tabulate(edgeData.length / 4) { k =>
+      val b = 4 * k
+      FlowEdge(uids(edgeData(b)), slot(edgeData(b + 1)), uids(edgeData(b + 2)), slot(edgeData(b + 3)))
+    })
+
+    /** This graph contracted, made on first use and kept with the graph, so
+      * a lineage memo contracts once. */
+    private[graft] lazy val contracted: Graph = contractGraph(this)
+  }
+
+  /** Shared `Some`s for the column slots of built edges. */
+  private val Slots: Array[Option[Int]] = Array.tabulate(1024)(Some(_))
+  private def slot(i: Int): Option[Int] =
+    if (i < 0) None else if (i < Slots.length) Slots(i) else Some(i)
 
   /** Shared across analyses that merge into one graph, so plan-node uids
     * stay unique; deterministic (no random digests). `value` is the last
     * uid number handed out. */
   class Counter { private[graft] var value = 0; def next(): Int = { value += 1; value } }
 
-  private class Ctx(counter: Counter) {
-    val nodes = mutable.ArrayBuffer[FlowNode]()
-    val edges = mutable.ArrayBuffer[FlowEdge]()
-    val bridges = mutable.ArrayBuffer[(Binding, Binding)]()
-    val statLeaves = mutable.Map[String, LeafNode]()
+  private final class Ctx(counter: Counter) {
+    private val uids = mutable.ArrayBuffer[String]()
+    private val idents = mutable.ArrayBuffer[String]()
+    private val attrs = mutable.ArrayBuffer[Seq[String]]()
+    private val ddls = mutable.ArrayBuffer[String]()
+    private val types = mutable.ArrayBuffer[FlowNodeType]()
+    private val cached = mutable.ArrayBuffer[Boolean]()
+    private val statLeaves = mutable.ArrayBuffer[LeafNode]()
+    private val leafHashes = mutable.ArrayBuilder.make[Int]
+    private val edges = mutable.ArrayBuilder.make[Int]
+    private val bridges = mutable.ArrayBuilder.make[Int]
+    /** Node index of every stable uid: tables, views, checkpoints. */
+    val stable = mutable.HashMap[String, Int]()
+
     def nextId(name: String): String = f"${name}_${counter.next()}%07x"
+
+    /** Appends a node and returns its index; `leaf` is the leaf whose
+      * statistics become the node's props. */
+    def node(uid: String, ident: String, attributes: Seq[String], ddl: String,
+        tpe: FlowNodeType, isCached: Boolean, leaf: LeafNode = null): Int = {
+      uids += uid.intern()
+      idents += ident.intern()
+      attrs += ArraySeq.unsafeWrapArray(attributes.toArray)
+      ddls += ddl.intern()
+      types += tpe
+      cached += isCached
+      // semanticHash only where canonicalization is ExprId-stable (relation
+      // leaves); ViewRef and friends would hash their raw attribute ids and
+      // change on every session. A leaf whose hash fails gets no props, as
+      // a failing statistics read gives none.
+      val (statLeaf, hash) = leaf match {
+        case _: LogicalRelation | _: HiveTableRelation =>
+          try (leaf, leafHash(leaf)) catch { case _: Throwable => (null, 0) }
+        case _ => (leaf, 0)
+      }
+      statLeaves += statLeaf
+      leafHashes += hash
+      uids.length - 1
+    }
+
+    def setCached(node: Int): Unit = cached(node) = true
+
+    def edge(from: Int, fromIdx: Int, to: Int, toIdx: Int): Unit = {
+      edges += from; edges += fromIdx; edges += to; edges += toIdx
+    }
+
+    def bridge(a: Binding, b: Binding): Unit = {
+      bridges += a.node; bridges += a.idx; bridges += b.node; bridges += b.idx
+    }
+
+    def edgeCount: Int = edges.length / 4
+
+    def graph(root: Int): Graph = {
+      val (typeArr, attrArr) = (types.toArray, attrs.toArray)
+      val (edgeData, bridgeData) = (edges.result(), bridges.result())
+      sortPlanColumns(typeArr, attrArr, edgeData, bridgeData)
+      new Graph(uids.toArray, idents.toArray, attrArr, ddls.toArray, typeArr,
+        cached.toArray, statLeaves.toArray, leafHashes.result(), edgeData, bridgeData, root)
+    }
   }
 
   /** Analyze an optimized plan; the root node (type Query/View) is appended
@@ -62,19 +153,52 @@ object FlowAnalysis {
       cached: LogicalPlan => Boolean = _ => false,
       counter: Counter = new Counter): Graph = {
     val ctx = new Ctx(counter)
-    val (planNodeId, bindings) = collect(plan, ctx, cached)
+    val (planNode, bindings) = collect(plan, ctx, cached)
     val rootId = if (rootType == FlowNodeType.View) rootName else ctx.nextId(rootName)
-    ctx.nodes += FlowNode(rootId, rootName, plan.output.map(_.name),
-      schemaDDL(plan), rootType)
+    val root = ctx.node(rootId, rootName, plan.output.map(_.name), schemaDDL(plan), rootType, false)
     plan.output.zipWithIndex.foreach { case (attr, i) =>
       bindings.get(attr) match {
-        case Some(b) => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), rootId, Some(i))
-        case None => ctx.edges += FlowEdge(planNodeId, None, rootId, Some(i))
+        case Some(b) => ctx.edge(b.node, b.idx, root, i)
+        case None => ctx.edge(planNode, -1, root, i)
       }
     }
-    canonicalize(Graph(ctx.nodes.toSeq, ctx.edges.toSeq, rootId, ctx.bridges.toSeq,
-      ctx.statLeaves.toMap))
+    ctx.graph(root)
   }
+
+  /** `plan`'s semantic hash, computed on a copy: canonicalizing a plan
+    * leaves a canonicalized copy on every node it visits, subquery plans
+    * included, and lineage must not leave that on a caller's plan. */
+  private[graft] def semanticHash(plan: LogicalPlan): Int = transientCopy(plan).semanticHash()
+
+  /** A relation leaf's semantic hash, kept on the leaf as an Int: the
+    * optimized plans of a Dataset and of its view share their leaves, so
+    * each leaf is hashed once. `leaf` is the leaf the hash is for, since
+    * Catalyst copies tags onto the plans it derives from a tagged one. */
+  private final case class LeafHash(leaf: LeafNode, hash: Int)
+
+  private val LeafHashTag = TreeNodeTag[LeafHash]("sqlflow.leafHash")
+
+  private def leafHash(leaf: LeafNode): Int = leaf.synchronized {
+    leaf.getTagValue(LeafHashTag).filter(_.leaf eq leaf).map(_.hash).getOrElse {
+      val hash = semanticHash(leaf)
+      leaf.setTagValue(LeafHashTag, LeafHash(leaf, hash))
+      hash
+    }
+  }
+
+  /** A copy of `plan` that shares no plan node with it, subquery plans
+    * included, for computations that cache their results on the nodes.
+    * Each copied subquery gets a fresh id: Catalyst's transforms keep the
+    * original of a result equal to it, as a subquery over a copied plan
+    * is. Canonicalization resets subquery ids, so hashes are unchanged. */
+  private[graft] def transientCopy(plan: LogicalPlan): LogicalPlan =
+    plan.clone().transformAllExpressions {
+      case s: ScalarSubquery => s.copy(plan = transientCopy(s.plan), exprId = NamedExpression.newExprId)
+      case s: Exists => s.copy(plan = transientCopy(s.plan), exprId = NamedExpression.newExprId)
+      case s: ListQuery => s.copy(plan = transientCopy(s.plan), exprId = NamedExpression.newExprId)
+      case s: LateralSubquery =>
+        s.copy(plan = transientCopy(s.plan), exprId = NamedExpression.newExprId)
+    }
 
   /** Deterministic column order for PLAN-INTERNAL nodes (r17): the
     * optimizer can emit an intermediate operator's columns in a
@@ -95,52 +219,42 @@ object FlowAnalysis {
     * optimizer-generated intermediate names embed distinct functions).
     * Graph SIZES are unchanged, so the z01 pinned-size oracle is
     * unaffected; slot-level goldens were regenerated once. */
-  private def canonicalize(g: Graph): Graph = {
-    val remap: Map[String, Array[Int]] = g.nodes.iterator
-      .filter(n => n.tpe == FlowNodeType.Plan && n.attributes.length > 1)
-      .flatMap { n =>
-        val order = n.attributes.zipWithIndex.sortBy(_._1).map(_._2)
-        if (order.indices.forall(i => order(i) == i)) None
-        else {
-          val inv = new Array[Int](order.length)
-          order.zipWithIndex.foreach { case (old, nu) => inv(old) = nu }
-          Some(n.uniqueId -> inv)
-        }
-      }.toMap
-    if (remap.isEmpty) g
-    else {
-      val nodes = g.nodes.map { n =>
-        remap.get(n.uniqueId) match {
-          case Some(inv) =>
-            val attrs = new Array[String](n.attributes.length)
-            n.attributes.zipWithIndex.foreach { case (a, i) => attrs(inv(i)) = a }
-            n.copy(attributes = attrs.toVector)
-          case None => n
+  private def sortPlanColumns(types: Array[FlowNodeType], attrs: Array[Seq[String]],
+      edgeData: Array[Int], bridgeData: Array[Int]): Unit = {
+    val inv = new Array[Array[Int]](attrs.length)
+    var any = false
+    attrs.indices.foreach { n =>
+      if (types(n) == FlowNodeType.Plan && attrs(n).length > 1) {
+        val order = attrs(n).zipWithIndex.sortBy(_._1).map(_._2)
+        if (!order.indices.forall(i => order(i) == i)) {
+          val p = new Array[Int](order.length)
+          order.zipWithIndex.foreach { case (old, nu) => p(old) = nu }
+          val sorted = new Array[String](order.length)
+          attrs(n).zipWithIndex.foreach { case (a, i) => sorted(p(i)) = a }
+          attrs(n) = ArraySeq.unsafeWrapArray(sorted)
+          inv(n) = p
+          any = true
         }
       }
-      def mapIdx(id: String, idx: Option[Int]): Option[Int] =
-        remap.get(id) match {
-          case Some(inv) => idx.map(inv(_))
-          case None => idx
-        }
-      val edges = g.edges.map(e => e.copy(
-        fromIdx = mapIdx(e.fromId, e.fromIdx), toIdx = mapIdx(e.toId, e.toIdx)))
-      val bridges = g.bridges.map { case (a, b) =>
-        def mb(x: Binding): Binding =
-          remap.get(x.nodeId).map(inv => x.copy(idx = inv(x.idx))).getOrElse(x)
-        (mb(a), mb(b))
+    }
+    // both arrays hold (node, column) pairs at even offsets
+    if (any) Seq(edgeData, bridgeData).foreach { data =>
+      (0 until data.length by 2).foreach { k =>
+        val p = inv(data(k))
+        if (p != null && data(k + 1) >= 0) data(k + 1) = p(data(k + 1))
       }
-      g.copy(nodes = nodes, edges = edges, bridges = bridges)
     }
   }
 
+  /** The DDL of `plan`'s output, built without forcing the plan's own
+    * cached `schema`. */
   private def schemaDDL(plan: LogicalPlan): String =
-    try plan.schema.toDDL catch { case _: Throwable => "" }
+    try DataTypeUtils.fromAttributes(plan.output).toDDL catch { case _: Throwable => "" }
 
-  /** Recursive pass: returns (nodeId of the subplan's graph node, bindings
+  /** Recursive pass: returns (index of the subplan's graph node, bindings
     * from the subplan's output attributes to graph columns). */
   private def collect(plan: LogicalPlan, ctx: Ctx,
-      cached: LogicalPlan => Boolean): (String, AttributeMap[Binding]) = {
+      cached: LogicalPlan => Boolean): (Int, AttributeMap[Binding]) = {
     plan match {
       // an RDD-backed leaf whose producing operator registered its
       // derivation (GlobalOrderOps' imperative prefix pass): resume the
@@ -151,22 +265,19 @@ object FlowAnalysis {
       case l: org.apache.spark.sql.execution.LogicalRDD
           if RddLineage.lookup(l.rdd).isDefined =>
         val d = RddLineage.lookup(l.rdd).get
-        val (childId, childBindings) = collect(d.source, ctx, cached)
-        val id = ctx.nextId(d.opName)
-        ctx.nodes += FlowNode(id, d.opName, l.output.map(_.name),
+        val (child, childBindings) = collect(d.source, ctx, cached)
+        val id = ctx.node(ctx.nextId(d.opName), d.opName, l.output.map(_.name),
           schemaDDL(l), FlowNodeType.Plan, cached(l))
         val srcOut = d.source.output
         (0 until math.min(srcOut.length, l.output.length)).foreach { i =>
-          childBindings.get(srcOut(i)).foreach(b =>
-            ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+          childBindings.get(srcOut(i)).foreach(b => ctx.edge(b.node, b.idx, id, i))
         }
         d.appended.zipWithIndex.foreach { case ((_, srcIdxs), j) =>
           val outIdx = srcOut.length + j
           if (outIdx < l.output.length) {
-            if (srcIdxs.isEmpty) ctx.edges += FlowEdge(childId, None, id, Some(outIdx))
+            if (srcIdxs.isEmpty) ctx.edge(child, -1, id, outIdx)
             else srcIdxs.foreach { si =>
-              childBindings.get(srcOut(si)).foreach(b =>
-                ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(outIdx)))
+              childBindings.get(srcOut(si)).foreach(b => ctx.edge(b.node, b.idx, id, outIdx))
             }
           }
         }
@@ -187,17 +298,19 @@ object FlowAnalysis {
       case l: org.apache.spark.sql.execution.LogicalRDD
           if RddLineage.lookupCheckpoint(l.rdd).isDefined =>
         val s = RddLineage.lookupCheckpoint(l.rdd).get
-        val id = s"ckpt_rdd${l.rdd.id}"
-        if (!ctx.nodes.exists(_.uniqueId == id)) {
-          ctx.nodes += FlowNode(id, s.opName, l.output.map(_.name),
+        val uid = s"ckpt_rdd${l.rdd.id}"
+        val id = ctx.stable.getOrElse(uid, {
+          val id = ctx.node(uid, s.opName, l.output.map(_.name),
             schemaDDL(l), FlowNodeType.Plan, cached(l))
-          val seen = mutable.Set[String]()
+          ctx.stable(uid) = id
+          val seen = mutable.Set[Int]()
           s.leaves.foreach { leafPlan =>
-            val (leafId, _) = collect(leafPlan, ctx, cached)
+            val (leaf, _) = collect(leafPlan, ctx, cached)
             // two scans of the same stable table dedupe to one edge
-            if (seen.add(leafId)) ctx.edges += FlowEdge(leafId, None, id, None)
+            if (seen.add(leaf)) ctx.edge(leaf, -1, id, -1)
           }
-        }
+          id
+        })
         (id, AttributeMap(l.output.zipWithIndex.map { case (a, i) =>
           a -> Binding(id, i)
         }))
@@ -222,7 +335,6 @@ object FlowAnalysis {
           case _: OneRowRelation => ("OneRowRelation", FlowNodeType.LeafPlan, false, false)
           case other => (other.nodeName, FlowNodeType.LeafPlan, cached(leaf), false)
         }
-        val id = if (stable) ident else ctx.nextId(ident)
         // stable relations expose their FULL table schema and bind the
         // (possibly column-pruned) scan output by field name — two scans of
         // the same table pruned differently must agree on column indices,
@@ -234,13 +346,15 @@ object FlowAnalysis {
         }
         val attrs = fullSchema.getOrElse(leaf.output.map(_.name))
         // a stable-uid table scanned twice in one plan is ONE graph node
-        if (!(stable && ctx.nodes.exists(_.uniqueId == id))) {
-          ctx.nodes += FlowNode(id, ident, attrs, schemaDDL(leaf), tpe, isCached, statProps(leaf))
-          ctx.statLeaves(id) = leaf
-        } else if (isCached) {
-          ctx.nodes.zipWithIndex.find(_._1.uniqueId == id).foreach { case (n, i) =>
-            ctx.nodes(i) = n.copy(isCached = true)
-          }
+        val id = (if (stable) ctx.stable.get(ident) else None) match {
+          case Some(id) =>
+            if (isCached) ctx.setCached(id)
+            id
+          case None =>
+            val uid = if (stable) ident else ctx.nextId(ident)
+            val id = ctx.node(uid, ident, attrs, schemaDDL(leaf), tpe, isCached, leaf)
+            if (stable) ctx.stable(uid) = id
+            id
         }
         // bind scan output to full-schema slots case-insensitively (the
         // default session resolver is case-insensitive, so a resolver-
@@ -264,28 +378,25 @@ object FlowAnalysis {
       case CachedMarker(child) =>
         // transparent: flags the child subtree's node as cached
         val (id, bindings) = collect(child, ctx, cached)
-        ctx.nodes.zipWithIndex.find(_._1.uniqueId == id).foreach { case (n, i) =>
-          ctx.nodes(i) = n.copy(isCached = true)
-        }
+        ctx.setCached(id)
         (id, bindings)
 
       case _ =>
         val childResults = plan.children.map(c => collect(c, ctx, cached))
         val inputBindings = AttributeMap(childResults.flatMap(_._2))
-        val id = ctx.nextId(plan.nodeName)
-        ctx.nodes += FlowNode(id, plan.nodeName, plan.output.map(_.name),
+        val id = ctx.node(ctx.nextId(plan.nodeName), plan.nodeName, plan.output.map(_.name),
           schemaDDL(plan), FlowNodeType.Plan, cached(plan))
 
-        val before = ctx.edges.size
+        val before = ctx.edgeCount
         emitOperatorEdges(plan, id, inputBindings, childResults, ctx, cached)
 
-        if (ctx.edges.size == before) {
+        if (ctx.edgeCount == before) {
           // fallback (reference: SQLFlow.scala:466-478,593-602): no
           // column-level edges derivable → node-level edges from every input
-          childResults.foreach { case (childId, bs) =>
-            if (bs.isEmpty) ctx.edges += FlowEdge(childId, None, id, None)
+          childResults.foreach { case (child, bs) =>
+            if (bs.isEmpty) ctx.edge(child, -1, id, -1)
             else bs.toSeq.sortBy(_._2.idx).foreach { case (_, b) =>
-              ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, None)
+              ctx.edge(b.node, b.idx, id, -1)
             }
           }
         }
@@ -302,43 +413,31 @@ object FlowAnalysis {
     }
   }
 
-  /** A leaf node's props: its statistics, read when called (a refreshed
-    * table reports new sizes through the same leaf). */
-  private[graft] def statProps(leaf: LeafNode): mutable.Map[String, String] =
-    mutable.Map.empty[String, String] ++= stats(leaf)
-
-  /** A kept graph as a lineage memo hit hands it out: fresh `props` maps,
-    * since callers may mutate them, with table statistics read now from
-    * the leaves in `statLeaves`, as a new analysis would read them. */
-  private[graft] def withFreshProps(g: Graph): Graph =
-    g.copy(nodes = g.nodes.map { n =>
-      n.copy(props = g.statLeaves.get(n.uniqueId).map(statProps).getOrElse(mutable.Map.empty))
-    })
-
-  private def stats(leaf: LeafNode): Seq[(String, String)] =
-    try {
+  /** A node's props: the statistics of `leaf` (none without one), read
+    * when called, and its kept semantic hash where it has one. */
+  private def statProps(leaf: LeafNode, hash: Int): mutable.Map[String, String] = {
+    val props = mutable.Map.empty[String, String]
+    if (leaf != null) try {
       val st = leaf.computeStats()
-      // semanticHash only where canonicalization is ExprId-stable (relation
-      // leaves); ViewRef and friends would hash their raw attribute ids and
-      // change on every session
-      val hash = leaf match {
-        case _: LogicalRelation | _: HiveTableRelation =>
-          Seq("semanticHash" -> leaf.semanticHash().toString)
-        case _ => Nil
+      props("sizeInBytes") = st.sizeInBytes.toString
+      leaf match {
+        case _: LogicalRelation | _: HiveTableRelation => props("semanticHash") = hash.toString
+        case _ =>
       }
-      Seq("sizeInBytes" -> st.sizeInBytes.toString) ++ hash ++
-        st.rowCount.map(rc => "rowCount" -> rc.toString)
-    } catch { case _: Throwable => Nil }
+      st.rowCount.foreach(rc => props("rowCount") = rc.toString)
+    } catch { case _: Throwable => props.clear() }
+    props
+  }
 
   /** Per-operator column-provenance rules (reference: SQLFlow.scala:357-479). */
-  private def emitOperatorEdges(plan: LogicalPlan, id: String,
+  private def emitOperatorEdges(plan: LogicalPlan, id: Int,
       in: AttributeMap[Binding],
-      childResults: Seq[(String, AttributeMap[Binding])],
+      childResults: Seq[(Int, AttributeMap[Binding])],
       ctx: Ctx, cached: LogicalPlan => Boolean): Unit = {
 
     def edgeFromRefs(e: Expression, outIdx: Int): Unit = {
       e.references.toSeq.sortBy(_.exprId.id).foreach { a =>
-        in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(outIdx)))
+        in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, outIdx))
       }
       subqueryEdges(e, id, Some(outIdx), ctx, cached)
     }
@@ -353,7 +452,7 @@ object FlowAnalysis {
       case g @ Generate(generator, _, _, _, generatorOutput, _) =>
         // pass-through child columns present in the output
         g.output.zipWithIndex.foreach { case (a, i) =>
-          in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+          in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, i))
         }
         // generator inputs fan out to every generator output column
         val genOutIdx = g.output.zipWithIndex.collect {
@@ -361,7 +460,7 @@ object FlowAnalysis {
         }
         generator.references.toSeq.sortBy(_.exprId.id).foreach { a =>
           in.get(a).foreach { b =>
-            genOutIdx.foreach(i => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+            genOutIdx.foreach(i => ctx.edge(b.node, b.idx, id, i))
           }
         }
 
@@ -371,21 +470,21 @@ object FlowAnalysis {
         output.indices.foreach { i =>
           val refs = projections.flatMap(row => row(i).references).distinct
           refs.sortBy(_.exprId.id).foreach { a =>
-            in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+            in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, i))
           }
         }
 
       case u: Union =>
         u.children.zip(childResults).foreach { case (child, (_, bs)) =>
           child.output.zipWithIndex.foreach { case (a, i) =>
-            bs.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+            bs.get(a).foreach(b => ctx.edge(b.node, b.idx, id, i))
           }
         }
 
       case j @ Join(left, _, LeftExistence(_), cond, _) =>
         // output = left side, 1:1
         j.output.zipWithIndex.foreach { case (a, i) =>
-          in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+          in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, i))
         }
         // provenance THROUGH the predicate: right-side comparison columns
         // feed the left columns they are compared against
@@ -399,7 +498,7 @@ object FlowAnalysis {
                 la <- sideRefs if leftOut.contains(la)
                 ra <- otherRefs if !leftOut.contains(ra)
                 rb <- in.get(ra)
-              } ctx.edges += FlowEdge(rb.nodeId, Some(rb.idx), id, Some(leftOut(la)))
+              } ctx.edge(rb.node, rb.idx, id, leftOut(la))
             link(lrefs, rrefs)
             link(rrefs, lrefs)
           case _ =>
@@ -407,20 +506,20 @@ object FlowAnalysis {
 
       case j @ Join(_, _, _, cond, _) =>
         j.output.zipWithIndex.foreach { case (a, i) =>
-          in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+          in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, i))
         }
         // bridge pairs for contracted mode (reference: SQLFlow.scala:638-657)
         cond.toSeq.flatMap(splitConjunctive).foreach {
           case cmp: BinaryComparison =>
             val l = cmp.left.references.toSeq.flatMap(in.get)
             val r = cmp.right.references.toSeq.flatMap(in.get)
-            for (a <- l; b <- r) ctx.bridges += ((a, b))
+            for (a <- l; b <- r) ctx.bridge(a, b)
           case _ =>
         }
 
       case f @ Filter(condition, _) =>
         f.output.zipWithIndex.foreach { case (a, i) =>
-          in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+          in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, i))
         }
         // scalar subqueries compared in predicates feed the compared columns
         // (reference: SQLFlow.scala:481-494,520-538)
@@ -432,13 +531,13 @@ object FlowAnalysis {
             subqueries.foreach { s =>
               val sub = collectSubquery(s, ctx, cached)
               compared.foreach { i =>
-                sub.outCols.foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+                sub.outCols.foreach(b => ctx.edge(b.node, b.idx, id, i))
               }
             }
           case e if containsSubquery(e) =>
             e.collect { case s: SubqueryExpression => s }.foreach { s =>
               val sub = collectSubquery(s, ctx, cached)
-              ctx.edges += FlowEdge(sub.rootId, None, id, None)
+              ctx.edge(sub.root, -1, id, -1)
             }
           case _ =>
         }
@@ -450,7 +549,7 @@ object FlowAnalysis {
       case _: FlatMapGroupsInPandas | _: MapInPandas | _: MapInArrow =>
         plan.children.head.output.zip(plan.output.zipWithIndex).foreach {
           case (ca, (_, i)) =>
-            in.get(ca).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+            in.get(ca).foreach(b => ctx.edge(b.node, b.idx, id, i))
         }
 
       // Scala typed object-operators (r15 verdict item 5): their Python
@@ -479,21 +578,21 @@ object FlowAnalysis {
       case _: MapPartitions | _: MapElements | _: MapGroups |
            _: FlatMapGroupsWithState | _: CoGroup =>
         plan.references.toSeq.sortBy(_.exprId.id).foreach { a =>
-          in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(0)))
+          in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, 0))
         }
 
       case _ =>
         // default rule: identity edges for every output attribute that came
         // from a child; produced attributes (window cols, …) get no incoming
         plan.output.zipWithIndex.foreach { case (a, i) =>
-          in.get(a).foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+          in.get(a).foreach(b => ctx.edge(b.node, b.idx, id, i))
         }
         // subqueries anywhere else: node-level
         plan.expressions.foreach(e => subqueryEdges(e, id, None, ctx, cached))
     }
   }
 
-  private case class SubResult(rootId: String, outCols: Seq[Binding])
+  private case class SubResult(root: Int, outCols: Seq[Binding])
 
   private def collectSubquery(s: SubqueryExpression, ctx: Ctx,
       cached: LogicalPlan => Boolean): SubResult = {
@@ -501,16 +600,16 @@ object FlowAnalysis {
     SubResult(subId, s.plan.output.flatMap(a => subBindings.get(a)))
   }
 
-  private def subqueryEdges(e: Expression, id: String, outIdx: Option[Int],
+  private def subqueryEdges(e: Expression, id: Int, outIdx: Option[Int],
       ctx: Ctx, cached: LogicalPlan => Boolean): Unit = {
     if (containsSubquery(e)) {
       e.collect { case s: SubqueryExpression => s }.foreach { s =>
         val sub = collectSubquery(s, ctx, cached)
         outIdx match {
           case Some(i) if sub.outCols.nonEmpty =>
-            sub.outCols.foreach(b => ctx.edges += FlowEdge(b.nodeId, Some(b.idx), id, Some(i)))
+            sub.outCols.foreach(b => ctx.edge(b.node, b.idx, id, i))
           case _ =>
-            ctx.edges += FlowEdge(sub.rootId, None, id, outIdx)
+            ctx.edge(sub.root, -1, id, outIdx.getOrElse(-1))
         }
       }
     }
@@ -531,65 +630,105 @@ object FlowAnalysis {
   // (reference: SQLFlow.scala:606-836 builds an ExprId ref-map instead.)
   // ---------------------------------------------------------------------
   def contract(g: Graph): (Seq[FlowNode], Seq[FlowEdge]) = {
-    val keepTypes: Set[FlowNodeType] =
-      Set(FlowNodeType.Table, FlowNodeType.View, FlowNodeType.LeafPlan)
+    val c = g.contracted
+    (c.nodes, c.edges)
+  }
+
+  private val KeepTypes: Set[FlowNodeType] =
+    Set(FlowNodeType.Table, FlowNodeType.View, FlowNodeType.LeafPlan)
+
+  /** Reachability over points: node n's node-level point is `base(n)`, its
+    * column c is `base(n) + 1 + c`; arcs are kept in CSR form. */
+  private def contractGraph(g: Graph): Graph = {
+    val n = g.uids.length
+    val root = g.root
     // the root may itself be a View node — never treat it as a source
-    val leafIds =
-      g.nodes.filter(n => keepTypes(n.tpe) && n.uniqueId != g.rootId).map(_.uniqueId).toSet
+    val isLeaf = Array.tabulate(n)(i => KeepTypes(g.types(i)) && i != root)
 
-    // adjacency: (nodeId, Option[col]) -> targets
-    type P = (String, Option[Int])
-    val adj = mutable.Map[P, mutable.ArrayBuffer[P]]()
-    def add(a: P, b: P): Unit = adj.getOrElseUpdate(a, mutable.ArrayBuffer()) += b
-    g.edges.foreach { e => add((e.fromId, e.fromIdx), (e.toId, e.toIdx)) }
-    g.bridges.foreach { case (a, b) =>
-      add((a.nodeId, Some(a.idx)), (b.nodeId, Some(b.idx)))
-      add((b.nodeId, Some(b.idx)), (a.nodeId, Some(a.idx)))
+    // a node's points cover its attributes and every column an edge names
+    val width = Array.tabulate(n)(i => g.attrs(i).length)
+    for (data <- Seq(g.edgeData, g.bridgeData); k <- 0 until data.length by 2)
+      width(data(k)) = math.max(width(data(k)), data(k + 1) + 1)
+    val base = new Array[Int](n + 1)
+    (0 until n).foreach(i => base(i + 1) = base(i) + 1 + width(i))
+    val pointNode = new Array[Int](base(n))
+    (0 until n).foreach(i => java.util.Arrays.fill(pointNode, base(i), base(i + 1), i))
+    def point(node: Int, col: Int): Int = base(node) + 1 + col
+
+    // arcs: every edge, and every bridge both ways
+    val arcs = mutable.ArrayBuilder.make[Int]
+    for (k <- 0 until g.edgeData.length by 4) {
+      arcs += point(g.edgeData(k), g.edgeData(k + 1))
+      arcs += point(g.edgeData(k + 2), g.edgeData(k + 3))
     }
-    // node-level fan-out: reaching (n, None) reaches every column of n;
-    // reaching (n, Some(i)) also continues via (n, None) outgoing edges
-    val colsOf = g.nodes.map(n => n.uniqueId -> n.attributes.indices).toMap
+    for (k <- 0 until g.bridgeData.length by 4) {
+      val a = point(g.bridgeData(k), g.bridgeData(k + 1))
+      val b = point(g.bridgeData(k + 2), g.bridgeData(k + 3))
+      arcs += a; arcs += b; arcs += b; arcs += a
+    }
+    val arcData = arcs.result()
+    val start = new Array[Int](base(n) + 1)
+    for (k <- 0 until arcData.length by 2) start(arcData(k) + 1) += 1
+    (0 until base(n)).foreach(p => start(p + 1) += start(p))
+    val target = new Array[Int](arcData.length / 2)
+    val fill = start.clone()
+    for (k <- 0 until arcData.length by 2) {
+      target(fill(arcData(k))) = arcData(k + 1)
+      fill(arcData(k)) += 1
+    }
 
-    def reachableRootCols(start: P): Set[Int] = {
-      val seen = mutable.Set[P]()
-      val stack = mutable.Stack[P](start)
+    val seen = new Array[Int](base(n))
+    var pass = 0
+    var stack = new Array[Int](64)
+    var top = 0
+    def push(p: Int): Unit = {
+      if (top == stack.length) stack = java.util.Arrays.copyOf(stack, 2 * top)
+      stack(top) = p
+      top += 1
+    }
+    def pushTargets(p: Int): Unit = (start(p) until start(p + 1)).foreach(k => push(target(k)))
+    // a Set made from a hash set: printed graphs list a leaf column's edges
+    // in its iteration order, as they always have
+    def reachableRootCols(from: Int): Set[Int] = {
+      pass += 1
       val hit = mutable.Set[Int]()
-      while (stack.nonEmpty) {
-        val cur = stack.pop()
-        if (seen.add(cur)) {
-          if (cur._1 == g.rootId) cur._2 match {
-            case Some(i) => hit += i
-            case None => hit ++= colsOf.getOrElse(g.rootId, Seq.empty)
+      push(from)
+      while (top > 0) {
+        top -= 1
+        val cur = stack(top)
+        if (seen(cur) != pass) {
+          seen(cur) = pass
+          val node = pointNode(cur)
+          val col = cur - base(node) - 1
+          if (node == root) {
+            if (col >= 0) hit += col else hit ++= g.attrs(root).indices
           }
-          adj.getOrElse(cur, Nil).foreach(stack.push)
-          // a node-level point fans out to each column point of that node
-          cur match {
-            case (n, None) =>
-              colsOf.getOrElse(n, Seq.empty).foreach(i => stack.push((n, Some(i))))
-            case (n, Some(_)) =>
-              // column point also rides node-level outgoing edges
-              adj.getOrElse((n, None), Nil).foreach(stack.push)
-          }
+          pushTargets(cur)
+          // a node-level point fans out to each column point of that node;
+          // a column point also rides node-level outgoing edges
+          if (col < 0) g.attrs(node).indices.foreach(c => push(point(node, c)))
+          else pushTargets(base(node))
         }
       }
       hit.toSet
     }
 
-    val keptNodes = g.nodes.filter(n => leafIds(n.uniqueId) || n.uniqueId == g.rootId)
-    val newEdges = mutable.LinkedHashSet[FlowEdge]()
-    g.nodes.filter(n => leafIds(n.uniqueId)).foreach { leaf =>
-      leaf.attributes.indices.foreach { i =>
-        reachableRootCols((leaf.uniqueId, Some(i))).foreach { j =>
-          newEdges += FlowEdge(leaf.uniqueId, Some(i), g.rootId, Some(j))
-        }
-      }
-      if (leaf.attributes.isEmpty) {
-        reachableRootCols((leaf.uniqueId, None)).foreach { j =>
-          newEdges += FlowEdge(leaf.uniqueId, None, g.rootId, Some(j))
-        }
-      }
+    val kept = (0 until n).filter(i => isLeaf(i) || i == root).toArray
+    val newIndex = new Array[Int](n)
+    kept.indices.foreach(k => newIndex(kept(k)) = k)
+    val edges = mutable.ArrayBuilder.make[Int]
+    def edge(leaf: Int, i: Int, j: Int): Unit = {
+      edges += newIndex(leaf); edges += i; edges += newIndex(root); edges += j
     }
-    (keptNodes, newEdges.toSeq)
+    (0 until n).filter(isLeaf).foreach { leaf =>
+      g.attrs(leaf).indices.foreach { i =>
+        reachableRootCols(point(leaf, i)).foreach(j => edge(leaf, i, j))
+      }
+      if (g.attrs(leaf).isEmpty) reachableRootCols(base(leaf)).foreach(j => edge(leaf, -1, j))
+    }
+    new Graph(kept.map(g.uids), kept.map(g.idents), kept.map(g.attrs), kept.map(g.ddls),
+      kept.map(g.types), kept.map(g.cached), kept.map(g.statLeaves), kept.map(g.leafHashes),
+      edges.result(), Array.emptyIntArray, newIndex(root))
   }
 }
 

@@ -24,12 +24,14 @@ object SQLFlow {
 
   /** Lineage graph of a single Dataset's optimized plan.
     *
-    * The uncontracted graph is kept in a [[DatasetMemo]] on that plan, so
-    * it is freed with the Dataset, and a later call reuses it without
-    * walking the plan again. A memo is only stored and only used while
-    * the cache manager is empty, and never for a plan that reads an RDD
-    * (its lineage depends on [[RddLineage]] registrations, which may come
-    * after the plan). */
+    * The graph, and its contraction once made, are kept in a
+    * [[DatasetMemo]] on that plan, so they are freed with the Dataset, and
+    * a later call reuses them without walking the plan again. A memo is
+    * only stored and only used while the cache manager is empty, and never
+    * for a plan that reads an RDD (its lineage depends on [[RddLineage]]
+    * registrations, which may come after the plan). The root's semantic
+    * hash is computed on a copy of the plan, so the call leaves no
+    * canonicalized plan on the Dataset's. */
   def datasetGraph(ds: Dataset[_], contracted: Boolean = false)
       : (Seq[FlowNode], Seq[FlowEdge]) = {
     val cds = ds.asInstanceOf[ClassicDataset[_]]
@@ -39,22 +41,23 @@ object SQLFlow {
     val emptyCache = cacheManager.isEmpty
     val memo = if (emptyCache) plan.synchronized(plan.getTagValue(DatasetMemoTag)) else None
     val g = memo.filter(_.plan eq plan) match {
-      case Some(m) => FlowAnalysis.withFreshProps(m.graph)
+      case Some(m) => m.graph
       case None =>
-        val rootName = s"query_${math.abs(plan.semanticHash()).toString}"
+        val rootName = s"query_${math.abs(FlowAnalysis.semanticHash(plan)).toString}"
         val g = FlowAnalysis.analyze(plan, rootName, FlowNodeType.Query, isCachedFn(session))
         if (emptyCache && cacheManager.isEmpty && !readsRdd(plan)) plan.synchronized {
           plan.setTagValue(DatasetMemoTag, DatasetMemo(plan, g))
         }
         g
     }
-    if (contracted) FlowAnalysis.contract(g) else (g.nodes, g.edges)
+    val out = if (contracted) g.contracted else g
+    (out.nodes, out.edges)
   }
 
-  /** A Dataset's uncontracted lineage graph, kept on its optimized plan
-    * under [[DatasetMemoTag]]. `plan` is that plan: Catalyst copies tags
-    * onto the plans it derives from a tagged one, so the memo is only
-    * used on the very object it was made from. */
+  /** A Dataset's lineage graph, kept on its optimized plan under
+    * [[DatasetMemoTag]]. `plan` is that plan: Catalyst copies tags onto the
+    * plans it derives from a tagged one, so the memo is only used on the
+    * very object it was made from. */
   private[graft] final case class DatasetMemo(plan: LogicalPlan, graph: FlowAnalysis.Graph)
 
   private[graft] val DatasetMemoTag = TreeNodeTag[DatasetMemo]("sqlflow.datasetLineage")
@@ -62,11 +65,11 @@ object SQLFlow {
   private def readsRdd(plan: LogicalPlan): Boolean =
     plan.collectFirstWithSubqueries { case _: LogicalRDD => true }.isDefined
 
-  /** One temp view's uncontracted lineage graph, kept on the view's stored
-    * analyzed plan under [[ViewMemoTag]] and freed with it. Every field but
-    * `graph` is an input the graph is a function of; the cache manager's
-    * contents are one more, which is why an entry is only stored and only
-    * used while no data is cached. */
+  /** One temp view's lineage graph (and its contraction once made), kept
+    * on the view's stored analyzed plan under [[ViewMemoTag]] and freed
+    * with it. Every field but `graph` is an input the graph is a function
+    * of; the cache manager's contents are one more, which is why an entry
+    * is only stored and only used while no data is cached. */
   private[graft] final case class ViewMemo(
       name: String,
       input: LogicalPlan,
@@ -153,9 +156,14 @@ object SQLFlow {
 
     // 2. semanticHash → view name, for subplan-to-view substitution
     //    (reference: SQLFlow.scala:94-96,150-154). A hash two views share
-    //    names neither: cutting to either one would be a guess
-    val hashToView: Map[Int, String] =
-      all.groupBy(_._2.semanticHash()).collect { case (h, Seq((n, _, _))) => h -> n }
+    //    names neither: cutting to either one would be a guess. With one
+    //    view there is nothing to substitute, so nothing is hashed
+    val subplanHashes: IndexedSeq[java.util.IdentityHashMap[LogicalPlan, Integer]] =
+      if (all.size < 2) IndexedSeq.empty
+      else all.toIndexedSeq.map { case (_, p, stored) => hashesOf(p, stored) }
+    val hashToView: Map[Int, String] = subplanHashes.indices
+      .groupBy(i => subplanHashes(i).get(all(i)._2).intValue)
+      .collect { case (h, Seq(i)) => h -> all(i)._1 }
 
     // trivial subplans (bare scans / alias-only wrappers) are excluded from
     // substitution — two views that are both just "scan t" must not collapse
@@ -174,7 +182,7 @@ object SQLFlow {
     val cachedFn = isCachedFn(session)
     val confs = session.sessionState.conf.getAllConfs
     val extraRules = session.experimental.extraOptimizations
-    val graphs = all.map { case (name, analyzed, stored) =>
+    val graphs = all.zipWithIndex.map { case ((name, analyzed, stored), i) =>
       // cut at OTHER views' boundaries — BY NAME for explicit view
       // references (SubqueryAlias/View wrappers in analyzed plans), by
       // semantic hash only as the DataFrame-chain fallback (reference:
@@ -183,6 +191,9 @@ object SQLFlow {
       // hashing like another view (a projection-only chain) is the view
       // itself, not a reference to the other one
       import org.apache.spark.sql.catalyst.plans.logical.View
+      def otherView(p: LogicalPlan): Option[String] =
+        if (hashToView.isEmpty) None
+        else Option(subplanHashes(i).get(p)).flatMap(h => hashToView.get(h.intValue)).filter(_ != name)
       val substituted = analyzed.transformDown {
         case s @ SubqueryAlias(ident, _)
             if viewNames.contains(ident.name) && ident.name != name =>
@@ -190,9 +201,8 @@ object SQLFlow {
         case v: View
             if viewNames.contains(v.desc.identifier.table) && v.desc.identifier.table != name =>
           ViewRef(v.desc.identifier.table, v.output, isTemp = v.isTempView)
-        case p if (p ne analyzed) && !trivial(p) &&
-            hashToView.get(p.semanticHash()).exists(_ != name) =>
-          ViewRef(hashToView(p.semanticHash()), p.output, isTemp = true)
+        case p if (p ne analyzed) && !trivial(p) && otherView(p).isDefined =>
+          ViewRef(otherView(p).get, p.output, isTemp = true)
       }
       // cached-subtree wrap as a MANUAL one-shot recursion: a transformDown
       // rule returning CachedMarker(p) would re-match its own child p and
@@ -213,7 +223,7 @@ object SQLFlow {
       val g = hit match {
         case Some(m) =>
           counter.value = m.counterEnd
-          FlowAnalysis.withFreshProps(m.graph)
+          m.graph
         case None =>
           val optimized = session.sessionState.optimizer.execute(input)
           val g = FlowAnalysis.analyze(optimized, name, FlowNodeType.View, cachedFn, counter)
@@ -224,11 +234,40 @@ object SQLFlow {
           }
           g
       }
-      if (contracted) { val (n, e) = FlowAnalysis.contract(g); FlowAnalysis.Graph(n, e, g.rootId, Nil) }
-      else g
+      if (contracted) g.contracted else g
     }
     merge(graphs.map(g => (g.nodes, g.edges)))
   }
+
+  /** The semantic hash of every node of a view's analyzed plan, by node.
+    * The hashes are computed on a copy, so the plan keeps no canonicalized
+    * copies; a view's stored plan keeps them, as Ints, in a
+    * [[SubplanHashes]]. */
+  private def hashesOf(plan: LogicalPlan, stored: Boolean)
+      : java.util.IdentityHashMap[LogicalPlan, Integer] = {
+    def preorder(p: LogicalPlan): Seq[LogicalPlan] = {
+      val nodes = mutable.ArrayBuffer[LogicalPlan]()
+      p.foreach(nodes += _)
+      nodes.toSeq
+    }
+    val kept =
+      if (stored) plan.synchronized(plan.getTagValue(SubplanHashesTag)).filter(_.plan eq plan)
+      else None
+    val hashes = kept.map(_.hashes).getOrElse {
+      val hs = preorder(FlowAnalysis.transientCopy(plan)).map(_.semanticHash()).toArray
+      if (stored) plan.synchronized(plan.setTagValue(SubplanHashesTag, SubplanHashes(plan, hs)))
+      hs
+    }
+    val byNode = new java.util.IdentityHashMap[LogicalPlan, Integer]()
+    preorder(plan).zip(hashes).foreach { case (n, h) => byNode.put(n, h) }
+    byNode
+  }
+
+  /** The semantic hashes of a stored view plan's nodes, in pre-order. As
+    * with [[DatasetMemo]], `plan` is the plan they were computed for. */
+  private[graft] final case class SubplanHashes(plan: LogicalPlan, hashes: Array[Int])
+
+  private[graft] val SubplanHashesTag = TreeNodeTag[SubplanHashes]("sqlflow.subplanHashes")
 
   /** Merge per-view graphs: nodes dedupe by uid (cached flag ORed). */
   def merge(parts: Seq[(Seq[FlowNode], Seq[FlowEdge])]): (Seq[FlowNode], Seq[FlowEdge]) = {

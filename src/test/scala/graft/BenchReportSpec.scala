@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 import org.apache.spark.sql.graft.ListenerBusDrain
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -81,6 +81,27 @@ class BenchReportSpec extends AnyFunSuite {
     // a failed drain keeps wall and rows, and marks every attribution column
     assert(telemetry.snap(1.5, 7L, drained = false) ===
       Bench.EntryStats(1.5, -1.0, -1L, -1L, -1L, -1L, -1L, -1L, 7L, -1.0, Nil))
+  }
+
+  test("a pooled build names its stages after the call site it sets") {
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = spark.sparkContext
+    val telemetry = new Bench.Telemetry
+    sc.addSparkListener(telemetry)
+    try {
+      assert(ListenerBusDrain.drain(sc))
+      telemetry.reset()
+      // a shuffle, and a broadcast built on Spark's own exchange pool
+      Await.result(Future(blocking(SparkEntry.withCallSite(spark, "zpanel_build q80_textrank") {
+        spark.range(100).join(broadcast(spark.range(10).withColumn("b", col("id") * 2)), "id")
+          .groupBy(col("b")).count().collect()
+      })), Duration.Inf)
+      assert(ListenerBusDrain.drain(sc))
+      val names = telemetry.records.map(_.name)
+      assert(names.size >= 2 && names.forall(_ == "zpanel_build q80_textrank"), names)
+    } finally sc.removeSparkListener(telemetry)
   }
 
   test("a stage record renders as JSON in ms and MB, its name escaped") {

@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * on the same Dataset reuses the kept graph, and after every change that
   * can alter that graph the call returns exactly what it returns with no
   * memo at all. The memo-free reference is the same call after the memo is
-  * dropped from the plan. A hit hands out the kept edge list itself, which
-  * tells hits from misses. */
+  * dropped from the plan. A hit hands out the kept graph's attribute
+  * lists themselves, which tells hits from misses. */
 class DatasetMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -53,7 +53,7 @@ class DatasetMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def graph(df: DataFrame): ((Seq[FlowNode], Seq[FlowEdge]), Boolean) = {
     val before = kept(df)
     val out = SQLFlow.datasetGraph(df)
-    (out, before.exists(_.edges eq out._2))
+    (out, before.exists(g => g.nodes.map(_.attributes).corresponds(out._1.map(_.attributes))(_ eq _)))
   }
 
   private def memoFree(df: DataFrame, contracted: Boolean = false): (Seq[FlowNode], Seq[FlowEdge]) = {

@@ -1,12 +1,13 @@
 #!/usr/bin/env bash
 # Run every local gate in sequence: compile+specs, correctness oracle,
-# parallelism-independence, and the Python façade round-trip.
+# parallelism-independence, the Python façade round-trip, and the lineage
+# benchmark's correctness checks.
 #   tools/run_all_gates.sh [sfdir]     (default /root/testdata/sf0.001)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.001}"
 
-echo "=== 1/4 sbt test ==="
+echo "=== 1/5 sbt test ==="
 # FULL output goes to a log first, pass/fail judged on sbt's exit code,
 # and failures are surfaced by grepping the log afterwards — the r16
 # 1-in-6 flake lost its failing test's IDENTITY because output was
@@ -23,20 +24,27 @@ else
   exit 1
 fi
 
-echo "=== 2/4 correctness oracle ($SF) ==="
+echo "=== 2/5 correctness oracle ($SF) ==="
 rm -rf /tmp/gate_verify
 sbt -batch "runMain graft.Verify $SF /tmp/gate_verify" > /tmp/gate_verify.log 2>&1 \
   || { tail -20 /tmp/gate_verify.log; exit 1; }
 grep '\[verify\]' /tmp/gate_verify.log || true
 python3 tools/check_oracle.py "$SF" /tmp/gate_verify
 
-echo "=== 3/4 parallelism independence (5 vs 16 threads) ==="
+echo "=== 3/5 parallelism independence (5 vs 16 threads) ==="
 rm -rf /tmp/gate_det5 /tmp/gate_det16
 SPARK_GRAFT_CPUS=5  sbt -batch "runMain graft.Verify $SF /tmp/gate_det5"  > /dev/null 2>&1
 SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF /tmp/gate_det16" > /dev/null 2>&1
 python3 tools/check_determinism.py /tmp/gate_det5 /tmp/gate_det16 | tail -2
 
-echo "=== 4/4 Python façade ==="
+echo "=== 4/5 Python façade ==="
 bash tools/run_python_tests.sh 2>&1 | tail -3
+
+echo "=== 5/5 lineage benchmark checks (206 catalog goldens, per-Dataset pins) ==="
+# one short lineage-tpcds run: its set-up and pass check every output, and
+# its result line says "correct":true only if none failed
+lineage=$(python3 flowbench/run.py --workload lineage-tpcds --seed 1 --seconds 1 | tail -1)
+echo "$lineage"
+grep -q '"correct":true' <<< "$lineage" || { echo "lineage benchmark checks FAILED"; exit 1; }
 
 echo "ALL GATES GREEN"
