@@ -170,21 +170,12 @@ object FlowAnalysis {
     * included, and lineage must not leave that on a caller's plan. */
   private[graft] def semanticHash(plan: LogicalPlan): Int = transientCopy(plan).semanticHash()
 
-  /** A relation leaf's semantic hash, kept on the leaf as an Int: the
+  /** Relation leaves' semantic hashes, kept on the leaves as Ints: the
     * optimized plans of a Dataset and of its view share their leaves, so
-    * each leaf is hashed once. `leaf` is the leaf the hash is for, since
-    * Catalyst copies tags onto the plans it derives from a tagged one. */
-  private final case class LeafHash(leaf: LeafNode, hash: Int)
+    * each leaf is hashed once. */
+  private val leafHashes = new PlanMemo[Int]("sqlflow.leafHash")
 
-  private val LeafHashTag = TreeNodeTag[LeafHash]("sqlflow.leafHash")
-
-  private def leafHash(leaf: LeafNode): Int = leaf.synchronized {
-    leaf.getTagValue(LeafHashTag).filter(_.leaf eq leaf).map(_.hash).getOrElse {
-      val hash = semanticHash(leaf)
-      leaf.setTagValue(LeafHashTag, LeafHash(leaf, hash))
-      hash
-    }
-  }
+  private def leafHash(leaf: LeafNode): Int = leafHashes.getOrElseUpdate(leaf)(semanticHash(leaf))
 
   /** A copy of `plan` that shares no plan node with it, subquery plans
     * included, for computations that cache their results on the nodes.
@@ -730,6 +721,31 @@ object FlowAnalysis {
       kept.map(g.types), kept.map(g.cached), kept.map(g.statLeaves), kept.map(g.leafHashes),
       edges.result(), Array.emptyIntArray, newIndex(root))
   }
+}
+
+/** A value lineage keeps on a plan node it did not create, under one
+  * `TreeNodeTag` named `name`, and frees with that node. Catalyst copies
+  * tags onto the plans it derives from a tagged one, so the tag holds the
+  * node the value was stored on, and a value is only returned for that
+  * very node. */
+private[graft] final class PlanMemo[V](name: String) {
+  private val tag = TreeNodeTag[(LogicalPlan, V)](name)
+
+  /** The tag's value as `plan` carries it, whichever node it was stored on. */
+  def tagged(plan: LogicalPlan): Option[(LogicalPlan, V)] =
+    plan.synchronized(plan.getTagValue(tag))
+
+  def get(plan: LogicalPlan): Option[V] = tagged(plan).collect { case (p, v) if p eq plan => v }
+
+  def put(plan: LogicalPlan, value: V): Unit = plan.synchronized(plan.setTagValue(tag, (plan, value)))
+
+  def getOrElseUpdate(plan: LogicalPlan)(value: => V): V = get(plan).getOrElse {
+    val v = value
+    put(plan, v)
+    v
+  }
+
+  def remove(plan: LogicalPlan): Unit = plan.synchronized(plan.unsetTagValue(tag))
 }
 
 /** Marker leaf standing in for a (temp) view subtree in catalog mode, so

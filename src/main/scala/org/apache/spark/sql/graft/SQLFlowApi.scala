@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession, Dataset => ClassicDataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SessionState
@@ -24,75 +23,74 @@ object SQLFlow {
 
   /** Lineage graph of a single Dataset's optimized plan.
     *
-    * The graph, and its contraction once made, are kept in a
-    * [[DatasetMemo]] on that plan, so they are freed with the Dataset, and
-    * a later call reuses them without walking the plan again. A memo is
-    * only stored and only used while the cache manager is empty, and never
-    * for a plan that reads an RDD (its lineage depends on [[RddLineage]]
-    * registrations, which may come after the plan). The root's semantic
-    * hash is computed on a copy of the plan, so the call leaves no
-    * canonicalized plan on the Dataset's. */
+    * The graph, and its contraction once made, are kept on that plan in
+    * [[datasetMemo]], so they are freed with the Dataset, and a later call
+    * reuses them without walking the plan again. A memo is only used while
+    * the cache manager is empty, and only stored when [[keeps]] allows it.
+    * The root's semantic hash is computed on a copy of the plan, so the call
+    * leaves no canonicalized plan on the Dataset's. */
   def datasetGraph(ds: Dataset[_], contracted: Boolean = false)
       : (Seq[FlowNode], Seq[FlowEdge]) = {
     val cds = ds.asInstanceOf[ClassicDataset[_]]
     val session = cds.sparkSession
-    val cacheManager = session.sharedState.cacheManager
     val plan = cds.queryExecution.optimizedPlan
-    val emptyCache = cacheManager.isEmpty
-    val memo = if (emptyCache) plan.synchronized(plan.getTagValue(DatasetMemoTag)) else None
-    val g = memo.filter(_.plan eq plan) match {
-      case Some(m) => m.graph
-      case None =>
-        val rootName = s"query_${math.abs(FlowAnalysis.semanticHash(plan)).toString}"
-        val g = FlowAnalysis.analyze(plan, rootName, FlowNodeType.Query, isCachedFn(session))
-        if (emptyCache && cacheManager.isEmpty && !readsRdd(plan)) plan.synchronized {
-          plan.setTagValue(DatasetMemoTag, DatasetMemo(plan, g))
-        }
-        g
+    val emptyCache = session.sharedState.cacheManager.isEmpty
+    val g = (if (emptyCache) datasetMemo.get(plan) else None).getOrElse {
+      val rootName = s"query_${math.abs(FlowAnalysis.semanticHash(plan)).toString}"
+      val g = FlowAnalysis.analyze(plan, rootName, FlowNodeType.Query, isCachedFn(session))
+      if (keeps(session, emptyCache, plan)) datasetMemo.put(plan, g)
+      g
     }
     val out = if (contracted) g.contracted else g
     (out.nodes, out.edges)
   }
 
-  /** A Dataset's lineage graph, kept on its optimized plan under
-    * [[DatasetMemoTag]]. `plan` is that plan: Catalyst copies tags onto the
-    * plans it derives from a tagged one, so the memo is only used on the
-    * very object it was made from. */
-  private[graft] final case class DatasetMemo(plan: LogicalPlan, graph: FlowAnalysis.Graph)
+  /** A Dataset's lineage graph, kept on its optimized plan. */
+  private[graft] val datasetMemo = new PlanMemo[FlowAnalysis.Graph]("sqlflow.datasetLineage")
 
-  private[graft] val DatasetMemoTag = TreeNodeTag[DatasetMemo]("sqlflow.datasetLineage")
+  /** One view's lineage graph, kept on the view's analyzed plan with the
+    * key it was made under and the uid counter's end. */
+  private[graft] val viewMemo =
+    new PlanMemo[(ViewKey, Int, FlowAnalysis.Graph)]("sqlflow.viewLineage")
 
-  private def readsRdd(plan: LogicalPlan): Boolean =
-    plan.collectFirstWithSubqueries { case _: LogicalRDD => true }.isDefined
+  /** The semantic hashes of a view plan's nodes, in pre-order. */
+  private val subplanHashMemo = new PlanMemo[Array[Int]]("sqlflow.subplanHashes")
 
-  /** One temp view's lineage graph (and its contraction once made), kept
-    * on the view's stored analyzed plan under [[ViewMemoTag]] and freed
-    * with it. Every field but `graph` is an input the graph is a function
-    * of; the cache manager's contents are one more, which is why an entry
-    * is only stored and only used while no data is cached. */
-  private[graft] final case class ViewMemo(
+  /** The store rule of both graph memos. A graph made from `plan` is kept
+    * only if no data was cached before (`emptyBefore`) or after it was
+    * made, and `plan` reads no RDD: an RDD's lineage can be registered
+    * through [[RddLineage]] after the plan was made. A memo is only used
+    * on the plan object it was stored on, so this is checked only when
+    * storing. */
+  private def keeps(session: ClassicSession, emptyBefore: Boolean, plan: LogicalPlan): Boolean =
+    emptyBefore && session.sharedState.cacheManager.isEmpty &&
+      plan.collectFirstWithSubqueries { case _: LogicalRDD => true }.isEmpty
+
+  /** Every input one view's graph is a function of, but the cache
+    * manager's contents: the view's name, the uid counter's start, the
+    * session state (held weakly, compared by identity), the set confs, the
+    * extra optimizer rules and the optimizer input. */
+  private[graft] final case class ViewKey(
       name: String,
-      input: LogicalPlan,
+      counterStart: Int,
       state: java.lang.ref.WeakReference[SessionState],
       confs: Map[String, String],
       extraRules: Seq[Rule[LogicalPlan]],
-      counterStart: Int,
-      counterEnd: Int,
-      graph: FlowAnalysis.Graph)
-
-  private[graft] val ViewMemoTag = TreeNodeTag[ViewMemo]("sqlflow.viewLineage")
+      input: LogicalPlan) {
+    def sameAs(k: ViewKey): Boolean = (state.get eq k.state.get) && copy(state = k.state) == k
+  }
 
   /** Lineage graph of every (temp) view in the session catalog
     * (reference EP1: SQLFlow.scala:61-189). View-on-view references are cut
     * at view boundaries via [[ViewRef]] substitution by semantic hash.
     *
-    * A temp view whose stored plan is analyzed (DataFrame-created) keeps
-    * its per-view graph in a [[ViewMemo]]; a later call reuses it, without
-    * optimizing or walking the plan again, when every input of the graph is
-    * unchanged: the optimizer input, the view name, the session state, the
-    * set confs, the extra optimizer rules and the uid counter's start, with
-    * the cache manager empty. Persistent and SQL-text views are re-parsed
-    * on every call, so they never use one. */
+    * Each view keeps its graph on its analyzed plan in [[viewMemo]]; a
+    * later call reuses it, without optimizing or walking the plan again,
+    * when the plan is the same object, its [[ViewKey]] is unchanged and
+    * the cache manager is empty; it is only stored when [[keeps]] allows
+    * it. Only DataFrame-created temp views keep their analyzed plan
+    * between calls: persistent and SQL-text views are analyzed again on
+    * every call, so their memos die with the plan and never hit. */
   def catalogGraph(spark: SparkSession, contracted: Boolean = false)
       : (Seq[FlowNode], Seq[FlowEdge]) = {
     val session = spark.asInstanceOf[ClassicSession]
@@ -121,16 +119,14 @@ object SQLFlow {
       }.toOption.toSeq
       // qualify views outside the current database so same-named views in
       // different databases get distinct node uids
-    } yield (if (db == currentDb) ident.table else s"$db.${ident.table}", plan, false)
+    } yield (if (db == currentDb) ident.table else s"$db.${ident.table}", plan)
 
     // SQL-created temp views store the PARSED plan (viewText is re-resolved
     // on access since Spark 3.1); DataFrame-created ones store analyzed
-    // plans — normalize by analyzing when unresolved. The flag marks the
-    // catalog's stored plan object, the only one a memo can live on.
-    def analyzed(name: String, p: LogicalPlan): Option[(String, LogicalPlan, Boolean)] =
-      if (p.resolved) Some((name, p, true))
-      else scala.util.Try(session.sessionState.executePlan(p).analyzed).toOption
-        .map((name, _, false))
+    // plans — normalize by analyzing when unresolved
+    def analyzed(name: String, p: LogicalPlan): Option[(String, LogicalPlan)] =
+      if (p.resolved) Some((name, p))
+      else scala.util.Try(session.sessionState.executePlan(p).analyzed).toOption.map((name, _))
 
     // SORTED: getTempViewNames() iterates the catalog's hash map, whose
     // order depends on its insertion/rehash HISTORY (views created earlier
@@ -152,7 +148,7 @@ object SQLFlow {
     val globals = catalog.globalTempViewManager.listViewNames("*").sorted.flatMap { name =>
       catalog.getGlobalTempView(name).flatMap(v => analyzed(s"$globalDb.$name", v.child))
     }
-    val all: Seq[(String, LogicalPlan, Boolean)] = persistent ++ temps ++ globals
+    val all: Seq[(String, LogicalPlan)] = persistent ++ temps ++ globals
 
     // 2. semanticHash → view name, for subplan-to-view substitution
     //    (reference: SQLFlow.scala:94-96,150-154). A hash two views share
@@ -160,7 +156,7 @@ object SQLFlow {
     //    view there is nothing to substitute, so nothing is hashed
     val subplanHashes: IndexedSeq[java.util.IdentityHashMap[LogicalPlan, Integer]] =
       if (all.size < 2) IndexedSeq.empty
-      else all.toIndexedSeq.map { case (_, p, stored) => hashesOf(p, stored) }
+      else all.toIndexedSeq.map { case (_, p) => hashesOf(p) }
     val hashToView: Map[Int, String] = subplanHashes.indices
       .groupBy(i => subplanHashes(i).get(all(i)._2).intValue)
       .collect { case (h, Seq(i)) => h -> all(i)._1 }
@@ -182,7 +178,8 @@ object SQLFlow {
     val cachedFn = isCachedFn(session)
     val confs = session.sessionState.conf.getAllConfs
     val extraRules = session.experimental.extraOptimizations
-    val graphs = all.zipWithIndex.map { case ((name, analyzed, stored), i) =>
+    val state = new java.lang.ref.WeakReference(session.sessionState)
+    val graphs = all.zipWithIndex.map { case ((name, analyzed), i) =>
       // cut at OTHER views' boundaries — BY NAME for explicit view
       // references (SubqueryAlias/View wrappers in analyzed plans), by
       // semantic hash only as the DataFrame-chain fallback (reference:
@@ -214,24 +211,16 @@ object SQLFlow {
       }
       val emptyCache = cacheManager.isEmpty
       val input = markCached(substituted)
-      val start = counter.value
-      val memo =
-        if (stored && emptyCache) analyzed.synchronized(analyzed.getTagValue(ViewMemoTag)) else None
-      val hit = memo.filter(m => m.name == name && m.counterStart == start &&
-        (m.state.get eq session.sessionState) && m.confs == confs &&
-        m.extraRules == extraRules && ((m.input eq input) || m.input == input))
+      val key = ViewKey(name, counter.value, state, confs, extraRules, input)
+      val hit = if (emptyCache) viewMemo.get(analyzed).filter(_._1.sameAs(key)) else None
       val g = hit match {
-        case Some(m) =>
-          counter.value = m.counterEnd
-          m.graph
+        case Some((_, counterEnd, g)) =>
+          counter.value = counterEnd
+          g
         case None =>
           val optimized = session.sessionState.optimizer.execute(input)
           val g = FlowAnalysis.analyze(optimized, name, FlowNodeType.View, cachedFn, counter)
-          if (stored && emptyCache && cacheManager.isEmpty) analyzed.synchronized {
-            analyzed.setTagValue(ViewMemoTag, ViewMemo(name, input,
-              new java.lang.ref.WeakReference(session.sessionState), confs, extraRules,
-              start, counter.value, g))
-          }
+          if (keeps(session, emptyCache, input)) viewMemo.put(analyzed, (key, counter.value, g))
           g
       }
       if (contracted) g.contracted else g
@@ -241,33 +230,19 @@ object SQLFlow {
 
   /** The semantic hash of every node of a view's analyzed plan, by node.
     * The hashes are computed on a copy, so the plan keeps no canonicalized
-    * copies; a view's stored plan keeps them, as Ints, in a
-    * [[SubplanHashes]]. */
-  private def hashesOf(plan: LogicalPlan, stored: Boolean)
-      : java.util.IdentityHashMap[LogicalPlan, Integer] = {
+    * copies, only the Ints in [[subplanHashMemo]]. */
+  private def hashesOf(plan: LogicalPlan): java.util.IdentityHashMap[LogicalPlan, Integer] = {
     def preorder(p: LogicalPlan): Seq[LogicalPlan] = {
       val nodes = mutable.ArrayBuffer[LogicalPlan]()
       p.foreach(nodes += _)
       nodes.toSeq
     }
-    val kept =
-      if (stored) plan.synchronized(plan.getTagValue(SubplanHashesTag)).filter(_.plan eq plan)
-      else None
-    val hashes = kept.map(_.hashes).getOrElse {
-      val hs = preorder(FlowAnalysis.transientCopy(plan)).map(_.semanticHash()).toArray
-      if (stored) plan.synchronized(plan.setTagValue(SubplanHashesTag, SubplanHashes(plan, hs)))
-      hs
-    }
+    val hashes = subplanHashMemo.getOrElseUpdate(plan)(
+      preorder(FlowAnalysis.transientCopy(plan)).map(_.semanticHash()).toArray)
     val byNode = new java.util.IdentityHashMap[LogicalPlan, Integer]()
     preorder(plan).zip(hashes).foreach { case (n, h) => byNode.put(n, h) }
     byNode
   }
-
-  /** The semantic hashes of a stored view plan's nodes, in pre-order. As
-    * with [[DatasetMemo]], `plan` is the plan they were computed for. */
-  private[graft] final case class SubplanHashes(plan: LogicalPlan, hashes: Array[Int])
-
-  private[graft] val SubplanHashesTag = TreeNodeTag[SubplanHashes]("sqlflow.subplanHashes")
 
   /** Merge per-view graphs: nodes dedupe by uid (cached flag ORed). */
   def merge(parts: Seq[(Seq[FlowNode], Seq[FlowEdge])]): (Seq[FlowNode], Seq[FlowEdge]) = {

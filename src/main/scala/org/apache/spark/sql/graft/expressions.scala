@@ -464,8 +464,8 @@ object ChunkMd5Ops {
   * The k-gram hash is the first 15 hex chars of md5 — md5 is the one
   * hash both engines share, so the DuckDB oracle reproduces fingerprints
   * bit-for-bit (`CAST('0x' || SUBSTRING(md5(..), 1, 15) AS BIGINT)`,
-  * the t07 precedent). Production at 100 TB would swap in a rolling
-  * Karp-Rabin/xxhash kernel (O(1) per position instead of O(k)); the
+  * the t07 precedent). A rolling Karp-Rabin hash would cost O(1) per
+  * position instead of O(k), but DuckDB could not replay it; the
   * selection logic — and everything downstream — is hash-agnostic. */
 object WinnowOps {
   private val Md5 = ThreadLocal.withInitial[java.security.MessageDigest](
@@ -498,12 +498,11 @@ object WinnowOps {
     select(h, w)
   }
 
-  /** Shared winnowing selection: min hash of each w-window of the k-gram
-    * hash array, returned as the sorted distinct fingerprint set.
-    * Primitive arrays throughout (collect minima → sort → in-place
-    * dedupe): no boxing, no tree — this is on the per-document hot path
-    * of both kernels. */
-  private[graft] def select(h: Array[Long], w: Int): ArrayData = {
+  /** Winnowing selection: min hash of each w-window of the k-gram hash
+    * array, returned as the sorted distinct fingerprint set. Primitive
+    * arrays throughout (collect minima → sort → in-place dedupe): no
+    * boxing, no tree — this is on the kernel's per-document hot path. */
+  private def select(h: Array[Long], w: Int): ArrayData = {
     val m = h.length
     val nw = math.max(m - w + 1, 1)
     val mins = new Array[Long](nw)
@@ -524,59 +523,6 @@ object WinnowOps {
       i += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(mins, uniq))
-  }
-
-  // ---- rolling Karp-Rabin kernel (the production hot path) ----
-  // Polynomial hash in the 2^61-1 Mersenne field: O(1) per position (one
-  // mulmod + add, one subtract of the outgoing char's B^(k-1) term) where
-  // the md5 kernel digests all k chars at every position — the difference
-  // between O(n) and O(n·k) per document, which IS d16's dominant cost at
-  // corpus scale. The md5 kernel stays because DuckDB can replay it
-  // (d16's oracle); the selection logic and the winnowing guarantee are
-  // kernel-independent and shared.
-  private val MersenneP = (1L << 61) - 1
-  private val RollB = 1000003L
-
-  private def mulmod(a: Long, b: Long): Long = {
-    // 128-bit product reduced mod 2^61-1: hi < 2^58 for 61-bit operands,
-    // so (hi<<3 | lo>>>61) + (lo & P) < 2^62 and one conditional subtract
-    // per fold step suffices
-    val hi = Math.multiplyHigh(a, b)
-    val lo = a * b
-    var r = (lo & MersenneP) + ((hi << 3) | (lo >>> 61))
-    if (r >= MersenneP) r -= MersenneP
-    r
-  }
-
-  def fingerprintsRolling(s: UTF8String, k: Int, w: Int): ArrayData = {
-    val str = s.toString
-    val n = str.length
-    if (n < k) {
-      // whole-short-text k-gram, like the md5 kernel
-      var hh = 0L
-      var i = 0
-      while (i < n) { hh = (mulmod(hh, RollB) + str.charAt(i)) % MersenneP; i += 1 }
-      return select(Array(hh), w)
-    }
-    val m = n - k + 1
-    // B^(k-1) mod P for the outgoing term
-    var bk = 1L
-    var e = 0
-    while (e < k - 1) { bk = mulmod(bk, RollB); e += 1 }
-    val h = new Array[Long](m)
-    var hh = 0L
-    var i = 0
-    while (i < k) { hh = (mulmod(hh, RollB) + str.charAt(i)) % MersenneP; i += 1 }
-    h(0) = hh
-    var p = 1
-    while (p < m) {
-      val out = mulmod(str.charAt(p - 1).toLong, bk)
-      hh = (hh - out + MersenneP) % MersenneP
-      hh = (mulmod(hh, RollB) + str.charAt(p + k - 1)) % MersenneP
-      h(p) = hh
-      p += 1
-    }
-    select(h, w)
   }
 }
 
@@ -1427,11 +1373,6 @@ private[graft] object Kernels {
       { case Seq(s: UTF8String, k: Int, w: Int) => WinnowOps.fingerprints(s, k, w) },
       call("WinnowOps.fingerprints"),
       { case Seq(k: Int, w: Int) => require(k > 0 && w > 0, s"k and w must be positive, got k=$k w=$w") }),
-    Kernel("winnow_fingerprints_rolling", "winnow_fingerprints_rolling", 1, Some(Seq(32, 8)),
-      Str, const(LongArr),
-      { case Seq(s: UTF8String, k: Int, w: Int) => WinnowOps.fingerprintsRolling(s, k, w) },
-      call("WinnowOps.fingerprintsRolling"),
-      { case Seq(k: Int, w: Int) => require(k > 0 && w > 0, "k and w must be positive") }),
     Kernel("deletion_variant_hashes", "deletionvarianthashes", 1, Some(Nil), Str, const(LongArr),
       { case Seq(s: UTF8String) => DeletionOps.variantHashes(s, ShingleOps.Seed) },
       (_, _) => args => s"$Pkg.DeletionOps.variantHashes(${args.head}, ${ShingleOps.Seed}L)"),
@@ -1641,8 +1582,6 @@ object functions {
   def cdc_chunk_hashes_md5(c: Column, minSize: Int = 16, maskBits: Int = 6): Column =
     kernel("cdc_chunk_hashes_md5", c)(minSize, maskBits)
   def pcm_downsample2(c: Column): Column = kernel("pcm_downsample2", c)()
-  def winnow_fingerprints_rolling(c: Column, k: Int = 32, w: Int = 8): Column =
-    kernel("winnow_fingerprints_rolling", c)(k, w)
   def zorder_key(x: Column, y: Column, bits: Int = 16): Column = kernel("zorder_key", x, y)(bits)
   def winnow_fingerprints(c: Column, k: Int = 32, w: Int = 8): Column =
     kernel("winnow_fingerprints", c)(k, w)

@@ -185,57 +185,6 @@ class PropertySpec extends AnyFunSuite {
     assert(keys.map(_._3).distinct.size === pts.distinct.size)
   }
 
-  test("winnow_fingerprints_rolling: the production Karp-Rabin kernel keeps " +
-    "the guarantee and is meaningfully faster than md5") {
-    import org.apache.spark.sql.graft.functions.winnow_fingerprints_rolling
-    val wordRnd = new scala.util.Random(11)
-    def words(n: Int): String =
-      Seq.fill(n)(Seq.fill(3 + wordRnd.nextInt(6))(
-        ('a' + wordRnd.nextInt(26)).toChar).mkString).mkString(" ")
-    val cases = (0 until 20).map { _ =>
-      val span = words(12)
-      (words(wordRnd.nextInt(20)) + " " + span + " " + words(wordRnd.nextInt(20)),
-        words(wordRnd.nextInt(20)) + " " + span + " " + words(wordRnd.nextInt(20)))
-    }
-    cases.toDF("a", "b").select(
-      winnow_fingerprints_rolling($"a", 32, 8).as("fa"),
-      winnow_fingerprints_rolling($"b", 32, 8).as("fb"))
-      .collect().zipWithIndex.foreach { case (r, i) =>
-        assert(r.getSeq[Long](0).toSet.intersect(r.getSeq[Long](1).toSet).nonEmpty,
-          s"case $i: planted span not detected by the rolling kernel")
-      }
-    // determinism + totality on unicode/empty, like the md5 kernel
-    val uni = Seq("", "héllo wörld", "日本語テキスト 😀", "a" * 100)
-    val once = uni.toDF("t").select(winnow_fingerprints_rolling($"t", 32, 8))
-      .collect().map(_.getSeq[Long](0).toList).toList
-    val twice = uni.toDF("t").select(winnow_fingerprints_rolling($"t", 32, 8))
-      .collect().map(_.getSeq[Long](0).toList).toList
-    assert(once === twice)
-    // the point of the kernel: O(n) beats O(n·k) — measure both on the
-    // same corpus-shaped batch. Typical e2e gap is ≥ 2× (the kernel-only
-    // gap is larger but shared per-row costs — UTF8String materialization,
-    // winnow selection, Spark eval — dilute it); the GATE requires 1.3×
-    // on interleaved min-of-3, because a single-shot measurement under
-    // container CPU bursts has shown 2× swings (the BUILD_NOTES noise
-    // envelope) and a flaky suite is worse than a loose margin.
-    val batch = Seq.fill(3000)(words(900)).toDF("t").cache()
-    batch.count()
-    def time(c: org.apache.spark.sql.Column): Long = {
-      val t0 = System.nanoTime()
-      batch.select(sum(size(c))).head()
-      System.nanoTime() - t0
-    }
-    time(winnow_fingerprints_rolling($"t", 32, 8)) // warm both paths
-    time(winnow_fingerprints($"t", 32, 8))
-    val (fasts, slows) = (1 to 3).map { _ =>
-      (time(winnow_fingerprints_rolling($"t", 32, 8)), time(winnow_fingerprints($"t", 32, 8)))
-    }.unzip
-    val (fast, slow) = (fasts.min, slows.min)
-    batch.unpersist()
-    assert(10 * slow > 13 * fast,
-      f"rolling kernel not faster: md5 ${slow / 1e6}%.1f ms vs rolling ${fast / 1e6}%.1f ms")
-  }
-
   test("winnow_fingerprints: the guarantee holds for random spans at random offsets") {
     // plant one shared span (length ≥ w+k−1 = 39) into two random carriers
     // at independent random offsets; the fingerprint sets must intersect

@@ -2,11 +2,13 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,10 +33,12 @@ class CatalogMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private val tables = Seq("memo_t", "memo_u")
-  private val views = Seq("memo_a", "memo_v", "memo_w")
+  private val views = Seq("memo_a", "memo_r", "memo_s", "memo_v", "memo_w")
+  private val persistentView = "memo_p"
 
   override def beforeAll(): Unit = {
     super.beforeAll()
+    spark.sql(s"DROP VIEW IF EXISTS $persistentView")
     tables.foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       // `x` is read by no view, so column pruning shows in the graph
@@ -51,6 +55,7 @@ class CatalogMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       spark.experimental.extraOptimizations = Nil
       views.foreach(spark.catalog.dropTempView)
+      spark.sql(s"DROP VIEW IF EXISTS $persistentView")
       tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     } finally super.afterAll()
   }
@@ -66,7 +71,7 @@ class CatalogMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def memoFree(contracted: Boolean = false): (Seq[FlowNode], Seq[FlowEdge]) = {
     catalog.getTempViewNames().foreach { n =>
-      catalog.getTempView(n).foreach(_.child.unsetTagValue(SQLFlow.ViewMemoTag))
+      catalog.getTempView(n).foreach(v => SQLFlow.viewMemo.remove(v.child))
     }
     val (out, runs) = graph(contracted)
     assert(runs > 0, "the memo-free call did not optimize")
@@ -204,5 +209,49 @@ class CatalogMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tableNode(out).props("sizeInBytes") != tableNode(first).props("sizeInBytes"),
       tableNode(out).props)
     assert(out === memoFree())
+  }
+
+  test("a view that reads an RDD keeps no memo: its lineage can be registered later") {
+    fresh()
+    val schema = StructType(Seq(StructField("k", IntegerType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1), Row(2))), schema)
+      .filter(col("k") > 1).createOrReplaceTempView("memo_r")
+    val (before, _) = graph()
+    val rdd = catalog.getTempView("memo_r").get.child.collectFirst { case l: LogicalRDD => l.rdd }.get
+    val source = spark.table("memo_t").select("k").asInstanceOf[ClassicDataset[_]]
+      .queryExecution.optimizedPlan
+    RddLineage.register(rdd, RddLineage.Derivation(source, Nil, "Registered"))
+    val (after, runs) = graph()
+    assert(runs > 0, "the view over the RDD was not optimized again")
+    assert(after._1.exists(_.ident == "Registered"), after._1.mkString("\n"))
+    assert(after !== before)
+    assert(after === memoFree())
+  }
+
+  /** A repeat call, and a call after redefining `name` with `define`,
+    * give the memo-free output; the view is analyzed again on each call,
+    * so its memo never hits. */
+  private def reparsed(name: String, define: String => Unit): Unit = {
+    fresh()
+    define("SELECT s, k FROM memo_t WHERE k > 1")
+    val (out, _) = graph()
+    assert(out._1.exists(n => n.ident.endsWith(name) && n.tpe == FlowNodeType.View))
+    val (again, runs) = graph()
+    assert(runs > 0, s"$name was not optimized again")
+    assert(again === out)
+    assert(again === memoFree())
+    define("SELECT s FROM memo_u WHERE k < 3")
+    val (redefined, _) = graph()
+    assert(redefined !== out)
+    assert(redefined === memoFree())
+  }
+
+  test("a SQL-created temp view gives the memo-free output, repeated and redefined") {
+    reparsed("memo_s", q => spark.sql(s"CREATE OR REPLACE TEMP VIEW memo_s AS $q"))
+  }
+
+  test("a persistent view gives the memo-free output, repeated and redefined") {
+    try reparsed(persistentView, q => spark.sql(s"CREATE OR REPLACE VIEW $persistentView AS $q"))
+    finally spark.sql(s"DROP VIEW IF EXISTS $persistentView")
   }
 }

@@ -44,10 +44,7 @@ class DatasetMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def optimized(df: DataFrame): LogicalPlan =
     df.asInstanceOf[ClassicDataset[_]].queryExecution.optimizedPlan
 
-  private def kept(df: DataFrame): Option[FlowAnalysis.Graph] = {
-    val plan = optimized(df)
-    plan.getTagValue(SQLFlow.DatasetMemoTag).filter(_.plan eq plan).map(_.graph)
-  }
+  private def kept(df: DataFrame): Option[FlowAnalysis.Graph] = SQLFlow.datasetMemo.get(optimized(df))
 
   /** (output, whether the call reused the kept graph) */
   private def graph(df: DataFrame): ((Seq[FlowNode], Seq[FlowEdge]), Boolean) = {
@@ -57,7 +54,7 @@ class DatasetMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def memoFree(df: DataFrame, contracted: Boolean = false): (Seq[FlowNode], Seq[FlowEdge]) = {
-    optimized(df).unsetTagValue(SQLFlow.DatasetMemoTag)
+    SQLFlow.datasetMemo.remove(optimized(df))
     SQLFlow.datasetGraph(df, contracted)
   }
 
@@ -139,7 +136,8 @@ class DatasetMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val derived = optimized(df).transform { case Filter(_, child) => child }
     val ddf = TestPlanBridge.dfFromPlan(spark, derived)
     // Catalyst copied the memo onto the derived plan
-    assert(optimized(ddf).getTagValue(SQLFlow.DatasetMemoTag).exists(_.plan eq optimized(df)))
+    assert(SQLFlow.datasetMemo.tagged(optimized(ddf)).exists(_._1 eq optimized(df)))
+    assert(kept(ddf).isEmpty)
     val (out, hit) = graph(ddf)
     assert(!hit)
     assert(out !== first)

@@ -44,8 +44,6 @@ class KernelTableSpec extends AnyFunSuite {
     "simhash_md5" -> Sample("simhashmd5", Seq(StringType -> text)),
     "normalize_text" -> Sample("normalizetext", Seq(StringType -> "  Hello, World!!  x ")),
     "winnow_fingerprints" -> Sample("winnowfingerprints", Seq(StringType -> text), Seq(8, 4)),
-    "winnow_fingerprints_rolling" ->
-      Sample("winnow_fingerprints_rolling", Seq(StringType -> text), Seq(8, 4)),
     "deletion_variant_hashes" -> Sample("deletionvarianthashes", Seq(StringType -> "café")),
     "gopher_repetition_stats" -> Sample("gopher_repetition_stats", Seq(StringType -> text)),
     "dup_span_rewrite" -> Sample("dup_span_rewrite", Seq(StringType -> text), Seq(3)),
@@ -117,7 +115,7 @@ class KernelTableSpec extends AnyFunSuite {
     }
   }
 
-  test("SQL registration: the 20 registered scalar kernels plus the 4 top-k aggregates") {
+  test("SQL registration: the 19 registered scalar kernels plus the 4 top-k aggregates") {
     val names = functions.sqlBuilders.map(_._1)
     assert(names.size === names.distinct.size)
     assert(names.toSet === Set(
@@ -125,8 +123,7 @@ class KernelTableSpec extends AnyFunSuite {
       "vec_cosine", "vec_dot", "vec_norm", "int8_vec_dot", "sorted_intersect_count",
       "vec_srp_md5", "normalize_text", "gopher_repetition_stats", "dup_span_rewrite",
       "cdc_chunk_hashes_md5", "zorder_key", "winnow_fingerprints",
-      "winnow_fingerprints_rolling", "deletion_variant_hashes", "pcm_i16le_stats",
-      "pcm_downsample2",
+      "deletion_variant_hashes", "pcm_i16le_stats", "pcm_downsample2",
       "top_k_struct", "top_k_struct_distinct", "top_k_pair", "top_k_pair_distinct"))
   }
 

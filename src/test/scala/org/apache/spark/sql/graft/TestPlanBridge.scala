@@ -18,12 +18,9 @@ object TestPlanBridge {
     ds.asInstanceOf[ClassicDataset[_]].queryExecution.optimizedPlan
 
   /** Whether `SQLFlow.datasetGraph` keeps a lineage memo for `ds`. */
-  def keepsLineage(ds: Dataset[_]): Boolean = {
-    val plan = optimized(ds)
-    plan.getTagValue(SQLFlow.DatasetMemoTag).exists(_.plan eq plan)
-  }
+  def keepsLineage(ds: Dataset[_]): Boolean = SQLFlow.datasetMemo.get(optimized(ds)).isDefined
 
   /** Drop `ds`'s lineage memo, so the next `SQLFlow.datasetGraph` call
     * walks the plan again. */
-  def forgetLineage(ds: Dataset[_]): Unit = optimized(ds).unsetTagValue(SQLFlow.DatasetMemoTag)
+  def forgetLineage(ds: Dataset[_]): Unit = SQLFlow.datasetMemo.remove(optimized(ds))
 }

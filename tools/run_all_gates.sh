@@ -32,9 +32,15 @@ grep '\[verify\]' /tmp/gate_verify.log || true
 python3 tools/check_oracle.py "$SF" /tmp/gate_verify
 
 echo "=== 3/5 parallelism independence (5 vs 16 threads) ==="
-rm -rf /tmp/gate_det5 /tmp/gate_det16
-SPARK_GRAFT_CPUS=5  sbt -batch "runMain graft.Verify $SF /tmp/gate_det5"  > /dev/null 2>&1
-SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF /tmp/gate_det16" > /dev/null 2>&1
+# each run logs to its own file, as gate 2 does: a failing run prints its
+# log tail instead of ending the script with no message, and a run's
+# per-entry [verify] failures are printed either way
+for n in 5 16; do
+  rm -rf /tmp/gate_det$n
+  SPARK_GRAFT_CPUS=$n sbt -batch "runMain graft.Verify $SF /tmp/gate_det$n" > /tmp/gate_det$n.log 2>&1 \
+    || { echo "Verify with $n threads FAILED (full log: /tmp/gate_det$n.log):"; tail -20 /tmp/gate_det$n.log; exit 1; }
+  grep '\[verify\]' /tmp/gate_det$n.log || true
+done
 python3 tools/check_determinism.py /tmp/gate_det5 /tmp/gate_det16 | tail -2
 
 echo "=== 4/5 Python façade ==="
