@@ -43,8 +43,9 @@ object FlowAnalysis {
     * from the leaf a node was made of (a refreshed table reports new sizes
     * through the same leaf), as a new analysis would read them; callers may
     * mutate them. `FlowNode` and `FlowEdge` objects are built by [[nodes]]
-    * and [[edges]] only. */
-  final class Graph private[FlowAnalysis] (
+    * and [[edges]] only. A graph made by [[merge]] has no root (-1) and no
+    * bridges: nothing contracts it. */
+  final class Graph private[graft] (
       private[FlowAnalysis] val uids: Array[String],
       private[FlowAnalysis] val idents: Array[String],
       private[FlowAnalysis] val attrs: Array[Seq[String]],
@@ -72,6 +73,11 @@ object FlowAnalysis {
     /** This graph contracted, made on first use and kept with the graph, so
       * a lineage memo contracts once. */
     private[graft] lazy val contracted: Graph = contractGraph(this)
+
+    /** This graph with repeated uids and edges dropped, as [[merge]] drops
+      * them; `this` when nothing repeats. Made on first use and kept with
+      * the graph, so a one-view catalog hit does no merge work. */
+    private[graft] lazy val deduped: Graph = mergeGraphs(Seq(this))
   }
 
   /** Shared `Some`s for the column slots of built edges. */
@@ -98,7 +104,14 @@ object FlowAnalysis {
     /** Node index of every stable uid: tables, views, checkpoints. */
     val stable = mutable.HashMap[String, Int]()
 
-    def nextId(name: String): String = f"${name}_${counter.next()}%07x"
+    /** `name`, `_` and the next uid number in hex, zero-padded to 7 digits. */
+    def nextId(name: String): String = {
+      val hex = Integer.toHexString(counter.next())
+      val sb = new java.lang.StringBuilder(name.length + 8 + hex.length).append(name).append('_')
+      var pad = 7 - hex.length
+      while (pad > 0) { sb.append('0'); pad -= 1 }
+      sb.append(hex).toString
+    }
 
     /** Appends a node and returns its index; `leaf` is the leaf whose
       * statistics become the node's props. */
@@ -215,17 +228,15 @@ object FlowAnalysis {
     val inv = new Array[Array[Int]](attrs.length)
     var any = false
     attrs.indices.foreach { n =>
-      if (types(n) == FlowNodeType.Plan && attrs(n).length > 1) {
+      if (types(n) == FlowNodeType.Plan && !isSorted(attrs(n))) {
         val order = attrs(n).zipWithIndex.sortBy(_._1).map(_._2)
-        if (!order.indices.forall(i => order(i) == i)) {
-          val p = new Array[Int](order.length)
-          order.zipWithIndex.foreach { case (old, nu) => p(old) = nu }
-          val sorted = new Array[String](order.length)
-          attrs(n).zipWithIndex.foreach { case (a, i) => sorted(p(i)) = a }
-          attrs(n) = ArraySeq.unsafeWrapArray(sorted)
-          inv(n) = p
-          any = true
-        }
+        val p = new Array[Int](order.length)
+        order.zipWithIndex.foreach { case (old, nu) => p(old) = nu }
+        val sorted = new Array[String](order.length)
+        attrs(n).zipWithIndex.foreach { case (a, i) => sorted(p(i)) = a }
+        attrs(n) = ArraySeq.unsafeWrapArray(sorted)
+        inv(n) = p
+        any = true
       }
     }
     // both arrays hold (node, column) pairs at even offsets
@@ -235,6 +246,13 @@ object FlowAnalysis {
         if (p != null && data(k + 1) >= 0) data(k + 1) = p(data(k + 1))
       }
     }
+  }
+
+  /** Whether `names` are in the order a stable sort would leave them in. */
+  private def isSorted(names: Seq[String]): Boolean = {
+    var k = 1
+    while (k < names.length && names(k - 1).compareTo(names(k)) <= 0) k += 1
+    k >= names.length
   }
 
   /** The DDL of `plan`'s output, built without forcing the plan's own
@@ -628,47 +646,58 @@ object FlowAnalysis {
   private val KeepTypes: Set[FlowNodeType] =
     Set(FlowNodeType.Table, FlowNodeType.View, FlowNodeType.LeafPlan)
 
-  /** Reachability over points: node n's node-level point is `base(n)`, its
-    * column c is `base(n) + 1 + c`; arcs are kept in CSR form. */
-  private def contractGraph(g: Graph): Graph = {
-    val n = g.uids.length
-    val root = g.root
-    // the root may itself be a View node — never treat it as a source
-    val isLeaf = Array.tabulate(n)(i => KeepTypes(g.types(i)) && i != root)
-
-    // a node's points cover its attributes and every column an edge names
-    val width = Array.tabulate(n)(i => g.attrs(i).length)
-    for (data <- Seq(g.edgeData, g.bridgeData); k <- 0 until data.length by 2)
+  /** The points of `g`'s reachability walks: node n's node-level point is
+    * `base(n)`, its column c is `base(n) + 1 + c`. The arcs, one per edge
+    * and, with `bridges`, one per bridge pair each way, are kept in CSR
+    * form: the targets of point p are `target(start(p) until start(p + 1))`. */
+  private final class Points(g: Graph, bridges: Boolean) {
+    private val n = g.uids.length
+    private val arcSources = if (bridges) Seq(g.edgeData, g.bridgeData) else Seq(g.edgeData)
+    // a node's points cover its attributes and every column an arc names
+    private val width = Array.tabulate(n)(i => g.attrs(i).length)
+    for (data <- arcSources; k <- 0 until data.length by 2)
       width(data(k)) = math.max(width(data(k)), data(k + 1) + 1)
     val base = new Array[Int](n + 1)
     (0 until n).foreach(i => base(i + 1) = base(i) + 1 + width(i))
     val pointNode = new Array[Int](base(n))
     (0 until n).foreach(i => java.util.Arrays.fill(pointNode, base(i), base(i + 1), i))
     def point(node: Int, col: Int): Int = base(node) + 1 + col
+    def size: Int = base(n)
 
-    // arcs: every edge, and every bridge both ways
-    val arcs = mutable.ArrayBuilder.make[Int]
-    for (k <- 0 until g.edgeData.length by 4) {
-      arcs += point(g.edgeData(k), g.edgeData(k + 1))
-      arcs += point(g.edgeData(k + 2), g.edgeData(k + 3))
+    private val arcData = {
+      val arcs = mutable.ArrayBuilder.make[Int]
+      for (k <- 0 until g.edgeData.length by 4) {
+        arcs += point(g.edgeData(k), g.edgeData(k + 1))
+        arcs += point(g.edgeData(k + 2), g.edgeData(k + 3))
+      }
+      if (bridges) for (k <- 0 until g.bridgeData.length by 4) {
+        val a = point(g.bridgeData(k), g.bridgeData(k + 1))
+        val b = point(g.bridgeData(k + 2), g.bridgeData(k + 3))
+        arcs += a; arcs += b; arcs += b; arcs += a
+      }
+      arcs.result()
     }
-    for (k <- 0 until g.bridgeData.length by 4) {
-      val a = point(g.bridgeData(k), g.bridgeData(k + 1))
-      val b = point(g.bridgeData(k + 2), g.bridgeData(k + 3))
-      arcs += a; arcs += b; arcs += b; arcs += a
-    }
-    val arcData = arcs.result()
-    val start = new Array[Int](base(n) + 1)
+    val start = new Array[Int](size + 1)
     for (k <- 0 until arcData.length by 2) start(arcData(k) + 1) += 1
-    (0 until base(n)).foreach(p => start(p + 1) += start(p))
+    (0 until size).foreach(p => start(p + 1) += start(p))
     val target = new Array[Int](arcData.length / 2)
-    val fill = start.clone()
+    private val fill = start.clone()
     for (k <- 0 until arcData.length by 2) {
       target(fill(arcData(k))) = arcData(k + 1)
       fill(arcData(k)) += 1
     }
+  }
 
-    val seen = new Array[Int](base(n))
+  /** Contraction: reachability over [[Points]], bridges included. */
+  private def contractGraph(g: Graph): Graph = {
+    val n = g.uids.length
+    val root = g.root
+    // the root may itself be a View node — never treat it as a source
+    val isLeaf = Array.tabulate(n)(i => KeepTypes(g.types(i)) && i != root)
+    val pts = new Points(g, bridges = true)
+    import pts.{base, point, pointNode, start, target}
+
+    val seen = new Array[Int](pts.size)
     var pass = 0
     var stack = new Array[Int](64)
     var top = 0
@@ -720,6 +749,142 @@ object FlowAnalysis {
     new Graph(kept.map(g.uids), kept.map(g.idents), kept.map(g.attrs), kept.map(g.ddls),
       kept.map(g.types), kept.map(g.cached), kept.map(g.statLeaves), kept.map(g.leafHashes),
       edges.result(), Array.emptyIntArray, newIndex(root))
+  }
+
+  /** The idents of the table, view and query nodes of `g` that its edges
+    * lead to, transitively, from the nodes whose ident `isStart` accepts,
+    * from the first column `isColumn` accepts when it is given; distinct
+    * and sorted, the start nodes left out. */
+  private[graft] def impacted(g: Graph, isStart: String => Boolean,
+      isColumn: Option[String => Boolean]): Seq[String] = {
+    val starts = g.idents.indices.filter(i => isStart(g.idents(i)))
+    val points = isColumn match {
+      case None => starts.map((_, -1))
+      case Some(m) => starts.map(n => (n, g.attrs(n).indexWhere(m))).filter(_._2 >= 0)
+    }
+    val hit = reached(g, points)
+    starts.foreach(hit(_) = false)
+    g.idents.indices.filter { i =>
+      hit(i) && g.types(i) != FlowNodeType.Plan && g.types(i) != FlowNodeType.LeafPlan
+    }.map(g.idents).distinct.sorted
+  }
+
+  /** Which nodes of `g` a walk over its edges (not its bridges) reaches
+    * from `starts`, each a (node, column) pair with column -1 for a
+    * node-level start; the starts' own nodes count as reached. A node-level
+    * point follows every edge leaving its node; a column point follows its
+    * own column's edges and the node-level ones, which make no column
+    * claim. */
+  private def reached(g: Graph, starts: Seq[(Int, Int)]): Array[Boolean] = {
+    val pts = new Points(g, bridges = false)
+    import pts.{base, pointNode, start, target}
+    val seen = new Array[Boolean](pts.size)
+    var stack = new Array[Int](math.max(16, starts.size))
+    var top = 0
+    def visit(p: Int): Unit = if (!seen(p)) {
+      seen(p) = true
+      if (top == stack.length) stack = java.util.Arrays.copyOf(stack, 2 * top)
+      stack(top) = p
+      top += 1
+    }
+    def follow(from: Int, until: Int): Unit = {
+      var k = start(from)
+      while (k < start(until)) { visit(target(k)); k += 1 }
+    }
+    starts.foreach { case (node, col) => visit(pts.point(node, col)) }
+    while (top > 0) {
+      top -= 1
+      val p = stack(top)
+      val node = pointNode(p)
+      if (p == base(node)) follow(p, base(node + 1))
+      else { follow(p, p + 1); follow(base(node), base(node) + 1) }
+    }
+    val hit = new Array[Boolean](g.uids.length)
+    (0 until pts.size).foreach(p => if (seen(p)) hit(pointNode(p)) = true)
+    hit
+  }
+
+  /** Several graphs as one: nodes dedupe by uid, the first occurrence kept
+    * with `cached` ORed in over all of them; edges dedupe, in
+    * first-occurrence order. One graph is deduped once and keeps the
+    * result ([[Graph.deduped]]). */
+  private[graft] def merge(parts: Seq[Graph]): Graph =
+    if (parts.lengthCompare(1) == 0) parts.head.deduped else mergeGraphs(parts)
+
+  /** [[merge]] through two open-addressed tables of Ints: node indices
+    * hashed on their uid, and edge indices hashed on their four Ints, so no
+    * key is boxed and no `FlowNode` or `FlowEdge` is built. Returns the
+    * only part itself when nothing in it repeats. */
+  private def mergeGraphs(parts: Seq[Graph]): Graph = {
+    val nodeCap = parts.iterator.map(_.uids.length).sum
+    val edgeCap = parts.iterator.map(_.edgeData.length / 4).sum
+    def tableMask(count: Int): Int = 2 * Integer.highestOneBit(math.max(2, 2 * count)) - 1
+    def spread(h: Int): Int = { val x = h * 0x9e3779b9; x ^ (x >>> 16) }
+
+    val uids = new Array[String](nodeCap)
+    val idents = new Array[String](nodeCap)
+    val attrs = new Array[Seq[String]](nodeCap)
+    val ddls = new Array[String](nodeCap)
+    val types = new Array[FlowNodeType](nodeCap)
+    val cached = new Array[Boolean](nodeCap)
+    val statLeaves = new Array[LeafNode](nodeCap)
+    val leafHashes = new Array[Int](nodeCap)
+    val edgeData = new Array[Int](4 * edgeCap)
+    // slots hold an index + 1; 0 is an empty slot
+    val nodeMask = tableMask(nodeCap)
+    val nodeSlots = new Array[Int](nodeMask + 1)
+    val edgeMask = tableMask(edgeCap)
+    val edgeSlots = new Array[Int](edgeMask + 1)
+    var nodes = 0
+    var edges = 0
+
+    parts.foreach { g =>
+      val remap = new Array[Int](g.uids.length)
+      var i = 0
+      while (i < g.uids.length) {
+        val uid = g.uids(i)
+        var h = spread(uid.hashCode) & nodeMask
+        while (nodeSlots(h) != 0 && uids(nodeSlots(h) - 1) != uid) h = (h + 1) & nodeMask
+        if (nodeSlots(h) == 0) {
+          uids(nodes) = uid; idents(nodes) = g.idents(i); attrs(nodes) = g.attrs(i)
+          ddls(nodes) = g.ddls(i); types(nodes) = g.types(i); cached(nodes) = g.cached(i)
+          statLeaves(nodes) = g.statLeaves(i); leafHashes(nodes) = g.leafHashes(i)
+          nodes += 1
+          nodeSlots(h) = nodes
+        } else if (g.cached(i)) cached(nodeSlots(h) - 1) = true
+        remap(i) = nodeSlots(h) - 1
+        i += 1
+      }
+      var k = 0
+      while (k < g.edgeData.length) {
+        val a = remap(g.edgeData(k))
+        val b = g.edgeData(k + 1)
+        val c = remap(g.edgeData(k + 2))
+        val d = g.edgeData(k + 3)
+        var h = spread(((a * 31 + b) * 31 + c) * 31 + d) & edgeMask
+        def same(e: Int): Boolean = {
+          val o = 4 * (e - 1)
+          edgeData(o) == a && edgeData(o + 1) == b && edgeData(o + 2) == c && edgeData(o + 3) == d
+        }
+        while (edgeSlots(h) != 0 && !same(edgeSlots(h))) h = (h + 1) & edgeMask
+        if (edgeSlots(h) == 0) {
+          val o = 4 * edges
+          edgeData(o) = a; edgeData(o + 1) = b; edgeData(o + 2) = c; edgeData(o + 3) = d
+          edges += 1
+          edgeSlots(h) = edges
+        }
+        k += 4
+      }
+    }
+
+    if (parts.lengthCompare(1) == 0 && nodes == nodeCap && edges == edgeCap) parts.head
+    else {
+      def trim[T <: AnyRef](a: Array[T]): Array[T] = java.util.Arrays.copyOf[T](a, nodes)
+      new Graph(trim(uids), trim(idents), trim(attrs), trim(ddls), trim(types),
+        java.util.Arrays.copyOf(cached, nodes), trim(statLeaves),
+        java.util.Arrays.copyOf(leafHashes, nodes), java.util.Arrays.copyOf(edgeData, 4 * edges),
+        Array.emptyIntArray, -1)
+    }
   }
 }
 

@@ -93,6 +93,12 @@ object SQLFlow {
     * every call, so their memos die with the plan and never hit. */
   def catalogGraph(spark: SparkSession, contracted: Boolean = false)
       : (Seq[FlowNode], Seq[FlowEdge]) = {
+    val g = catalogMerged(spark, contracted)
+    (g.nodes, g.edges)
+  }
+
+  /** The per-view graphs of [[catalogGraph]], merged into one packed graph. */
+  private def catalogMerged(spark: SparkSession, contracted: Boolean): FlowAnalysis.Graph = {
     val session = spark.asInstanceOf[ClassicSession]
     val catalog = session.sessionState.catalog
     val cacheManager = session.sharedState.cacheManager
@@ -102,9 +108,10 @@ object SQLFlow {
     val currentDb = catalog.getCurrentDatabase
     val persistent = for {
       db <- catalog.listDatabases()
-      // listViews appends the local temp views, which carry no database;
-      // they are gathered below
-      ident <- catalog.listViews(db, "*") if ident.database.isDefined
+      // the external catalog's own listing: the session catalog's appends
+      // the local temp views, which are gathered below
+      view <- catalog.externalCatalog.listViews(db, "*")
+      ident = TableIdentifier(view, Some(db))
       meta <- scala.util.Try(catalog.getTableMetadata(ident)).toOption.toSeq
       text <- meta.viewText.toSeq
       plan <- scala.util.Try {
@@ -150,16 +157,27 @@ object SQLFlow {
     }
     val all: Seq[(String, LogicalPlan)] = persistent ++ temps ++ globals
 
-    // 2. semanticHash → view name, for subplan-to-view substitution
+    // 2. twins: views registered from one DataFrame store one plan
+    //    object. Every twin but the last-sorted is cut whole at the
+    //    last-sorted one, as the reference's last-wins hash map cuts them
+    val lastTwin = new java.util.IdentityHashMap[LogicalPlan, Integer]()
+    all.indices.foreach(i => lastTwin.put(all(i)._2, i))
+    def twinOf(i: Int): Option[String] = {
+      val last = lastTwin.get(all(i)._2).intValue
+      if (last != i) Some(all(last)._1) else None
+    }
+
+    // 3. semanticHash → view name, for subplan-to-view substitution
     //    (reference: SQLFlow.scala:94-96,150-154). A hash two views share
-    //    names neither: cutting to either one would be a guess. With one
+    //    names neither, cutting to either one would be a guess, unless
+    //    only twins share it: it names the last-sorted twin. With one
     //    view there is nothing to substitute, so nothing is hashed
     val subplanHashes: IndexedSeq[java.util.IdentityHashMap[LogicalPlan, Integer]] =
       if (all.size < 2) IndexedSeq.empty
       else all.toIndexedSeq.map { case (_, p) => hashesOf(p) }
     val hashToView: Map[Int, String] = subplanHashes.indices
       .groupBy(i => subplanHashes(i).get(all(i)._2).intValue)
-      .collect { case (h, Seq(i)) => h -> all(i)._1 }
+      .collect { case (h, is) if is.forall(i => all(i)._2 eq all(is.head)._2) => h -> all(is.last)._1 }
 
     // trivial subplans (bare scans / alias-only wrappers) are excluded from
     // substitution — two views that are both just "scan t" must not collapse
@@ -191,16 +209,18 @@ object SQLFlow {
       def otherView(p: LogicalPlan): Option[String] =
         if (hashToView.isEmpty) None
         else Option(subplanHashes(i).get(p)).flatMap(h => hashToView.get(h.intValue)).filter(_ != name)
-      val substituted = analyzed.transformDown {
-        case s @ SubqueryAlias(ident, _)
-            if viewNames.contains(ident.name) && ident.name != name =>
-          ViewRef(ident.name, s.output, isTemp = true)
-        case v: View
-            if viewNames.contains(v.desc.identifier.table) && v.desc.identifier.table != name =>
-          ViewRef(v.desc.identifier.table, v.output, isTemp = v.isTempView)
-        case p if (p ne analyzed) && !trivial(p) && otherView(p).isDefined =>
-          ViewRef(otherView(p).get, p.output, isTemp = true)
-      }
+      val twin = twinOf(i)
+      val substituted = twin.map(ViewRef(_, analyzed.output, isTemp = true)).getOrElse(
+        analyzed.transformDown {
+          case s @ SubqueryAlias(ident, _)
+              if viewNames.contains(ident.name) && ident.name != name =>
+            ViewRef(ident.name, s.output, isTemp = true)
+          case v: View
+              if viewNames.contains(v.desc.identifier.table) && v.desc.identifier.table != name =>
+            ViewRef(v.desc.identifier.table, v.output, isTemp = v.isTempView)
+          case p if (p ne analyzed) && otherView(p).isDefined && !trivial(p) =>
+            ViewRef(otherView(p).get, p.output, isTemp = true)
+        })
       // cached-subtree wrap as a MANUAL one-shot recursion: a transformDown
       // rule returning CachedMarker(p) would re-match its own child p and
       // recurse forever (the lookup is checked on the pre-wrap plan)
@@ -209,10 +229,12 @@ object SQLFlow {
         val mapped = p.mapChildren(markCached)
         if (isC) CachedMarker(mapped) else mapped
       }
+      // twins share the plan the memo sits on; only the last-sorted one,
+      // the one that walks the plan, keeps its graph there
       val emptyCache = cacheManager.isEmpty
       val input = markCached(substituted)
       val key = ViewKey(name, counter.value, state, confs, extraRules, input)
-      val hit = if (emptyCache) viewMemo.get(analyzed).filter(_._1.sameAs(key)) else None
+      val hit = if (emptyCache && twin.isEmpty) viewMemo.get(analyzed).filter(_._1.sameAs(key)) else None
       val g = hit match {
         case Some((_, counterEnd, g)) =>
           counter.value = counterEnd
@@ -220,12 +242,12 @@ object SQLFlow {
         case None =>
           val optimized = session.sessionState.optimizer.execute(input)
           val g = FlowAnalysis.analyze(optimized, name, FlowNodeType.View, cachedFn, counter)
-          if (keeps(session, emptyCache, input)) viewMemo.put(analyzed, (key, counter.value, g))
+          if (twin.isEmpty && keeps(session, emptyCache, input)) viewMemo.put(analyzed, (key, counter.value, g))
           g
       }
       if (contracted) g.contracted else g
     }
-    merge(graphs.map(g => (g.nodes, g.edges)))
+    FlowAnalysis.merge(graphs)
   }
 
   /** The semantic hash of every node of a view's analyzed plan, by node.
@@ -242,20 +264,6 @@ object SQLFlow {
     val byNode = new java.util.IdentityHashMap[LogicalPlan, Integer]()
     preorder(plan).zip(hashes).foreach { case (n, h) => byNode.put(n, h) }
     byNode
-  }
-
-  /** Merge per-view graphs: nodes dedupe by uid (cached flag ORed). */
-  def merge(parts: Seq[(Seq[FlowNode], Seq[FlowEdge])]): (Seq[FlowNode], Seq[FlowEdge]) = {
-    val byId = mutable.LinkedHashMap[String, FlowNode]()
-    parts.flatMap(_._1).foreach { n =>
-      byId.get(n.uniqueId) match {
-        case Some(prev) => if (n.isCached && !prev.isCached) byId(n.uniqueId) = prev.copy(isCached = true)
-        case None => byId(n.uniqueId) = n
-      }
-    }
-    val edges = mutable.LinkedHashSet[FlowEdge]()
-    parts.flatMap(_._2).foreach(edges += _)
-    (byId.values.toSeq, edges.toSeq)
   }
 
   /** With nothing cached the answer is false for every plan; skipping the
@@ -304,46 +312,13 @@ object SQLFlow {
     * only a genuinely unknown ident returns the empty list. */
   def impactedBy(spark: SparkSession, name: String, column: Option[String] = None,
       contracted: Boolean = false): Seq[String] = {
-    val (nodes, edges) = catalogGraph(spark, contracted)
-    val nodeById = nodes.map(n => n.uniqueId -> n).toMap
     // resolve name/column with the session's resolver (case-insensitive
     // unless spark.sql.caseSensitive): a case-mismatched but valid ident
     // must not silently read as "no downstream impact" — this API exists
     // for schema-change safety (r10 advice)
     val resolver = spark.sessionState.conf.resolver
-    val starts = nodes.filter(n => resolver(n.ident, name))
-    // slot = (nodeId, Some(colIdx)) or (nodeId, None) = node-level
-    type Slot = (String, Option[Int])
-    val startSlots: Seq[Slot] = column match {
-      case None => starts.map(n => (n.uniqueId, None))
-      case Some(c) => starts.flatMap { n =>
-        val i = n.attributes.indexWhere(a => resolver(a, c))
-        if (i >= 0) Some((n.uniqueId, Some(i))) else None
-      }
-    }
-    val bySrc = edges.groupBy(_.fromId)
-    val visited = mutable.HashSet[Slot](startSlots: _*)
-    val impacted = mutable.SortedSet[String]()
-    var frontier: Seq[Slot] = startSlots
-    while (frontier.nonEmpty) {
-      frontier = frontier.flatMap { case (id, idx) =>
-        bySrc.getOrElse(id, Nil).collect {
-          // a node-level start (or slot) follows every outgoing edge; a
-          // column slot follows its own column's edges plus node-level
-          // edges (fromIdx None): those make no column claim
-          case e if idx.isEmpty || e.fromIdx.isEmpty || e.fromIdx == idx =>
-            (e.toId, e.toIdx)
-        }
-      }.distinct.filterNot(visited.contains)
-      frontier.foreach { s =>
-        visited += s
-        nodeById.get(s._1).foreach { n =>
-          if (n.tpe != FlowNodeType.Plan && n.tpe != FlowNodeType.LeafPlan &&
-            !starts.exists(_.uniqueId == n.uniqueId)) impacted += n.ident
-        }
-      }
-    }
-    impacted.toSeq
+    FlowAnalysis.impacted(catalogMerged(spark, contracted), resolver(_, name),
+      column.map(c => resolver(_, c)))
   }
 
   /** The lineage graph as (nodes, edges) DataFrames — SQL-queryable. */

@@ -86,42 +86,53 @@ private[graft] object SinkIO {
   * are columns; edges target row ports so column-level lineage is visible.
   * Cached nodes are light blue (reference: basicSinks.scala:87-212). */
 case class GraphVizSink() extends FlowBatchSink with FlowStreamSink with FlowFormat {
+  import GraphVizSink._
   import SinkIO._
 
-  /** One pass over one builder; user text (idents, column names) is
-    * copied as given, escaped for the HTML-like labels only. */
+  /** One pass over one builder, sized from the strings' lengths; user text
+    * (idents, column names) is copied as given, escaped for the HTML-like
+    * labels only. */
   override def toGraphString(nodes: Seq[FlowNode], edges: Seq[FlowEdge]): String = {
-    val sb = new java.lang.StringBuilder(256 + 128 * nodes.size + 48 * edges.size)
-    sb.append("digraph {\n")
-      .append("  graph [pad=\"0.5\" nodesep=\"0.5\" ranksep=\"1\" fontname=\"Helvetica\" rankdir=LR];\n")
-      .append("  node [shape=plaintext]\n\n")
-    nodes.iterator.zipWithIndex.foreach { case (n, k) =>
-      val color = if (n.isCached) "lightblue" else
-        (n.tpe match {
-          case FlowNodeType.Table => "black"
-          case FlowNodeType.View => "blue"
-          case FlowNodeType.Query => "lightgray"
-          case _ => "lightgray"
-        })
-      if (k > 0) sb.append('\n')
-      sb.append('"').append(n.uniqueId).append("\" [color=\"").append(color).append("\" label=<\n")
-        .append("<table>\n")
-        .append("  <tr><td bgcolor=\"").append(color).append("\"><i>").append(escape(n.ident))
-        .append("</i></td></tr>\n")
-      n.attributes.iterator.zipWithIndex.foreach { case (a, i) =>
-        if (i > 0) sb.append('\n')
-        sb.append("<tr><td port=\"").append(i).append("\">").append(escape(a)).append("</td></tr>")
+    val sb = new java.lang.StringBuilder(renderedLength(nodes, edges))
+    sb.append(Header)
+    var sep = "\""
+    val ns = nodes.iterator
+    while (ns.hasNext) {
+      val n = ns.next()
+      sb.append(sep).append(n.uniqueId).append(head(n))
+      sep = "\n\""
+      appendEscaped(sb, n.ident)
+      sb.append("</i></td></tr>\n")
+      var i = 0
+      val as = n.attributes.iterator
+      while (as.hasNext) {
+        if (i == 0) sb.append(FirstRow)
+        else if (i < Small) sb.append(Row(i))
+        else sb.append("\n<tr><td port=\"").append(i).append("\">")
+        appendEscaped(sb, as.next())
+        sb.append("</td></tr>")
+        i += 1
       }
       sb.append("\n</table>>];")
     }
     sb.append('\n')
-    edges.iterator.zipWithIndex.foreach { case (e, k) =>
-      if (k > 0) sb.append('\n')
-      sb.append('"').append(e.fromId).append('"')
-      e.fromIdx.foreach(i => sb.append(':').append(i))
-      sb.append(" -> \"").append(e.toId).append('"')
-      e.toIdx.foreach(i => sb.append(':').append(i))
-      sb.append(';')
+    sep = "\""
+    val es = edges.iterator
+    while (es.hasNext) {
+      val e = es.next()
+      sb.append(sep).append(e.fromId)
+      sep = "\n\""
+      if (e.fromIdx.isEmpty) sb.append("\" -> \"")
+      else {
+        val i = e.fromIdx.get
+        if (i >= 0 && i < Small) sb.append(FromCol(i)) else sb.append("\":").append(i).append(" -> \"")
+      }
+      sb.append(e.toId)
+      if (e.toIdx.isEmpty) sb.append("\";")
+      else {
+        val j = e.toIdx.get
+        if (j >= 0 && j < Small) sb.append(ToCol(j)) else sb.append("\":").append(j).append(';')
+      }
     }
     sb.append("\n}\n").toString
   }
@@ -156,6 +167,86 @@ case class GraphVizSink() extends FlowBatchSink with FlowStreamSink with FlowFor
     }
     val prefix = options.getOrElse("filenamePrefix", "sqlflow")
     writeFile(dir, s"$prefix.dot", toGraphString(nodes, edges))
+  }
+}
+
+object GraphVizSink {
+  private val Header = "digraph {\n" +
+    "  graph [pad=\"0.5\" nodesep=\"0.5\" ranksep=\"1\" fontname=\"Helvetica\" rankdir=LR];\n" +
+    "  node [shape=plaintext]\n\n"
+
+  /** A node's text between its uid and its ident, by colour. */
+  private def nodeHead(color: String): String =
+    "\" [color=\"" + color + "\" label=<\n<table>\n  <tr><td bgcolor=\"" + color + "\"><i>"
+  private val CachedHead = nodeHead("lightblue")
+  private val TableHead = nodeHead("black")
+  private val ViewHead = nodeHead("blue")
+  private val OtherHead = nodeHead("lightgray")
+
+  private def head(n: FlowNode): String =
+    if (n.isCached) CachedHead else n.tpe match {
+      case FlowNodeType.Table => TableHead
+      case FlowNodeType.View => ViewHead
+      case _ => OtherHead
+    }
+
+  /** Text around column numbers below `Small`, shared by every render: an
+    * attribute row's start, an edge's source column up to its target's
+    * uid, and an edge's target column to its end. */
+  private val Small = 1024
+  private val FirstRow = "<tr><td port=\"0\">"
+  private val Row = Array.tabulate(Small)(i => "\n<tr><td port=\"" + i + "\">")
+  private val FromCol = Array.tabulate(Small)(i => "\":" + i + " -> \"")
+  private val ToCol = Array.tabulate(Small)(i => "\":" + i + ";")
+
+  /** Bit c is set for each character c that labels escape: `"`, `&`, `<`, `>`. */
+  private val Escaped: Long = (1L << '"') | (1L << '&') | (1L << '<') | (1L << '>')
+
+  private def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
+    var i = 0
+    while (i < s.length && (s.charAt(i) >= 64 || ((Escaped >>> s.charAt(i)) & 1L) == 0)) i += 1
+    if (i == s.length) sb.append(s)
+    else {
+      sb.append(s, 0, i)
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '&' => sb.append("&amp;")
+          case '<' => sb.append("&lt;")
+          case '>' => sb.append("&gt;")
+          case '"' => sb.append("&quot;")
+          case c => sb.append(c)
+        }
+        i += 1
+      }
+    }
+  }
+
+  /** The rendered length but for escapes, or more: a builder of this
+    * capacity grows only for labels that hold escaped characters. */
+  private def renderedLength(nodes: Seq[FlowNode], edges: Seq[FlowEdge]): Int = {
+    val rowEnd = "</td></tr>".length
+    val wide = 10 // an Int's characters beyond the one of column 0
+    var len = Header.length + 1 + "\n}\n".length
+    val ns = nodes.iterator
+    while (ns.hasNext) {
+      val n = ns.next()
+      len += 2 + n.uniqueId.length + head(n).length + n.ident.length +
+        "</i></td></tr>\n".length + "\n</table>>];".length
+      var i = 0
+      val as = n.attributes.iterator
+      while (as.hasNext) {
+        len += (if (i < Small) Row(i).length else Row(0).length + wide) + as.next().length + rowEnd
+        i += 1
+      }
+    }
+    def col(idx: Option[Int], none: Int, frags: Array[String]): Int =
+      if (idx.isEmpty) none else if (idx.get >= 0 && idx.get < Small) frags(idx.get).length else frags(0).length + wide
+    val es = edges.iterator
+    while (es.hasNext) {
+      val e = es.next()
+      len += 2 + e.fromId.length + col(e.fromIdx, 6, FromCol) + e.toId.length + col(e.toIdx, 2, ToCol)
+    }
+    len
   }
 }
 

@@ -257,6 +257,29 @@ class FlowAnalysisSpec extends AnyFunSuite {
     } finally (0 to n).foreach(i => spark.catalog.dropTempView(s"chain_$i"))
   }
 
+  test("impactedBy: a 300-view chain with a fan-out at its end, whole and by column") {
+    val n = 300
+    spark.read.parquet(s"$sf/nation.parquet").createOrReplaceTempView("long_0")
+    (1 to n).foreach { i =>
+      spark.sql(s"SELECT n_nationkey, n_name, n_regionkey FROM long_${i - 1} WHERE n_nationkey >= 0")
+        .createOrReplaceTempView(s"long_$i")
+    }
+    spark.sql(s"SELECT n_name FROM long_$n").createOrReplaceTempView("long_names")
+    spark.sql(s"SELECT upper(n_name) AS u, n_nationkey FROM long_$n").createOrReplaceTempView("long_upper")
+    spark.sql(s"SELECT n_regionkey, count(*) AS c FROM long_$n GROUP BY n_regionkey")
+      .createOrReplaceTempView("long_regions")
+    val views = (0 to n).map(i => s"long_$i") ++ Seq("long_names", "long_upper", "long_regions")
+    try {
+      val chain = (1 to n).map(i => s"long_$i")
+      for (contracted <- Seq(false, true)) {
+        assert(SQLFlow.impactedBy(spark, "long_0", contracted = contracted) ===
+          (chain ++ Seq("long_names", "long_regions", "long_upper")).sorted, s"contracted=$contracted")
+        assert(SQLFlow.impactedBy(spark, "long_0", Some("n_name"), contracted) ===
+          (chain ++ Seq("long_names", "long_upper")).sorted, s"contracted=$contracted")
+      }
+    } finally views.foreach(spark.catalog.dropTempView)
+  }
+
   /** (view, view) pairs where the first feeds the second with no other
     * view in between, over the views whose ident starts with `prefix`. */
   private def viewHops(nodes: Seq[FlowNode], edges: Seq[FlowEdge],
@@ -425,6 +448,54 @@ class FlowAnalysisSpec extends AnyFunSuite {
       "}",
       "").mkString("\n")
     assert(GraphVizSink().toGraphString(nodes, edges) === expected)
+
+    // every colour, escapes in an ident and in an attribute, a node-level
+    // end on each side and column numbers past the shared small-int table,
+    // rendered from Lists
+    val wide = List.tabulate(1026)(i => s"c$i")
+    val more = List(
+      FlowNode("s", "a&b\"c>d", List("x&y", "q\"r>s"), "", FlowNodeType.Table),
+      FlowNode("w", "w", List("k"), "", FlowNodeType.View),
+      FlowNode("p_1", "Project", wide, "", FlowNodeType.Plan),
+      FlowNode("r_2", "Range", Nil, "", FlowNodeType.LeafPlan))
+    val moreEdges = List(
+      FlowEdge("s", Some(1), "p_1", Some(1025)),
+      FlowEdge("s", Some(1024), "p_1", None),
+      FlowEdge("r_2", None, "w", Some(4097)),
+      FlowEdge("p_1", Some(0), "w", Some(0)))
+    val moreExpected = (Seq(
+      "digraph {",
+      """  graph [pad="0.5" nodesep="0.5" ranksep="1" fontname="Helvetica" rankdir=LR];""",
+      "  node [shape=plaintext]",
+      "",
+      """"s" [color="black" label=<""",
+      "<table>",
+      """  <tr><td bgcolor="black"><i>a&amp;b&quot;c&gt;d</i></td></tr>""",
+      """<tr><td port="0">x&amp;y</td></tr>""",
+      """<tr><td port="1">q&quot;r&gt;s</td></tr>""",
+      "</table>>];",
+      """"w" [color="blue" label=<""",
+      "<table>",
+      """  <tr><td bgcolor="blue"><i>w</i></td></tr>""",
+      """<tr><td port="0">k</td></tr>""",
+      "</table>>];",
+      """"p_1" [color="lightgray" label=<""",
+      "<table>",
+      """  <tr><td bgcolor="lightgray"><i>Project</i></td></tr>""") ++
+      wide.indices.map(i => s"""<tr><td port="$i">c$i</td></tr>""") ++ Seq(
+      "</table>>];",
+      """"r_2" [color="lightgray" label=<""",
+      "<table>",
+      """  <tr><td bgcolor="lightgray"><i>Range</i></td></tr>""",
+      "",
+      "</table>>];",
+      """"s":1 -> "p_1":1025;""",
+      """"s":1024 -> "p_1";""",
+      """"r_2" -> "w":4097;""",
+      """"p_1":0 -> "w":0;""",
+      "}",
+      "")).mkString("\n")
+    assert(GraphVizSink().toGraphString(more, moreEdges) === moreExpected)
     // the same alias through a Dataset
     val dot = spark.range(1).select(col("id").as("a\n|b")).printAsSQLFlow()
     assert(dot.contains("<tr><td port=\"0\">a\n|b</td></tr>"), dot)

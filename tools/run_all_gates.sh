@@ -44,7 +44,17 @@ done
 python3 tools/check_determinism.py /tmp/gate_det5 /tmp/gate_det16 | tail -2
 
 echo "=== 4/5 Python façade ==="
-bash tools/run_python_tests.sh 2>&1 | tail -3
+# logged to a file, as gates 1-3 are: a failing test is named before the
+# script stops, instead of the pipe's exit status ending it silently
+rm -f /tmp/gate_python.log
+if bash tools/run_python_tests.sh > /tmp/gate_python.log 2>&1; then
+  tail -3 /tmp/gate_python.log
+else
+  echo "Python façade FAILED (full log: /tmp/gate_python.log):"
+  grep -E '^(FAIL|ERROR):' /tmp/gate_python.log || true
+  tail -20 /tmp/gate_python.log
+  exit 1
+fi
 
 echo "=== 5/5 lineage benchmark checks (206 catalog goldens, per-Dataset pins) ==="
 # one short lineage-tpcds run: its set-up and pass check every output, and
